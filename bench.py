@@ -494,9 +494,10 @@ def _cosine_pairs_reuse(spark, sf_dir: str) -> dict:
     build appears in NO artifact number (VERDICT r8 Next #3). Cold =
     q54 with a cleared cache (pays the hyperplane-LSH banding + Arrow
     verify); warm = q130 on the memoized pair table."""
+    from synthetic_data_pipeline_spark import state
     from synthetic_data_pipeline_spark.operators import similarity
 
-    similarity.clear_cosine_pairs_cache()
+    state.clear("cosine_pairs")
     t0 = time.perf_counter()
     similarity.q54_cosine_near_dups(spark, sf_dir).write.format(
         "noop"
@@ -520,9 +521,10 @@ def _funnel_reuse(spark, sf_dir: str) -> dict:
     state, so this extra records what a fresh session pays to build it
     once (cold = q95 with a cleared cache) and what each additional
     consumer pays afterwards (warm = q58 on the memoized state)."""
+    from synthetic_data_pipeline_spark import state
     from synthetic_data_pipeline_spark.operators import sketches
 
-    sketches.clear_lp_cache()
+    state.clear()
     t0 = time.perf_counter()
     sketches.q95_dedup_retention(spark, sf_dir).write.format("noop").mode(
         "overwrite"
@@ -546,9 +548,10 @@ def _incr_base_reuse(spark, sf_dir: str) -> dict:
     between ingest batches): the headline q163 time reads the memo,
     so this extra records the one-time base-CC build a fresh session
     pays (cold) vs the per-batch merge cost afterwards (warm)."""
+    from synthetic_data_pipeline_spark import state
     from synthetic_data_pipeline_spark.operators import sketches
 
-    sketches.clear_lp_cache()
+    state.clear()
     t0 = time.perf_counter()
     sketches.q163_incremental_clusters(spark, sf_dir).write.format(
         "noop"
@@ -573,9 +576,10 @@ def _simhash_reuse(spark, sf_dir: str) -> dict:
     explode + bit votes); warm = q152 again on the memoized frame. The
     q152 headline number below is therefore WARM-state; historical
     comparisons against pre-r12 rounds should use simhash_sig_cold_sec."""
+    from synthetic_data_pipeline_spark import state
     from synthetic_data_pipeline_spark.operators import dedup
 
-    dedup.clear_shingle_cache()
+    state.clear("token_state", "shingle_pairs", "simhash_state", "band_sig_state")
     t0 = time.perf_counter()
     dedup.q152_simhash_hamming_join(spark, sf_dir).write.format(
         "noop"
@@ -627,9 +631,10 @@ def _bm25_reuse(spark, sf_dir: str) -> dict:
     on the memoized frames. The q164/q172/q178 headline numbers are
     therefore WARM-state from r14 on; historical comparisons against
     pre-r14 rounds should use bm25_stats_cold_sec."""
+    from synthetic_data_pipeline_spark import state
     from synthetic_data_pipeline_spark.operators import textops
 
-    textops.clear_bm25_cache()
+    state.clear("bm25_state")
     t0 = time.perf_counter()
     textops.q164_bm25_retrieval(spark, sf_dir).write.format("noop").mode(
         "overwrite"

@@ -1,6 +1,6 @@
 """Dedicated follow-up scaling pass for queries born after the round's
 main scaling_probe run (the q134/q135 protocol: fresh SparkSession per
-tier, min-of-2 with clear_lp_cache + gc before every timed run, cached
+tier, min-of-2 with state.clear() + gc before every timed run, cached
 .scaling corpora). Merges rows into the existing SCALING_r{N}.json
 instead of overwriting it.
 

@@ -68,8 +68,8 @@ PROBE = [
     # round 9 (VERDICT r8 Next #4): the newborns never probed past 1x.
     # q129's BPE_MERGES+1 chained aggregates over the distinct-word
     # table are the compounding risk; q130 needs the isometry-scaled
-    # embeddings above (its cosine-pair funnel is cleared per run by
-    # the clear_lp_cache cascade, so it times a cold build)
+    # embeddings above (time_queries clears the session state before
+    # every run, so its cosine-pair funnel times a cold build)
     "q129_bpe_compression",       # stage-chained aggs over distinct words
     # round 9 newborn: the tokenizer ENCODE — corpus tokens equi-join
     # the Zipf-bounded word map (q136's vocab rides q129's probed
@@ -505,7 +505,7 @@ def build_scaled(
 def time_queries(
     spark: SparkSession, sf_dir: str, probe: list = PROBE, runs: int = 2
 ) -> dict[str, float]:
-    from synthetic_data_pipeline_spark.operators.sketches import clear_lp_cache
+    from synthetic_data_pipeline_spark import state
     from synthetic_data_pipeline_spark.queries import all_queries
 
     import gc
@@ -518,7 +518,7 @@ def time_queries(
             # cold funnel each run: the memoized LP state would turn
             # q101's second run into a consumer-only timing and hide
             # exactly the funnel scaling this probe exists to measure
-            clear_lp_cache()
+            state.clear()
             # drop lingering localCheckpoint blocks from earlier
             # queries before timing — they are freed when their Python
             # handles are GC'd, and letting them pile up makes later

@@ -27,8 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import state
 from ..functions.rounding import eround
-from ..sources.tables import load_table
+from ..sources.tables import fan_out_scan, load_table
 
 N_HASHES = 8
 BAND_ROWS = 2  # r rows per band → 4 bands; P[cand] = 1-(1-s^2)^4
@@ -129,82 +130,38 @@ def minhash_signatures_from_tokens(
     )
 
 
-# Shingle table + LSH candidate pairs per (Spark application, sf_dir):
-# q46 and the label-propagation funnel (sketches._lp_state →
-# q58/q95/q101/q103) need the SAME shingle → minhash → band
-# bucket-join pipeline; one session computes it once — the in-session
+# Shingle table + LSH candidate pairs per session and sf_dir: q46 and
+# the label-propagation funnel (sketches._lp_state → q58/q95/q101/q103)
+# need the SAME shingle → minhash → band bucket-join pipeline; one
+# session computes it once in the session state store — the in-session
 # form of "at 100 TB you'd persist the shingle table". Results are
-# identical with or without a cache hit (same deterministic lineage);
-# sketches.clear_lp_cache() clears this too, so probes timing the
-# cold path stay honest.
-# Two-level memo: the shingle TOKEN table has more consumers than the
-# LSH pair table (q104's posting-list join needs tokens but never the
+# identical with or without a memo hit (same deterministic lineage).
+# Two levels: the shingle TOKEN table has more consumers than the LSH
+# pair table (q104's posting-list join needs tokens but never the
 # minhash band join), so they materialize independently — a consumer
 # that only needs tokens doesn't pay the candidate build.
-_TOKEN_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SHINGLE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-# The 60-bit SimHash signature frame is built identically by q152 and
-# q170 (VERDICT r11 #5: both paid the build per call); one narrow row
-# per doc, so it memoizes on the same terms as the token table.
-_SIMHASH_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Full-corpus MinHash BAND signatures (doc_id, band, minhash) — the
-# frame write_cluster_state persists as a lake's signature table.
-# q163/q203 each rebuilt it per call from the memoized tokens (8 md5
-# minima per token row — the funnel's CPU hot spot re-run per query);
-# one session computes it once (r14), same deterministic lineage so
-# results are identical, cold probes stay honest via
-# clear_shingle_cache's cascade from clear_lp_cache.
-_BAND_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SHINGLE_CACHE_MAX = 3
-
-
-def clear_shingle_cache() -> None:
-    from .sketches import _safe_unpersist
-
-    for _tokens, pairs in _SHINGLE_CACHE.values():
-        _safe_unpersist(pairs)
-    _SHINGLE_CACHE.clear()
-    for tokens in _TOKEN_CACHE.values():
-        _safe_unpersist(tokens)
-    _TOKEN_CACHE.clear()
-    for sig in _SIMHASH_CACHE.values():
-        _safe_unpersist(sig)
-    _SIMHASH_CACHE.clear()
-    for sig in _BAND_SIG_CACHE.values():
-        _safe_unpersist(sig)
-    _BAND_SIG_CACHE.clear()
-
-
+# Beside them: the 60-bit SimHash signature frame built identically by
+# q152 and q170 (VERDICT r11 #5), and the full-corpus MinHash BAND
+# signatures (doc_id, band, minhash) — the frame write_cluster_state
+# persists as a lake's signature table, which q163/q203 each rebuilt
+# per call (8 md5 minima per token row, the funnel's CPU hot spot).
 def token_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized persisted shingle-token table (doc_id, token) — the
     shared upstream of both candidate generators (LSH banding and the
     q104 posting-list join) and of exact-Jaccard verification."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TOKEN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    # The shingle explode is the funnel's CPU hot spot (~10-100 md5-ed
-    # shingles per doc). A small corpus arrives as ONE parquet split,
-    # so without this the whole explode runs on one core (measured 11 s
-    # single-threaded at sf0.01 vs 1.5 s parallel at sf0.1). Fan the
-    # scan out to the cluster's parallelism first — but only when the
-    # scan is under-partitioned: at real scale the input already has
-    # more splits than cores and the repartition would be a pure-cost
-    # corpus shuffle, so it must stay conditional.
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
-    tokens = distinct_shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    tokens.count()
-    while len(_TOKEN_CACHE) >= _SHINGLE_CACHE_MAX:
-        from .sketches import _safe_unpersist as _su
+    def build():
+        # The shingle explode is the funnel's CPU hot spot (~10-100
+        # md5-ed shingles per doc); a small corpus arrives as ONE
+        # parquet split, so fan the scan out first (measured 11 s
+        # single-threaded at sf0.01 vs 1.5 s parallel at sf0.1).
+        docs = fan_out_scan(spark, load_table(spark, sf_dir, "documents"))
+        tokens = distinct_shingles(docs).persist(StorageLevel.MEMORY_AND_DISK)
+        tokens.count()
+        return tokens
 
-        _su(_TOKEN_CACHE.pop(next(iter(_TOKEN_CACHE))))
-    _TOKEN_CACHE[key] = tokens
-    return tokens
+    return state.get_or_build(spark, "token_state", sf_dir, build)
 
 
 def shingle_state(
@@ -216,76 +173,53 @@ def shingle_state(
     verification and the dup-cluster graph."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    tokens = token_state(spark, sf_dir)
-    pairs = lsh_candidates(minhash_signatures_from_tokens(tokens)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    pairs.count()
-    while len(_SHINGLE_CACHE) >= _SHINGLE_CACHE_MAX:
-        _old_tokens, old_pairs = _SHINGLE_CACHE.pop(
-            next(iter(_SHINGLE_CACHE))
+    def build():
+        tokens = token_state(spark, sf_dir)
+        pairs = lsh_candidates(minhash_signatures_from_tokens(tokens)).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        from .sketches import _safe_unpersist as _su
+        pairs.count()
+        return pairs
 
-        _su(old_pairs)
-    _SHINGLE_CACHE[key] = (tokens, pairs)
-    return tokens, pairs
+    pairs = state.get_or_build(spark, "shingle_pairs", sf_dir, build)
+    # the entry holds only the pairs: the tokens belong to token_state's
+    # entry, so evicting the pairs must not unpersist them
+    return token_state(spark, sf_dir), pairs
 
 
 def simhash_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized persisted 60-bit SimHash signature frame (doc_id, h) —
     ONE narrow row per doc, shared by q152 (Hamming-radius join) and
     q170 (detector agreement), which previously each built it per call
-    (VERDICT r11 #5). Cold/warm split published in bench extras
-    (``simhash_sig_*``); results are identical either way (same
-    lineage, same determinism)."""
+    (VERDICT r11 #5). Results are identical either way (same lineage,
+    same determinism)."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SIMHASH_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    # same under-partitioned-scan fan-out as token_state: the signature
-    # build is shingle-explode CPU, worthless on one core
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
-    sig = simhash60(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    sig.count()  # materialize before anyone forks the lineage
-    while len(_SIMHASH_CACHE) >= _SHINGLE_CACHE_MAX:
-        from .sketches import _safe_unpersist as _su
+    def build():
+        # same fan-out as token_state: the signature build is
+        # shingle-explode CPU, worthless on one core
+        docs = fan_out_scan(spark, load_table(spark, sf_dir, "documents"))
+        sig = simhash60(docs).persist(StorageLevel.MEMORY_AND_DISK)
+        sig.count()  # materialize before anyone forks the lineage
+        return sig
 
-        _su(_SIMHASH_CACHE.pop(next(iter(_SIMHASH_CACHE))))
-    _SIMHASH_CACHE[key] = sig
-    return sig
+    return state.get_or_build(spark, "simhash_state", sf_dir, build)
 
 
 def band_sig_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized persisted full-corpus MinHash band-signature frame
-    (doc_id, band, minhash) — see _BAND_SIG_CACHE's comment. Built
-    from the memoized token table, so a warm session pays neither the
-    shingle explode nor the per-token minima."""
+    (doc_id, band, minhash). Built from the memoized token table, so a
+    warm session pays neither the shingle explode nor the per-token
+    minima."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BAND_SIG_CACHE.get(key)
-    if hit is not None:
-        return hit
-    sig = minhash_signatures_from_tokens(token_state(spark, sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sig.count()  # materialize before anyone forks the lineage
-    while len(_BAND_SIG_CACHE) >= _SHINGLE_CACHE_MAX:
-        from .sketches import _safe_unpersist as _su
+    def build():
+        sig = minhash_signatures_from_tokens(token_state(spark, sf_dir))
+        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+        sig.count()  # materialize before anyone forks the lineage
+        return sig
 
-        _su(_BAND_SIG_CACHE.pop(next(iter(_BAND_SIG_CACHE))))
-    _BAND_SIG_CACHE[key] = sig
-    return sig
+    return state.get_or_build(spark, "band_sig_state", sf_dir, build)
 
 
 def lsh_candidates(sig: DataFrame) -> DataFrame:
@@ -1594,8 +1528,6 @@ def _span_grams(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     and an under-partitioned input serializes it (r14: the whole span
     tier ran its explode in ONE task at sf0.1 — q131 2.41 s -> 1.05 s
     with the fan-out; no-op when the input already has ≥cores splits)."""
-    from ..sources.tables import fan_out_scan
-
     docs = fan_out_scan(docs.sparkSession, docs)
     arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     base = docs.select("doc_id", "source", arr.alias("arr"))
@@ -2028,8 +1960,6 @@ def _span_grams_pos(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     1-based position (the positional twin of :func:`_span_grams`;
     grams hashed to the 64-bit _gram_key before any shuffle, same as the q131 tier).
     Fans out the scan first — see _span_grams."""
-    from ..sources.tables import fan_out_scan
-
     docs = fan_out_scan(docs.sparkSession, docs)
     arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     base = docs.select("doc_id", "source", arr.alias("arr")).filter(

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import state
 from ..plans.catalog import (
     RE2_SAFE_IDS,
     SIT_CATALOG,
@@ -359,26 +360,21 @@ def _ms_filtered(d: dict, arr: str) -> str:
     return f"{d['filter']}({arr}, x -> NOT {ph})"
 
 
-# Scanned-pairs table per (Spark application, GenConfig): q62, q91,
-# q98 and the report assembly all consume the SAME generate → render →
-# join → regex-scan pipeline; within one session it is computed once
-# (the already-present localCheckpoint materializes it) — the
-# in-session form of "at 100 TB you'd persist the validation scan as a
-# table" (same reuse pattern as dedup.shingle_state). Results are
-# identical with or without a memo hit: the lineage is deterministic,
-# consumers only append further transformations.
-_SCANNED_CACHE: dict[tuple[str, str], DataFrame] = {}
-_SCANNED_CACHE_MAX = 3
-
-
 def clear_scanned_pairs_cache() -> None:
-    """Drop memoized scanned-pairs / rendered-corpus frames (checkpoint
-    blocks are freed when the handles are GC'd) — keeps cold-path
-    probes honest."""
-    _SCANNED_CACHE.clear()
-    _RENDERED_CACHE.clear()
+    """Drop memoized scanned-pairs / rendered-corpus frames — keeps
+    cold-path probes honest."""
+    state.clear("scanned_pairs", "rendered_docs")
 
 
+# Scanned-pairs table per session and GenConfig: q62, q91, q98 and
+# the report assembly all consume the SAME generate → render → join →
+# regex-scan pipeline; within one session it is computed once in the
+# session state store (the already-present localCheckpoint
+# materializes it) — the in-session form of "at 100 TB you'd persist
+# the validation scan as a table" (same reuse pattern as
+# dedup.shingle_state). Results are identical with or without a memo
+# hit: the lineage is deterministic, consumers only append further
+# transformations.
 def _scanned_pairs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
     """(doc_id, sit_id, label, instances, text, ms) for every ASSIGNED
     (doc, scanned-SIT) pair — the validator's loop shape
@@ -400,12 +396,13 @@ def _scanned_pairs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
     full document text, and broadcasting it collects the whole corpus
     to the driver per call — wasteful here, fatal at 100 TB.
     """
-    from pyspark.sql import functions as F
+    return state.get_or_build(
+        spark, "scanned_pairs", repr(cfg), lambda: _build_scanned(spark, cfg)
+    )
 
-    key = (spark.sparkContext.applicationId, repr(cfg))
-    hit = _SCANNED_CACHE.get(key)
-    if hit is not None:
-        return hit
+
+def _build_scanned(spark: SparkSession, cfg: GenConfig):
+    from pyspark.sql import functions as F
 
     d = _DIALECTS["spark"]
     vals = _staged_vals(cfg, spark)
@@ -451,9 +448,6 @@ def _scanned_pairs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
             + ")",
         ) + " AS ms",
     )
-    while len(_SCANNED_CACHE) >= _SCANNED_CACHE_MAX:
-        _SCANNED_CACHE.pop(next(iter(_SCANNED_CACHE)))
-    _SCANNED_CACHE[key] = out
     return out
 
 
@@ -496,37 +490,29 @@ def q62_gen_validation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RENDERED_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-
-
 def _rendered_docs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
     """(doc_id, text) for the generated corpus — same staged-vals path
     as :func:`_scanned_pairs` (64KB-codegen-safe), no pair join.
-    Memoized per (application, config) like the scanned-pairs table:
-    the render CTE's plan is large, and re-analyzing it per consumer
-    (q99 twice per bench round) costs more than the tiny corpus
-    itself."""
-    key = (spark.sparkContext.applicationId, repr(cfg))
-    hit = _RENDERED_CACHE.get(key)
-    if hit is not None:
-        return hit
-    d = _DIALECTS["spark"]
-    vals = _staged_vals(cfg, spark)
-    vals.createOrReplaceTempView("gen_vals_staged")
-    out = spark.sql(
-        expand_u16(
-            f"""
-            WITH vals AS (SELECT * FROM gen_vals_staged),
-            {_rendered_cte(d)}
-            SELECT doc_id, text FROM rendered
-            """,
-            "spark",
-        )
-    ).localCheckpoint(eager=False)
-    while len(_RENDERED_CACHE) >= _SCANNED_CACHE_MAX:
-        _RENDERED_CACHE.pop(next(iter(_RENDERED_CACHE)))
-    _RENDERED_CACHE[key] = out
-    return out
+    Memoized per session and config like the scanned-pairs table: the
+    render CTE's plan is large, and re-analyzing it per consumer (q99
+    twice per bench round) costs more than the tiny corpus itself."""
+
+    def build():
+        d = _DIALECTS["spark"]
+        vals = _staged_vals(cfg, spark)
+        vals.createOrReplaceTempView("gen_vals_staged")
+        return spark.sql(
+            expand_u16(
+                f"""
+                WITH vals AS (SELECT * FROM gen_vals_staged),
+                {_rendered_cte(d)}
+                SELECT doc_id, text FROM rendered
+                """,
+                "spark",
+            )
+        ).localCheckpoint(eager=False)
+
+    return state.get_or_build(spark, "rendered_docs", repr(cfg), build)
 
 
 # q99 runs the alternation form, which costs ~20ms/doc on Java regex

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import state
 from ..functions.rounding import eround
 from ..sources.tables import load_table
 
@@ -650,37 +651,23 @@ def cosine_near_dup_pairs(
     )
 
 
-# Verified cosine near-dup pairs per (application, sf_dir): q54
-# reports them and q130 acts on them — one session builds the bucket
-# funnel once (the in-session form of "at 100 TB you'd persist the
-# pair table"; same memo pattern as dedup.shingle_state). Cleared by
-# clear_cosine_pairs_cache (cascaded from sketches.clear_lp_cache so
-# cold probes stay honest).
-_COS_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_cosine_pairs_cache() -> None:
-    from .sketches import _safe_unpersist
-
-    for pairs in _COS_PAIRS_CACHE.values():
-        _safe_unpersist(pairs)
-    _COS_PAIRS_CACHE.clear()
-
-
+# Verified cosine near-dup pairs per session and sf_dir: q54 reports
+# them and q130 acts on them — one session builds the bucket funnel
+# once in the session state store (the in-session form of "at 100 TB
+# you'd persist the pair table"; same memo pattern as
+# dedup.shingle_state).
 def cosine_pairs_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _COS_PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double("embedding").alias("v")
-    )
-    pairs = cosine_near_dup_pairs(emb).persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
-    _COS_PAIRS_CACHE[key] = pairs
-    return pairs
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", _as_double("embedding").alias("v")
+        )
+        pairs = cosine_near_dup_pairs(emb).persist(StorageLevel.MEMORY_AND_DISK)
+        pairs.count()
+        return pairs
+
+    return state.get_or_build(spark, "cosine_pairs", sf_dir, build)
 
 
 def q54_cosine_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import state
 from ..functions.rounding import eround
 from ..sources.tables import load_table
 
@@ -1344,45 +1345,23 @@ def _bpe_stages(
 # artifacts; q128/q129/q136/q137/q141 each re-ran the merge rounds per
 # call before r14 (the token_state precedent applied to the tokenizer
 # tier). Distinct-word-scale frames (Zipf-bounded), so persisting them
-# is cheap by construction; cleared via clear_lp_cache's cascade.
-_BPE_CACHE: dict = {}
-_BPE_CACHE_MAX = 3
-
-
-def clear_bpe_cache() -> None:
-    from .sketches import _safe_unpersist
-
-    for stages, rules in _BPE_CACHE.values():
-        for df in stages + rules:
-            _safe_unpersist(df)
-    _BPE_CACHE.clear()
-
-
+# is cheap by construction.
 def _bpe_state(
     spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
 ):
-    """Memoized persisted (stages, rules) of the corpus tokenizer —
-    see _BPE_CACHE's comment."""
+    """Memoized persisted (stages, rules) of the corpus tokenizer."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_merges)
-    hit = _BPE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    stages, rules = _bpe_stages(
-        load_table(spark, sf_dir, "documents"), n_merges
-    )
-    stages = [s.persist(StorageLevel.MEMORY_AND_DISK) for s in stages]
-    rules = [r.persist(StorageLevel.MEMORY_AND_DISK) for r in rules]
-    stages[-1].count()  # materialize the whole merge chain once
-    while len(_BPE_CACHE) >= _BPE_CACHE_MAX:
-        from .sketches import _safe_unpersist as _su
+    def build():
+        stages, rules = _bpe_stages(
+            load_table(spark, sf_dir, "documents"), n_merges
+        )
+        stages = [s.persist(StorageLevel.MEMORY_AND_DISK) for s in stages]
+        rules = [r.persist(StorageLevel.MEMORY_AND_DISK) for r in rules]
+        stages[-1].count()  # materialize the whole merge chain once
+        return stages, rules
 
-        old_stages, old_rules = _BPE_CACHE.pop(next(iter(_BPE_CACHE)))
-        for df in old_stages + old_rules:
-            _su(df)
-    _BPE_CACHE[key] = (stages, rules)
-    return stages, rules
+    return state.get_or_build(spark, "bpe_state", (sf_dir, n_merges), build)
 
 
 def bpe_merge_rules(
@@ -2459,45 +2438,20 @@ def bm25_stats(docs: DataFrame):
 # lists per call, re-running the bigram explode + three aggregates a
 # serving system reads from its index (r14; the token_state/
 # simhash_state precedent applied to retrieval). Results are identical
-# with or without a hit (same deterministic lineage); cold probes stay
-# honest via clear_lp_cache's cascade.
-_BM25_CACHE: dict = {}
-_BM25_CACHE_MAX = 3
-
-
-def clear_bm25_cache() -> None:
-    from .sketches import _safe_unpersist
-
-    for frames in _BM25_CACHE.values():
-        for df in frames:
-            _safe_unpersist(df)
-    _BM25_CACHE.clear()
-
-
+# with or without a hit (same deterministic lineage).
 def bm25_state(spark: SparkSession, sf_dir: str):
-    """Memoized persisted (tf, dlen, stats, dfreq) over the corpus —
-    see _BM25_CACHE's comment."""
+    """Memoized persisted (tf, dlen, stats, dfreq) over the corpus."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BM25_CACHE.get(key)
-    if hit is not None:
-        return hit
-    tf, dlen, stats, dfreq = bm25_stats(
-        load_table(spark, sf_dir, "documents")
-    )
-    frames = tuple(
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-        for df in (tf, dlen, stats, dfreq)
-    )
-    frames[0].count()  # materialize the shared explode once
-    while len(_BM25_CACHE) >= _BM25_CACHE_MAX:
-        from .sketches import _safe_unpersist as _su
+    def build():
+        frames = tuple(
+            df.persist(StorageLevel.MEMORY_AND_DISK)
+            for df in bm25_stats(load_table(spark, sf_dir, "documents"))
+        )
+        frames[0].count()  # materialize the shared explode once
+        return frames
 
-        for df in _BM25_CACHE.pop(next(iter(_BM25_CACHE))):
-            _su(df)
-    _BM25_CACHE[key] = frames
-    return frames
+    return state.get_or_build(spark, "bm25_state", sf_dir, build)
 
 
 def bm25_query_terms(qtf: DataFrame, dfreq: DataFrame, stats: DataFrame):

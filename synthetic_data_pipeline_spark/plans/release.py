@@ -230,15 +230,10 @@ def build_release(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     # state) — overlap them from a small thread pool so the next
     # build's tasks back-fill executors freed by the current one's
     # tail (guide §2.6; A/B'd r14: 8.6 s -> 6.2 s for the block,
-    # cold-funnel each arm). Shared session memos are pre-warmed
-    # FIRST so concurrent builders can't race the one-time builds.
+    # cold-funnel each arm). Shared session state is built once under
+    # the state store's per-key lock, whichever builder asks first.
     from concurrent.futures import ThreadPoolExecutor
 
-    from ..operators.dedup import token_state
-    from ..operators.sketches import _lp_labels
-
-    token_state(spark, sf_dir)
-    _lp_labels(spark, sf_dir)
     retention_path = f"{out_dir}/retention"
     bench_gram_path = f"{out_dir}/bench_grams"
     label_path = f"{out_dir}/labels"

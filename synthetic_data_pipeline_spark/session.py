@@ -32,6 +32,15 @@ _DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def _machine_driver_mem() -> str:
+    """A quarter of physical memory, 1-8 GB: local[N] runs the executors
+    inside the driver JVM, and the rest of the box stays for the Python
+    workers and the OS."""
+    with open("/proc/meminfo") as fh:
+        mem_kb = int(next(l for l in fh if l.startswith("MemTotal")).split()[1])
+    return f"{max(1, min(8, mem_kb // (1024 * 1024) // 4))}g"
+
+
 def get_spark(
     app_name: str = "synthetic-data-pipeline-spark",
     master: str | None = None,
@@ -40,18 +49,23 @@ def get_spark(
 ) -> SparkSession:
     """Build (or get) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``; unset, it uses
+    every core this process may run on. The driver heap is
+    ``$SPARK_GRAFT_DRIVER_MEM``; unset, a quarter of physical memory
+    capped at 8 GB.
     ``shuffle_partitions`` defaults to the core count — on a real cluster
     you would size this to ~2-3x total cores and let AQE coalesce.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULT_CONF)
     # local[N] runs executors inside the driver JVM — size its heap for
     # N concurrent tasks (default 1g dies at sf0.1). Ignored if a JVM is
     # already up (e.g. the driver's own session), which has its own heap.
-    conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    conf["spark.driver.memory"] = (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _machine_driver_mem()
+    )
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
     if extra_conf:
         conf.update(extra_conf)

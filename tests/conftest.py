@@ -12,7 +12,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from synthetic_data_pipeline_spark.session import get_spark
 
-    s = get_spark(app_name="sdp-tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark(app_name="sdp-tests")
     yield s
     s.stop()
 

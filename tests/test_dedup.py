@@ -79,27 +79,30 @@ def test_lp_converges_within_unroll(spark, sf_dir):
 def test_lp_funnel_memoized_and_stable(spark, sf_dir):
     """The shared funnel must (a) memoize per (session, sf_dir) so
     q58/q95/q101/q103 pay for one build, and (b) return bit-identical
-    labels on a cache hit vs a cold rebuild."""
+    labels on a memo hit vs a cold rebuild."""
+    from synthetic_data_pipeline_spark import state
     from synthetic_data_pipeline_spark.operators import sketches
 
-    sketches.clear_lp_cache()
-    assert not sketches._LP_CACHE
+    state.clear()
+    assert "lp_state" not in state.stats()
     cold = sorted(map(tuple, sketches._lp_labels(spark, sf_dir).collect()))
-    assert len(sketches._LP_CACHE) == 1
+    assert state.stats()["lp_state"] == {"entries": 1, "builds": 1, "hits": 0}
     hit = sketches._lp_labels(spark, sf_dir)
     assert hit is sketches._lp_state(spark, sf_dir)[1], "second call must hit"
+    assert state.stats()["lp_state"] == {"entries": 1, "builds": 1, "hits": 2}
     assert sorted(map(tuple, hit.collect())) == cold
-    sketches.clear_lp_cache()
+    state.clear()
     rebuilt = sorted(map(tuple, sketches._lp_labels(spark, sf_dir).collect()))
     assert rebuilt == cold
+    assert state.stats()["lp_state"]["builds"] == 1
 
 
 def test_persisted_retention_reuse(spark, sf_dir, tmp_path):
     """Cross-job funnel reuse: materialize the retention list once as
     parquet, then run the dedup action from the persisted table in a
-    'fresh session' (cleared memo) — identical summary, and the
-    consumer provably never rebuilds the funnel (the memo stays
-    empty)."""
+    'fresh session' (cleared state) — identical summary, and the
+    consumer provably never rebuilds the funnel (no lp_state build)."""
+    from synthetic_data_pipeline_spark import state
     from synthetic_data_pipeline_spark.operators import sketches
 
     path = str(tmp_path / "retention")
@@ -107,7 +110,7 @@ def test_persisted_retention_reuse(spark, sf_dir, tmp_path):
     want = sorted(
         map(tuple, sketches.q101_deduped_corpus(spark, sf_dir).collect())
     )
-    sketches.clear_lp_cache()
+    state.clear()
     got = sorted(
         map(
             tuple,
@@ -115,7 +118,7 @@ def test_persisted_retention_reuse(spark, sf_dir, tmp_path):
         )
     )
     assert got == want
-    assert not sketches._LP_CACHE, "consumer rebuilt the funnel"
+    assert "lp_state" not in state.stats(), "consumer rebuilt the funnel"
 
 
 def test_incremental_dedup_matches_full_scan(spark, sf_dir):
@@ -925,10 +928,8 @@ def test_minhash_calibration_planted(spark, tmp_path):
     corpus of 3 identical docs plus unrelated fillers must produce
     exactly one calibration row — n_match=8, est=1.0, 3 pairs,
     avg exact Jaccard 1.0, MAE 0 (the estimator is exact there)."""
-    from synthetic_data_pipeline_spark.operators.dedup import (
-        clear_shingle_cache,
-        q165_minhash_calibration,
-    )
+    from synthetic_data_pipeline_spark import state
+    from synthetic_data_pipeline_spark.operators.dedup import q165_minhash_calibration
 
     A = " ".join(f"a{i}" for i in range(30))
     rows = [(i, A, "en", "s", 0) for i in range(3)]
@@ -938,11 +939,11 @@ def test_minhash_calibration_planted(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{sf_dir}/documents.parquet")
-    clear_shingle_cache()
+    state.clear()
     try:
         got = q165_minhash_calibration(spark, sf_dir).collect()
     finally:
-        clear_shingle_cache()
+        state.clear()
     assert len(got) == 1
     r = got[0]
     assert (r.n_match, r.n_pairs) == (8, 3)
@@ -954,10 +955,8 @@ def test_detector_agreement_planted(spark, tmp_path):
     MinHash band AND sits at Hamming 0, so it must land in 'both'
     (jaccard 1.0, hamming 0); unrelated all-unique fillers must
     produce no pair in any category."""
-    from synthetic_data_pipeline_spark.operators.dedup import (
-        clear_shingle_cache,
-        q170_detector_agreement,
-    )
+    from synthetic_data_pipeline_spark import state
+    from synthetic_data_pipeline_spark.operators.dedup import q170_detector_agreement
 
     A = " ".join(f"a{i}" for i in range(30))
     rows = [(0, A, "en", "s", 0), (1, A, "en", "s", 0)]
@@ -967,12 +966,12 @@ def test_detector_agreement_planted(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{sf_dir}/documents.parquet")
-    clear_shingle_cache()
+    state.clear()
     try:
         got = {r.category: r for r in
                q170_detector_agreement(spark, sf_dir).collect()}
     finally:
-        clear_shingle_cache()
+        state.clear()
     assert set(got) == {"both"}
     r = got["both"]
     assert r.n_pairs == 1 and r.avg_jaccard == 1.0 and r.avg_hamming == 0.0
@@ -982,10 +981,8 @@ def test_dedup_roi_planted(spark, tmp_path):
     """q176: three identical docs (100 chars each) in one source →
     the keeper rule drops two (200 chars, 2/3 of docs); an all-unique
     source reports zero drops."""
-    from synthetic_data_pipeline_spark.operators.sketches import (
-        clear_lp_cache,
-        q176_dedup_roi,
-    )
+    from synthetic_data_pipeline_spark import state
+    from synthetic_data_pipeline_spark.operators.sketches import q176_dedup_roi
 
     A = " ".join(f"a{i}" for i in range(30))
     rows = [(i, A, "en", "dup", 100) for i in range(3)]
@@ -995,11 +992,11 @@ def test_dedup_roi_planted(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{sf_dir}/documents.parquet")
-    clear_lp_cache()
+    state.clear()
     try:
         got = {r.source: r for r in q176_dedup_roi(spark, sf_dir).collect()}
     finally:
-        clear_lp_cache()
+        state.clear()
     dup = got["dup"]
     assert (dup.n_docs, dup.n_dropped, dup.chars_dropped) == (3, 2, 200)
     assert abs(dup.doc_drop_share - 2 / 3) < 1e-4

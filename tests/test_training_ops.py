@@ -1073,10 +1073,8 @@ def test_dedup_threshold_sweep_planted(spark, tmp_path):
     """q175 semantics: an exact-dup pair (jaccard 1.0) survives every
     threshold; a moderate-overlap pair must appear only below its
     jaccard; dropped docs follow the smaller-id keeper rule."""
-    from synthetic_data_pipeline_spark.operators.dedup import (
-        clear_shingle_cache,
-        q175_dedup_threshold_sweep,
-    )
+    from synthetic_data_pipeline_spark import state
+    from synthetic_data_pipeline_spark.operators.dedup import q175_dedup_threshold_sweep
 
     words = [f"w{i}" for i in range(40)]
     A = " ".join(words)
@@ -1091,12 +1089,12 @@ def test_dedup_threshold_sweep_planted(spark, tmp_path):
     spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.parquet(f"{sf_dir}/documents.parquet")
-    clear_shingle_cache()
+    state.clear()
     try:
         got = {r.threshold: r for r in
                q175_dedup_threshold_sweep(spark, sf_dir).collect()}
     finally:
-        clear_shingle_cache()
+        state.clear()
     assert got[0.9].n_pairs >= 1          # the exact dup survives 0.9
     assert got[0.5].n_pairs > got[0.9].n_pairs  # B's pairs drop out
     # drops monotone nonincreasing as threshold rises
