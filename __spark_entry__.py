@@ -9,9 +9,9 @@ Driver-window rotation lives HERE, not in the product registry
 (``synthetic_data_pipeline_spark/queries.py`` stays in natural module
 order): the external harness records correctness rows for only the
 FIRST 50 ``queries()`` entries per round, so ``DRIVER_WINDOW`` lists
-the 50 names that most need a fresh driver row this round. Every query
-is additionally verified every round by ``scripts/driver_sim.py``,
-which emits a full-registry ``CORRECTNESS_LOCAL_r{N}.json`` artifact;
+the 50 names that most need a fresh driver row this round. The full
+registry is gated against its DuckDB oracles by ``scripts/driver_sim.py``
+(exit code 1 on any mismatch) and by ``tests/test_oracle_parity.py``;
 ``tests/test_registry_window.py`` pins the window's invariants.
 """
 
@@ -29,8 +29,8 @@ from synthetic_data_pipeline_spark.queries import all_oracles, all_queries  # no
 
 # Round-14 window (VERDICT r13 Next #2). Composition — after this
 # round NO registry query's last external driver row is older than
-# r11 (staleness inventory recomputed from the git-tracked
-# CORRECTNESS_r* artifacts: exactly 47 rows' newest row was r10; all
+# r11 (staleness inventory recomputed from the CORRECTNESS_r*
+# artifacts, now in git history: exactly 47 rows' newest row was r10; all
 # 47 are in this window):
 #   * the round-14 newborn q205 (the component-local edit-path
 #     relabel behind plans/release.py::update_release — VERDICT r13
@@ -80,7 +80,7 @@ DRIVER_WINDOW = [
     # exact-arm re-key; q188's widened snapshot fingerprint
     "q204_weighted_length_quantiles", "q188_snapshot_diff",
     # 41 of the 47-row r10-stale tier (last external row = r10,
-    # recomputed from the tracked CORRECTNESS_r* artifacts; q18/q26/
+    # recomputed from the CORRECTNESS_r* artifacts; q18/q26/
     # q31/q158/q06/q44 ceded their slots to the wave-2/3 newborns —
     # each leaves an in-window cousin, see the amendment above)
     "q118_incremental_dedup",

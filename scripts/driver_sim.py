@@ -1,20 +1,16 @@
 """Local simulation of the driver's verify: smoke entry(), then run
 every queries()[name] against oracle_sql()[name] via DuckDB at the
 given sf dir (default sf0.01), comparing row count, column names and
-order-insensitive canonical values — the same contract the driver's
-CORRECTNESS_r{N}.json records.
+order-insensitive canonical values. Prints one PASS/FAIL/WEAK line
+per query and a TOTAL line; exits 1 on any oracle mismatch.
 
 Usage: python scripts/driver_sim.py [sf_dir]
 """
 
 from __future__ import annotations
 
-import glob
-import hashlib
-import json
 import math
 import os
-import re
 import sys
 import time
 
@@ -50,20 +46,8 @@ def canon(df):
     return rows
 
 
-def _round_no(repo: str) -> int:
-    """Current round = max N over committed CORRECTNESS_r{N}.json + 1."""
-    ns = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
-    ]
-    return (max(ns) + 1) if ns else 1
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    records: dict[str, dict] = {}
     spark = get_spark(app_name="driver-sim")
 
     t0 = time.time()
@@ -78,16 +62,6 @@ def main() -> None:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     qs, oracles = e.queries(), e.oracle_sql()
-    # the media golden oracles are pinned at the default corpus size;
-    # a _MEDIA_N-sentinel dir (scaling probe tiers) would hash-mismatch
-    # by construction — fail loudly up front instead (ADVICE r10)
-    from synthetic_data_pipeline_spark.sources.multimodal import (  # noqa: E402
-        MEDIA_GOLDEN_QUERIES,
-        assert_media_oracle_scale,
-    )
-
-    if MEDIA_GOLDEN_QUERIES & set(oracles):
-        assert_media_oracle_scale(sf_dir)
     n_pass = n_fail = n_weak = 0
     for name in sorted(qs):
         t0 = time.time()
@@ -96,10 +70,6 @@ def main() -> None:
             print(f"  WEAK  {name}: rows={len(sdf)} (no oracle) "
                   f"[{time.time() - t0:.1f}s]")
             n_weak += 1
-            records[name] = {
-                "status": "weak", "rows": len(sdf),
-                "sec": round(time.time() - t0, 2),
-            }
             continue
         odf = con.execute(oracles[name]).df()
         ok_cols = sorted(sdf.columns) == sorted(odf.columns)
@@ -115,27 +85,7 @@ def main() -> None:
         if not ok:
             diff = [(a, b) for a, b in zip(s_rows, o_rows) if a != b][:3]
             print(f"        first diffs: {diff}")
-        records[name] = {
-            "status": "pass" if ok else "FAIL",
-            "rows": len(s_rows), "oracle_rows": len(o_rows),
-            "cols_ok": ok_cols,
-            "value_hash": hashlib.md5(repr(s_rows).encode()).hexdigest()[:12],
-            "sec": round(time.time() - t0, 2),
-        }
     print(f"TOTAL: {n_pass} pass, {n_fail} fail, {n_weak} weak (rows-only)")
-
-    out_path = os.path.join(repo, f"CORRECTNESS_LOCAL_r{_round_no(repo)}.json")
-    with open(out_path, "w") as f:
-        json.dump(
-            {
-                "sf_dir": sf_dir,
-                "total": {"pass": n_pass, "fail": n_fail, "weak": n_weak,
-                          "queries": len(qs)},
-                "queries": records,
-            },
-            f, indent=1,
-        )
-    print(f"wrote {out_path}")
     spark.stop()
     sys.exit(1 if n_fail else 0)
 

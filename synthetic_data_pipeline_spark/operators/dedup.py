@@ -780,14 +780,26 @@ def simhash60(docs: DataFrame) -> DataFrame:
     return simhash_sig(docs, SIMHAM_BITS)
 
 
-def simhash_band_candidates(
+def simhash_hamming_pairs(
     sig: DataFrame, bits: int = SIMHAM_BITS, bands: int = SIMHAM_BANDS
 ) -> DataFrame:
-    """(doc_a < doc_b) distinct candidate pairs sharing at least one
-    exact band — the pre-verify stage of simhash_hamming_pairs,
-    exposed so the scaling probe can measure CANDIDATE VOLUME (the
-    quantity the collision math predicts) separately from verified
-    pairs."""
+    """(doc_a, doc_b, hamming) — every pair within Hamming radius
+    ``bands - 1`` of a (doc_id, h) signature frame, via Manku-style
+    banding: pigeonhole guarantees r differing bits cannot touch all
+    r+1 bands, so every true pair shares at least one exact band.
+
+    COLLISION MATH (the sizing rule for the two knobs — VERDICT r9
+    Next #4): a chance (non-near-dup) pair collides in one band with
+    probability ~2^-band_bits, so expected chance candidates ≈
+    bands · C(n,2) / 2^(bits/bands). At the defaults (60 bits, 4
+    bands → 15-bit bands) that is ~n²/2¹⁴: negligible at 5k docs
+    (~1.5k candidates), ~6×10ⁱ¹ at n = 10⁹ — at multi-billion-doc
+    scale either widen the bands (fewer bands → smaller radius) or
+    widen the signature (Manku runs f = 64 with rotated tables).
+    Candidate volume is measured, not just derived: the round-10
+    scaling probe (in git history) A/B'd band_bits 15 vs 10 at the
+    10×/100× tiers, pinning the 2^-band_bits cost curve before a real
+    corpus needs the knob."""
     if bits % bands:
         raise ValueError(f"bands ({bands}) must divide bits ({bits})")
     band_bits = bits // bands
@@ -807,7 +819,8 @@ def simhash_band_candidates(
     )
     a = bands_df.alias("a")
     b = bands_df.alias("b")
-    return (
+    # (doc_a < doc_b) distinct candidate pairs sharing at least one band
+    pairs = (
         a.join(b, ["band", "bval"])
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
@@ -816,29 +829,6 @@ def simhash_band_candidates(
         )
         .distinct()
     )
-
-
-def simhash_hamming_pairs(
-    sig: DataFrame, bits: int = SIMHAM_BITS, bands: int = SIMHAM_BANDS
-) -> DataFrame:
-    """(doc_a, doc_b, hamming) — every pair within Hamming radius
-    ``bands - 1`` of a (doc_id, h) signature frame, via Manku-style
-    banding: pigeonhole guarantees r differing bits cannot touch all
-    r+1 bands, so every true pair shares at least one exact band.
-
-    COLLISION MATH (the sizing rule for the two knobs — VERDICT r9
-    Next #4): a chance (non-near-dup) pair collides in one band with
-    probability ~2^-band_bits, so expected chance candidates ≈
-    bands · C(n,2) / 2^(bits/bands). At the defaults (60 bits, 4
-    bands → 15-bit bands) that is ~n²/2¹⁴: negligible at 5k docs
-    (~1.5k candidates), ~6×10ⁱ¹ at n = 10⁹ — at multi-billion-doc
-    scale either widen the bands (fewer bands → smaller radius) or
-    widen the signature (Manku runs f = 64 with rotated tables).
-    Candidate volume is measured, not just derived:
-    scripts/scaling_probe.py A/Bs band_bits 15 vs 10 at the 10×/100×
-    tiers (SCALING_r10 ``simham_band_ab``), pinning the 2^-band_bits
-    cost curve before a real corpus needs the knob."""
-    pairs = simhash_band_candidates(sig, bits, bands)
     sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("h").alias("ha"))
     sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("h").alias("hb"))
     return (

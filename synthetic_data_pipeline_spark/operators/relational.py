@@ -444,8 +444,8 @@ def q24_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # interpolation slack). The approx VALUES are engine-specific (like
 # q25's HLL state) so the hashable contract is (exact percentile,
 # within_bound) — a Spark GK regression flips the boolean and fails
-# the driver hash match. Wall-clock A/B of the two arms lives in
-# scripts/scaling_probe.py (``pctl_ab`` rows at 1×/10×/100×).
+# the driver hash match. The two arms' wall clock was A/B'd at
+# 1×/10×/100× by the scaling probe (``pctl_ab`` rows, in git history).
 #
 # Scale shape (r13, VERDICT r12 #5): the exact arm no longer pays a
 # full-sort-class ``percentile()`` aggregate — it rides the q200

@@ -128,7 +128,8 @@ def matryoshka_audit(emb: DataFrame) -> DataFrame:
         .localCheckpoint(eager=False)  # probe-bounded LINEAR
         # (N_QUERIES·n rows, 4 doubles) — the checkpoint class the
         # policy says must be measured, not assumed: kept on the
-        # strength of SCALING_r10 q161's 100x per-row ratio 0.046;
+        # strength of q161's 100x per-row ratio 0.046 (round-10
+        # scaling probe, in git history);
         # feeds 1 + 2·len(MRL_DIMS) consumers below
     )
     wfull = Window.partitionBy("query_id").orderBy(
@@ -674,98 +675,6 @@ def q54_cosine_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_pairs_state(spark, sf_dir)
 
 
-def ivf_list_assignments(emb: DataFrame, n_probe: int = 2) -> DataFrame:
-    """(band=0, sig=list id, vec_id, v, nrm) — every vector assigned to
-    its ``n_probe`` nearest per-label-centroid lists (q55's coarse
-    quantizer). Linear in the corpus (n·|labels| centroid folds, a
-    per-vec window over |labels| rows); exposed separately so the
-    scaling probe can measure list OCCUPANCY — and hence the quadratic
-    within-list candidate volume — without running the verify."""
-    nrm = F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
-    emb_n = emb.select("vec_id", "label", "v", nrm.alias("nrm"))
-    dims = emb_n.select("label", F.posexplode("v").alias("dim", "x"))
-    cent = (
-        dims.groupBy("label", "dim")
-        .agg(F.avg("x").alias("c"))
-        .groupBy("label")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("dim", "c"))
-            ).alias("cs")
-        )
-        .select(
-            F.col("label").alias("clabel"),
-            F.transform("cs", lambda s: s["c"]).alias("cv"),
-        )
-    )
-    cdot = F.aggregate(
-        F.zip_with("v", "cv", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cnrm = F.sqrt(
-        F.aggregate("cv", F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    assign = (
-        emb_n.crossJoin(F.broadcast(cent))
-        .select(
-            "vec_id", "v", "nrm", "clabel",
-            (cdot / (F.col("nrm") * cnrm)).alias("ccos"),
-        )
-    )
-    wl = Window.partitionBy("vec_id").orderBy(
-        F.desc("ccos"), F.asc("clabel")
-    )
-    return (
-        assign.withColumn("pr", F.row_number().over(wl))
-        .filter(F.col("pr") <= n_probe)
-        .select(
-            F.lit(0).alias("band"),
-            F.col("clabel").cast("long").alias("sig"),
-            "vec_id", "v", "nrm",
-        )
-    )
-
-
-def cosine_near_dup_pairs_ivf(
-    emb: DataFrame,
-    threshold: float = COSINE_DUP_THRESHOLD,
-    n_probe: int = 2,
-) -> DataFrame:
-    """The q130 IVF-candidate A/B arm (VERDICT r9 Next #6): SemDeDup
-    candidate generation via q55's coarse quantizer — per-label
-    centroid lists — instead of hyperplane-LSH bands. Every vector is
-    ASSIGNED to its ``n_probe`` nearest centroid lists (multi-probe, so
-    near-dups straddling a list boundary still meet); candidates are
-    within-list pairs, verified by the same Arrow kernel + eround
-    threshold as the banded path.
-
-    SCALE SHAPE — and why this arm is an A/B, not the default: with a
-    FIXED list count k (the label vocabulary, 10 here), per-list
-    occupancy grows linearly with the corpus and the within-list
-    verify grows ~n²·n_probe²/k — quadratic. The banded-LSH path has
-    the same occupancy math per (band, sig) bucket but its bucket
-    count is 2^(planes/bands) per band and the PLANE COUNT is the
-    cheap exponent knob; a real IVF deployment scales k ~ sqrt(n)
-    (retraining the quantizer), which this engine's fixed-k labels
-    cannot express. Measured numbers live in SCALING_r10's
-    ``q130_ivf_ab`` extra. ``emb``: (vec_id, label, v array<double>)."""
-    lists = ivf_list_assignments(emb, n_probe)
-    raw = lists.groupBy("band", "sig").applyInPandas(
-        _bucket_cosine_pairs_fn(threshold),
-        "vec_a long, vec_b long, cos_raw double",
-    )
-    return (
-        raw.groupBy("vec_a", "vec_b")
-        .agg(F.max("cos_raw").alias("cos_raw"))
-        .select(
-            "vec_a", "vec_b", eround(F.col("cos_raw"), 4).alias("cosine")
-        )
-        .filter(F.col("cosine") >= threshold)
-        .orderBy("vec_a", "vec_b")
-    )
-
-
 # --- q55: IVF-style ANN — the scale path. Coarse quantizer = per-label
 # centroids; each query probes only the N_PROBE nearest centroid lists,
 # then ranks exact cosine within those lists. At 100TB the corpus is
@@ -1005,8 +914,8 @@ def q168_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # discriminating behavior this audit exists for.
 #
 # A/B (this round, min-of-2 per arm): the first cut computed every
-# within-bucket pairwise cosine through the expression fold —
-# SCALING_r11 measured per-row ratio 0.836 at 10x (23.4 s), the
+# within-bucket pairwise cosine through the expression fold — the
+# round-11 scaling probe measured per-row ratio 0.836 at 10x (23.4 s), the
 # heaviest newborn. The adopted arrow tier reshapes q54's per-bucket
 # BLAS kernel from threshold-filter to per-row top-k (output ~k rows
 # per vector instead of k² per bucket): 1x 3.77→2.87 s (1.31x), 10x

@@ -1225,8 +1225,8 @@ def q163_incremental_clusters(
     from the _incr_base_labels session memo since round 11 session 2;
     recomputing the base CC per call was the demo simplification and
     the slowest headline query, 3.8–4.9 s → ~3.0 s warm / 6.0 s cold,
-    split recorded in bench extras incr_base_*), the new slice merges
-    in by contraction — and the result is hash-compared against the
+    as the old benchmark recorded it, in git history), the new slice
+    merges in by contraction — and the result is hash-compared against the
     full-recompute oracle, pinning exactness bridge cases included."""
     from .dedup import INGEST_MOD, band_sig_state
 

@@ -2528,7 +2528,7 @@ def q164_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 BM25 results per query doc: (query_id, rk, doc_id,
     score) for the deterministic doc_id % BM25_QUERY_MOD query slice.
     Index tables come from the session memo since r14 (bm25_state) —
-    the cold build is q171's row and the bm25_stats_* bench extras."""
+    the cold build is q171's row."""
     tf, dlen, stats, dfreq = bm25_state(spark, sf_dir)
     qtf = (
         tf.filter(F.col("doc_id") % BM25_QUERY_MOD == 0)

@@ -533,49 +533,6 @@ def sample_frames(media: DataFrame, every_k: int = 2) -> DataFrame:
 
 _Q100_N = 60
 _SCALE = 6
-_MEDIA_N_SENTINEL = "_MEDIA_N"
-
-
-def media_n_for(sf_dir: str) -> int:
-    """Media corpus size for a dataset dir: the default 60 unless the
-    dir carries a ``_MEDIA_N`` sentinel file (written by
-    scripts/scaling_probe.py, so the multimodal quartet scales with the
-    standard tiers — VERDICT r9 Next #7 — instead of reading a fixed
-    corpus at every scale). Driver-gate and test dirs carry no
-    sentinel, keeping the golden VALUES oracles pinned at 60 rows."""
-    import os
-
-    try:
-        with open(os.path.join(sf_dir, _MEDIA_N_SENTINEL)) as fh:
-            return int(fh.read().strip())
-    except (OSError, ValueError):
-        return _Q100_N
-
-
-# The five queries whose oracles are golden VALUES tables pinned at
-# _Q100_N rows. A gate hash-comparing any of these against a dir whose
-# media_n_for() differs MUST fail loudly (assert_media_oracle_scale)
-# instead of producing a confusing hash mismatch — ADVICE r10.
-MEDIA_GOLDEN_QUERIES = frozenset({
-    "q100_media_features", "q133_video_frame_features",
-    "q148_image_phash_dups", "q153_image_thumbnails",
-    "q154_audio_features", "q182_audio_afp_dups",
-})
-
-
-def assert_media_oracle_scale(sf_dir: str) -> None:
-    """Raise loudly when ``sf_dir`` carries a _MEDIA_N sentinel that
-    desyncs the live corpus from the pinned golden oracles."""
-    n = media_n_for(sf_dir)
-    if n != _Q100_N:
-        raise AssertionError(
-            f"media golden oracles are pinned at {_Q100_N} items but "
-            f"{sf_dir} carries a _MEDIA_N sentinel sizing the corpus "
-            f"to {n}: hash-comparing would mismatch by construction. "
-            "Scaled dirs are for timing probes only — compare on a "
-            "sentinel-free dir."
-        )
-
 
 def q100_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode-and-featurize the deterministic media corpus: the full
@@ -584,13 +541,8 @@ def q100_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUES table re-derived per-row by plain numpy (``arr.mean()`` /
     ``arr.std()``) with no Spark, no Arrow, and no codec in the loop —
     a green row proves the container encode/decode round-trips and the
-    vectorized batch math against an independent implementation.
-    (``sf_dir`` sizes the corpus via ``media_n_for`` — scaled
-    probe dirs carry a ``_MEDIA_N`` sentinel; the golden VALUES
-    oracle stays pinned at the default 60, so hash-compares are only
-    valid on sentinel-free dirs — the local gate enforces this
-    loudly via ``MEDIA_GOLDEN_QUERIES``.)"""
-    feats = extract_features(synth_media(spark, media_n_for(sf_dir)))
+    vectorized batch math against an independent implementation."""
+    feats = extract_features(synth_media(spark, _Q100_N))
     return feats.select(
         "media_id",
         "kind",
@@ -641,13 +593,9 @@ def q133_video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a golden VALUES table re-derived per-frame by plain numpy with
     no Spark/Arrow/codec in the loop — a green row proves the frame
     slicing, the per-frame PGM re-encode round-trip, and the batch
-    math. (``sf_dir`` sizes the corpus via ``media_n_for`` — scaled
-    probe dirs carry a ``_MEDIA_N`` sentinel; the golden VALUES
-    oracle stays pinned at the default 60, so hash-compares are only
-    valid on sentinel-free dirs — the local gate enforces this
-    loudly via ``MEDIA_GOLDEN_QUERIES``.)"""
+    math."""
     frames = sample_frames(
-        synth_media(spark, media_n_for(sf_dir)), every_k=_Q133_EVERY_K
+        synth_media(spark, _Q100_N), every_k=_Q133_EVERY_K
     )
     feats = extract_features(
         frames.select(
@@ -723,11 +671,11 @@ def dhash64(arr: np.ndarray) -> str:
     return f"{v:016x}"
 
 
-def _phash_corpus(spark: SparkSession, n: int = _Q100_N) -> DataFrame:
+def _phash_corpus(spark: SparkSession) -> DataFrame:
     """Image rows of the synthetic corpus plus container-swapped twins
     (PGM<->BMP re-encode of the SAME pixels, media_id + offset)."""
     rows = []
-    for i in range(n):
+    for i in range(_Q100_N):
         kind, arr, payload, meta = _media_row(i)
         if kind != "image":
             continue
@@ -765,12 +713,8 @@ def q148_image_phash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     (original, container-swapped twin) pair. The oracle re-derives
     each phash with driver-side numpy (no Spark/Arrow in the loop) and
     groups in SQL, so a green row proves the decode round-trip, the
-    bit math, AND the grouping. (``sf_dir`` sizes the corpus via ``media_n_for`` — scaled
-    probe dirs carry a ``_MEDIA_N`` sentinel; the golden VALUES
-    oracle stays pinned at the default 60, so hash-compares are only
-    valid on sentinel-free dirs — the local gate enforces this
-    loudly via ``MEDIA_GOLDEN_QUERIES``.)"""
-    hashed = image_phash(_phash_corpus(spark, media_n_for(sf_dir)))
+    bit math, AND the grouping."""
+    hashed = image_phash(_phash_corpus(spark))
     return (
         hashed.groupBy("phash")
         .agg(
@@ -829,13 +773,9 @@ def q153_image_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     resize_images kernel and emit a hash-checkable row per thumb (md5
     of the encoded bytes — the binary itself stays out of the compare
     frame). The oracle re-derives each md5 with driver-side numpy +
-    the same PGM encoder, no Spark/Arrow in the loop. (``sf_dir`` sizes the corpus via ``media_n_for`` — scaled
-    probe dirs carry a ``_MEDIA_N`` sentinel; the golden VALUES
-    oracle stays pinned at the default 60, so hash-compares are only
-    valid on sentinel-free dirs — the local gate enforces this
-    loudly via ``MEDIA_GOLDEN_QUERIES``.)"""
+    the same PGM encoder, no Spark/Arrow in the loop."""
     thumbs = resize_images(
-        synth_media(spark, media_n_for(sf_dir)), THUMB_W, THUMB_H
+        synth_media(spark, _Q100_N), THUMB_W, THUMB_H
     )
     return thumbs.select(
         "media_id",
@@ -921,12 +861,8 @@ def audio_features(media: DataFrame) -> DataFrame:
 
 def q154_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio screen over the deterministic corpus, eround-ed for the
-    hash compare. (``sf_dir`` sizes the corpus via ``media_n_for`` — scaled
-    probe dirs carry a ``_MEDIA_N`` sentinel; the golden VALUES
-    oracle stays pinned at the default 60, so hash-compares are only
-    valid on sentinel-free dirs — the local gate enforces this
-    loudly via ``MEDIA_GOLDEN_QUERIES``.)"""
-    feats = audio_features(synth_media(spark, media_n_for(sf_dir)))
+    hash compare."""
+    feats = audio_features(synth_media(spark, _Q100_N))
     return feats.select(
         "media_id",
         "n_samples",
@@ -1004,11 +940,11 @@ def afp64(samples: np.ndarray) -> str:
     return f"{v:016x}"
 
 
-def _afp_corpus(spark: SparkSession, n: int = _Q100_N) -> DataFrame:
+def _afp_corpus(spark: SparkSession) -> DataFrame:
     """Audio rows of the synthetic corpus plus container-swapped twins
     (the SAME samples re-encoded as AIFF, media_id + offset)."""
     rows = []
-    for i in range(n):
+    for i in range(_Q100_N):
         kind, arr, payload, meta = _media_row(i)
         if kind != "audio":
             continue
@@ -1043,13 +979,8 @@ def q182_audio_afp_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     group must be a (WAV original, AIFF twin) pair. The oracle
     re-derives each fingerprint with driver-side numpy (no Spark/Arrow
     in the loop) and groups in SQL, so a green row proves BOTH decode
-    round-trips, the fft/band/bit math, AND the grouping. (``sf_dir``
-    sizes the corpus via ``media_n_for`` — scaled probe dirs carry a
-    ``_MEDIA_N`` sentinel; the golden VALUES oracle stays pinned at
-    the default 60, so hash-compares are only valid on sentinel-free
-    dirs — the local gate enforces this loudly via
-    ``MEDIA_GOLDEN_QUERIES``.)"""
-    hashed = audio_afp(_afp_corpus(spark, media_n_for(sf_dir)))
+    round-trips, the fft/band/bit math, AND the grouping."""
+    hashed = audio_afp(_afp_corpus(spark))
     return (
         hashed.groupBy("afp")
         .agg(

@@ -64,49 +64,6 @@ def test_compressed_codec_arm_gated_on_pillow():
         decode_image(b"GIF89a" + b"\x00" * 16)
 
 
-def test_media_n_sentinel_scales_the_quartet(spark, tmp_path):
-    """media_n_for (VERDICT r9 Next #7): a _MEDIA_N sentinel in the
-    dataset dir scales the media queries' corpus; dirs without one
-    (driver gate, tests) stay at the pinned 60 so the golden oracles
-    hold. q100 run against a sentinel dir must produce exactly n rows
-    whose 60-prefix matches the default corpus row-for-row (the corpus
-    is deterministic by media_id — scaling extends, never reshuffles)."""
-    from synthetic_data_pipeline_spark.sources.multimodal import (
-        media_n_for,
-        q100_media_features,
-    )
-
-    assert media_n_for(str(tmp_path)) == 60
-    (tmp_path / "_MEDIA_N").write_text("90")
-    assert media_n_for(str(tmp_path)) == 90
-
-    big = q100_media_features(spark, str(tmp_path)).collect()
-    assert len(big) == 90
-    small = q100_media_features(spark, "/nonexistent-dir").collect()
-    assert len(small) == 60
-    assert [tuple(r) for r in big[:60]] == [tuple(r) for r in small]
-
-
-def test_media_oracle_scale_guard(tmp_path):
-    """ADVICE r10: a hash-compare gate pointed at a sentinel-carrying
-    dir must fail LOUDLY before running the media golden queries, not
-    produce a confusing mismatch; and the guard set must cover exactly
-    the multimodal registry (so a new golden query can't dodge it)."""
-    import pytest as _pytest
-
-    from synthetic_data_pipeline_spark.sources.multimodal import (
-        MEDIA_GOLDEN_QUERIES,
-        QUERIES,
-        assert_media_oracle_scale,
-    )
-
-    assert MEDIA_GOLDEN_QUERIES == frozenset(QUERIES)
-    assert_media_oracle_scale(str(tmp_path))  # sentinel-free: fine
-    (tmp_path / "_MEDIA_N").write_text("600")
-    with _pytest.raises(AssertionError, match="pinned at 60"):
-        assert_media_oracle_scale(str(tmp_path))
-
-
 def test_features_match_numpy_reference(spark):
     media = synth_media(spark, 30).cache()
     feats = {r.media_id: r for r in extract_features(media).collect()}

@@ -8,11 +8,10 @@ hashes values, so only exact matches count (SURVEY.md §5 'Oracle').
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pytest
 
+from scripts.driver_sim import TABLES, canon
 from synthetic_data_pipeline_spark.queries import all_oracles, all_queries
 from tests.conftest import SF_DIR
 
@@ -22,34 +21,11 @@ _ORACLES = all_oracles()
 
 def _duck(sf_dir: str, sql: str):
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
     return con.execute(sql).df()
-
-
-def _canon(df):
-    """Column-name-sorted, row-sorted, stringified cell values."""
-    df = df[sorted(df.columns)]
-    rows = []
-    for tup in df.itertuples(index=False):
-        row = []
-        for v in tup:
-            if hasattr(v, "item"):
-                v = v.item()
-            if v is None or (isinstance(v, float) and math.isnan(v)):
-                row.append("∅")
-            elif isinstance(v, float):
-                row.append(repr(v))
-            else:
-                row.append(str(v))
-        rows.append(tuple(row))
-    rows.sort()
-    return rows
 
 
 @pytest.mark.parametrize("name", sorted(_ORACLES))
@@ -59,7 +35,7 @@ def test_query_matches_oracle(spark, name):
     assert list(sorted(sdf.columns)) == list(sorted(odf.columns)), (
         f"{name}: column mismatch {sorted(sdf.columns)} vs {sorted(odf.columns)}"
     )
-    s_rows, o_rows = _canon(sdf), _canon(odf)
+    s_rows, o_rows = canon(sdf), canon(odf)
     assert len(s_rows) == len(o_rows), f"{name}: rowcount {len(s_rows)} vs {len(o_rows)}"
     mismatches = [
         (a, b) for a, b in zip(s_rows, o_rows) if a != b

@@ -52,24 +52,6 @@ def test_oracles_registered_beside_their_query():
     assert not stray, f"oracles without a same-module query: {stray}"
 
 
-def test_plans_md_sections_match_registry():
-    """PLANS.md is the reviewable plan showcase: every section heading
-    must name a REAL registry query (a renamed/deleted query must not
-    leave a stale plan behind), and the dump script's SHOWCASE list
-    must only reference registry names."""
-    registry = set(all_queries())
-    with open(os.path.join(REPO, "PLANS.md")) as fh:
-        heads = re.findall(r"^## (q\d+_\w+)", fh.read(), re.MULTILINE)
-    assert heads, "PLANS.md has no query sections — regenerate it"
-    stale = sorted(set(heads) - registry)
-    assert not stale, (
-        f"PLANS.md sections for queries not in the registry: {stale} — "
-        "re-run scripts/dump_plans.py"
-    )
-    dups = sorted({h for h in heads if heads.count(h) > 1})
-    assert not dups, f"duplicate PLANS.md sections: {dups}"
-
-
 def test_every_query_has_an_oracle_or_documented_exception():
     """The driver gate hash-checks every query that ships an oracle;
     a query WITHOUT one gets only the weak rows-only check, so each
@@ -82,74 +64,25 @@ def test_every_query_has_an_oracle_or_documented_exception():
     )
 
 
-def test_registry_index_is_fresh():
-    """REGISTRY.md is generated, never hand-edited (VERDICT r11 #7 —
-    hand-copied per-query tables drifted from artifacts within one
-    round). Regenerate in-memory and compare; a mismatch means a
-    registry/bench/probe/showcase change landed without re-running
-    scripts/registry_index.py."""
+def test_benchmark_query_list_references_registry_names():
+    """perfbench's ANALYTICS_QUERIES must only name registry queries,
+    each registered by the module listed beside it and listed once — a
+    renamed or moved query would otherwise fail 60 s into a benchmark
+    run instead of here."""
     import sys
 
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    import registry_index
+    # workloads.py imports its sibling modules by bare name
+    sys.path.append(os.path.join(REPO, "perfbench"))
+    from perfbench.workloads import ANALYTICS_QUERIES
 
-    with open(os.path.join(REPO, "REGISTRY.md")) as fh:
-        committed = fh.read()
-    assert committed == registry_index.generate(), (
-        "REGISTRY.md is stale — re-run scripts/registry_index.py"
-    )
-
-
-def test_registry_index_ignores_untracked_artifacts():
-    """VERDICT r13 #1 (structural): the external driver drops each
-    round's CORRECTNESS_rN.json AFTER the builder's last commit, so the
-    index must derive its driver-row column from git-TRACKED artifacts
-    only — a synthetic untracked CORRECTNESS_r99.json must leave the
-    generated index byte-identical, or every round ends red at HEAD by
-    construction."""
-    import json
-    import sys
-
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    import registry_index
-
-    if registry_index._tracked_artifacts() is None:
-        import pytest
-
-        pytest.skip("not a git checkout — on-disk fallback in effect")
-
-    fake = os.path.join(REPO, "CORRECTNESS_r99.json")
-    assert not os.path.exists(fake)
-    before = registry_index.generate()
-    with open(fake, "w") as fh:
-        json.dump({"q01_pricing_summary": {"rows_match": True}}, fh)
-    try:
-        assert registry_index.generate() == before
-    finally:
-        os.remove(fake)
-
-
-def test_artifact_surface_lists_reference_registry_names():
-    """bench.HEADLINE, scaling_probe.PROBE/PROBE_100 and
-    dump_plans.SHOWCASE must only name registry queries — a renamed or
-    deleted query would otherwise fail at bench/probe RUNTIME (hours
-    into a round) instead of here."""
-    import sys
-
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    sys.path.insert(0, REPO)
-    import bench
-    import dump_plans
-    import scaling_probe
-
-    registry = set(all_queries())
-    for label, names in (
-        ("bench.HEADLINE", bench.HEADLINE),
-        ("scaling_probe.PROBE", scaling_probe.PROBE),
-        ("scaling_probe.PROBE_100", scaling_probe.PROBE_100),
-        ("dump_plans.SHOWCASE", [n for n, _ in dump_plans.SHOWCASE]),
-    ):
-        unknown = sorted(set(names) - registry)
-        assert not unknown, f"{label} names not in the registry: {unknown}"
-        dups = sorted({n for n in names if names.count(n) > 1})
-        assert not dups, f"{label} duplicate entries: {dups}"
+    owners = {name: m.__name__ for m in _MODULES for name in m.QUERIES}
+    pkg = "synthetic_data_pipeline_spark."
+    wrong = [
+        (name, module, owners.get(name))
+        for name, module in ANALYTICS_QUERIES
+        if owners.get(name) != pkg + module
+    ]
+    assert not wrong, f"ANALYTICS_QUERIES (name, listed, registered): {wrong}"
+    names = [n for n, _ in ANALYTICS_QUERIES]
+    dups = sorted({n for n in names if names.count(n) > 1})
+    assert not dups, f"ANALYTICS_QUERIES duplicate entries: {dups}"

