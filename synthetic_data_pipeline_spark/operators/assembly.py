@@ -881,7 +881,7 @@ _Q119_ORACLE = f"""
 #   b_quality        q97's rules (≥25 tokens, distinct-ratio ≥ 0.32)
 #   c_exact_dedup    keep min-doc_id per normalized-text hash
 #   d_near_dedup     drop non-canonical members of the LSH clusters
-#                    (the shared label-propagation funnel, same state
+#                    (the shared near-dup cluster funnel, same state
 #                    q58/q95/q101/q103 read)
 #   e_decontaminated drop docs sharing any word 4-gram with the
 #                    held-out benchmark source (q105's rule)
@@ -919,11 +919,11 @@ def _funnel_base(train: DataFrame) -> DataFrame:
 
 def _funnel_near_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, _nd) — non-canonical members of the LSH near-dup
-    clusters (the shared label-propagation funnel state)."""
-    from .sketches import _lp_labels
+    clusters (the shared near-dup cluster funnel state)."""
+    from .sketches import _cluster_labels
 
     return (
-        _lp_labels(spark, sf_dir)
+        _cluster_labels(spark, sf_dir)
         .filter(F.col("node") != F.col("label"))
         .select(F.col("node").alias("doc_id"), F.lit(True).alias("_nd"))
     )

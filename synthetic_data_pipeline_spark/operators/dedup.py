@@ -131,7 +131,7 @@ def minhash_signatures_from_tokens(
 
 
 # Shingle table + LSH candidate pairs per session and sf_dir: q46 and
-# the label-propagation funnel (sketches._lp_state → q58/q95/q101/q103)
+# the near-dup cluster funnel (sketches._cluster_state → q58/q95/q101/q103)
 # need the SAME shingle → minhash → band bucket-join pipeline; one
 # session computes it once in the session state store — the in-session
 # form of "at 100 TB you'd persist the shingle table". Results are

@@ -1234,7 +1234,7 @@ _Q126_ORACLE_TEMPLATE = """
 # rewrites every word with the pair merged (boundary-safe padded
 # replace, leftmost-non-overlapping in both engines — greedy exactly
 # like reference BPE). The rounds are UNROLLED (fixed small count, the
-# q58 label-propagation pattern); word-frequency compression first
+# q58 oracle's label-propagation pattern); word-frequency compression first
 # means each round's pair count is one distinct-word-sized aggregate,
 # not a corpus-sized one — at 100 TB the distinct-word table is the
 # classic Zipf-bounded skeleton that BPE training actually runs on.

@@ -564,7 +564,7 @@ def cluster_split_stream(
 ) -> int:
     """Streaming twin of q145's cluster-aware split: incoming documents
     are routed to train/val/test AT INGEST by a native STREAM-STATIC
-    left join against the persisted LP label index
+    left join against the persisted cluster label index
     (sketches.write_label_index) — no foreachBatch batch-semantics
     escape needed, because the assignment is a narrow map after the
     join. Leakage-freedom carries over verbatim: the split key is the

@@ -4,6 +4,7 @@ oracle parity alone can't show recall)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from synthetic_data_pipeline_spark.operators.dedup import (
@@ -12,6 +13,7 @@ from synthetic_data_pipeline_spark.operators.dedup import (
     minhash_signatures,
     token_jaccard,
 )
+from synthetic_data_pipeline_spark.operators.sketches import LP_ITERS
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the river runs "
@@ -59,16 +61,18 @@ def test_signatures_deterministic(spark):
     assert a == b
 
 
-def test_lp_converges_within_unroll(spark, sf_dir):
-    """q103's probe round: on testdata every dup cluster's diameter
-    must fit inside the LP_ITERS unroll, i.e. a 6th min-label round
-    changes nothing. A nonzero count here is exactly the silent
-    under-merge a >5-hop dup chain would cause at corpus scale."""
+def test_lp_converges_within_unroll(sf_dir):
+    """q103's probe round on the DuckDB reference, where the LP_ITERS
+    unroll lives: on testdata every dup cluster's diameter must fit
+    inside it, i.e. a 6th min-label round changes nothing. A nonzero
+    count here is exactly the under-merge a >5-hop dup chain would
+    cause in the oracle's unroll."""
     from synthetic_data_pipeline_spark.operators.sketches import (
-        q103_lp_convergence,
+        _lp_convergence_oracle,
     )
+    from tests.test_oracle_parity import _duck
 
-    row = q103_lp_convergence(spark, sf_dir).collect()[0]
+    row = next(_duck(sf_dir, _lp_convergence_oracle()).itertuples())
     assert row.n_nodes > 0, "probe should see the clustered nodes"
     assert row.n_changed == 0, (
         f"{row.n_changed}/{row.n_nodes} labels still moving after "
@@ -84,24 +88,24 @@ def test_lp_funnel_memoized_and_stable(spark, sf_dir):
     from synthetic_data_pipeline_spark.operators import sketches
 
     state.clear()
-    assert "lp_state" not in state.stats()
-    cold = sorted(map(tuple, sketches._lp_labels(spark, sf_dir).collect()))
-    assert state.stats()["lp_state"] == {"entries": 1, "builds": 1, "hits": 0}
-    hit = sketches._lp_labels(spark, sf_dir)
-    assert hit is sketches._lp_state(spark, sf_dir)[1], "second call must hit"
-    assert state.stats()["lp_state"] == {"entries": 1, "builds": 1, "hits": 2}
+    assert "cluster_state" not in state.stats()
+    cold = sorted(map(tuple, sketches._cluster_labels(spark, sf_dir).collect()))
+    assert state.stats()["cluster_state"] == {"entries": 1, "builds": 1, "hits": 0}
+    hit = sketches._cluster_labels(spark, sf_dir)
+    assert hit is sketches._cluster_state(spark, sf_dir)[1], "second call must hit"
+    assert state.stats()["cluster_state"] == {"entries": 1, "builds": 1, "hits": 2}
     assert sorted(map(tuple, hit.collect())) == cold
     state.clear()
-    rebuilt = sorted(map(tuple, sketches._lp_labels(spark, sf_dir).collect()))
+    rebuilt = sorted(map(tuple, sketches._cluster_labels(spark, sf_dir).collect()))
     assert rebuilt == cold
-    assert state.stats()["lp_state"]["builds"] == 1
+    assert state.stats()["cluster_state"]["builds"] == 1
 
 
 def test_persisted_retention_reuse(spark, sf_dir, tmp_path):
     """Cross-job funnel reuse: materialize the retention list once as
     parquet, then run the dedup action from the persisted table in a
     'fresh session' (cleared state) — identical summary, and the
-    consumer provably never rebuilds the funnel (no lp_state build)."""
+    consumer provably never rebuilds the funnel (no cluster_state build)."""
     from synthetic_data_pipeline_spark import state
     from synthetic_data_pipeline_spark.operators import sketches
 
@@ -118,7 +122,7 @@ def test_persisted_retention_reuse(spark, sf_dir, tmp_path):
         )
     )
     assert got == want
-    assert "lp_state" not in state.stats(), "consumer rebuilt the funnel"
+    assert "cluster_state" not in state.stats(), "consumer rebuilt the funnel"
 
 
 def test_incremental_dedup_matches_full_scan(spark, sf_dir):
@@ -507,32 +511,40 @@ def test_span_tier_degenerate_corpora(spark, tmp_path):
 
 
 def test_cc_star_matches_lp_labels(spark, sf_dir):
-    """Star-contraction components must agree with the LP unroll at
-    the LABEL level (not just histogram shape) on the real LSH
-    candidate graph — q103 certifies the unroll converged here, and
-    both conventions pick min-doc-id as the canonical label."""
+    """Star-contraction components must agree with the DuckDB
+    reference's LP unroll at the LABEL level (not just histogram
+    shape) on the real LSH candidate graph — q103 certifies the unroll
+    converged here, and both conventions pick min-doc-id as the
+    canonical label."""
     from synthetic_data_pipeline_spark.operators.sketches import (
-        _lp_labels,
-        cc_star_labels,
+        _cluster_labels,
+        _lp_with_body,
     )
-    from synthetic_data_pipeline_spark.operators.dedup import shingle_state
+    from tests.test_oracle_parity import _duck
 
-    _, pairs = shingle_state(spark, sf_dir)
-    star = sorted(map(tuple, cc_star_labels(pairs).collect()))
-    lp = sorted(map(tuple, _lp_labels(spark, sf_dir).collect()))
+    body, final = _lp_with_body()
+    ref = _duck(sf_dir, f"WITH {body} SELECT node, label FROM {final}")
+    lp = sorted((int(r.node), int(r.label)) for r in ref.itertuples())
+    star = sorted(map(tuple, _cluster_labels(spark, sf_dir).collect()))
+    assert lp, "the reference should cluster some docs"
     assert star == lp
 
 
-def test_cc_star_long_chain_beyond_unroll(spark):
+@pytest.mark.parametrize(
+    "n",
+    [
+        (2 ** LP_ITERS) * 4,  # far beyond what LP_ITERS min-rounds span
+        4096,  # needs 13 contraction rounds
+    ],
+)
+def test_cc_star_long_chain_beyond_unroll(spark, n):
     """The case the fixed unroll CANNOT solve: a path graph longer
     than LP_ITERS hops. Star contraction must still collapse it to a
     single component labeled by the minimum node id."""
     from synthetic_data_pipeline_spark.operators.sketches import (
-        LP_ITERS,
         cc_star_labels,
     )
 
-    n = (2 ** LP_ITERS) * 4  # far beyond what LP_ITERS min-rounds span
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
     )

@@ -114,12 +114,12 @@ def test_clear_empties_every_name_and_unpersists(spark, sf_dir):
     sketches.q205_edit_relabel_scope(spark, sf_dir).collect()
     sketches.q58_dup_clusters(spark, sf_dir).collect()
     held = state.stats()
-    assert {"edit_prev_state", "lp_state", "token_state", "shingle_pairs"} <= {
+    assert {"edit_prev_state", "cluster_state", "token_state", "shingle_pairs"} <= {
         n for n, s in held.items() if s["entries"]
     }
     frames = [
         *sketches._edit_prev_state(spark, sf_dir),
-        *sketches._lp_state(spark, sf_dir),
+        *sketches._cluster_state(spark, sf_dir),
         dedup.token_state(spark, sf_dir),
     ]
     assert all(f.storageLevel != StorageLevel.NONE for f in frames)

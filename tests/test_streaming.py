@@ -457,7 +457,7 @@ def test_cluster_split_stream_equals_batch(spark, sf_dir, tmp_path):
     the split key is the persisted cluster label (or the doc's own id),
     so batch boundaries cannot move any document across splits."""
     from synthetic_data_pipeline_spark.operators.sketches import (
-        _lp_labels,
+        _cluster_labels,
         cluster_split_assignments,
     )
     from synthetic_data_pipeline_spark.sources.tables import load_table
@@ -475,7 +475,7 @@ def test_cluster_split_stream_equals_batch(spark, sf_dir, tmp_path):
     want = {
         r.doc_id: (r.clustered, r.gkey, r.split)
         for r in cluster_split_assignments(
-            load_table(spark, sf_dir, "documents"), _lp_labels(spark, sf_dir)
+            load_table(spark, sf_dir, "documents"), _cluster_labels(spark, sf_dir)
         ).collect()
     }
     assert got == want

@@ -552,13 +552,13 @@ def test_cluster_aware_split_no_straddling(spark, sf_dir):
     provably straddles some cluster on the same corpus — that contrast
     is the operator's reason to exist)."""
     from synthetic_data_pipeline_spark.operators.sketches import (
-        _lp_labels,
+        _cluster_labels,
         cluster_split_assignments,
     )
     from synthetic_data_pipeline_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    labels = _lp_labels(spark, sf_dir)
+    labels = _cluster_labels(spark, sf_dir)
     asg = cluster_split_assignments(docs, labels)
     straddling = (
         asg.filter("clustered")
@@ -597,14 +597,14 @@ def test_cluster_aware_split_conservation(spark, sf_dir):
     counted: sum(n_docs) == |documents|, sum(n_clustered_docs) ==
     |label table|."""
     from synthetic_data_pipeline_spark.operators.sketches import (
-        _lp_labels,
+        _cluster_labels,
         q145_cluster_aware_split,
     )
     from synthetic_data_pipeline_spark.sources.tables import load_table
 
     rows = q145_cluster_aware_split(spark, sf_dir).collect()
     n_docs = load_table(spark, sf_dir, "documents").count()
-    n_labeled = _lp_labels(spark, sf_dir).count()
+    n_labeled = _cluster_labels(spark, sf_dir).count()
     assert sum(r.n_docs for r in rows) == n_docs
     assert sum(r.n_clustered_docs for r in rows) == n_labeled
 
