@@ -82,26 +82,3 @@ def hash_int_range(key_sql: str, tag: str, lo: int, hi: int) -> str:
     n = hi - lo + 1
     return f"(({hash_u16(key_sql, tag)} % {n}) + {lo})"
 
-
-def hash_choice(key_sql: str, tag: str, choices: list[str]) -> str:
-    """SQL: deterministic uniform pick from a list of string literals."""
-    idx = f"({hash_u16(key_sql, tag)} % {len(choices)})"
-    whens = "".join(
-        f" WHEN {i} THEN '{c}'" for i, c in enumerate(choices[:-1])
-    )
-    return f"(CASE {idx}{whens} ELSE '{choices[-1]}' END)"
-
-
-def hash_weighted_choice(
-    key_sql: str, tag: str, dist: dict[str, float]
-) -> str:
-    """SQL: inverse-CDF walk over {value: prob} — the Spark/DuckDB twin of
-    the reference's ``sample_from_distribution`` (modules/meta_generator.py:9-17).
-    """
-    u = hash_unit(key_sql, tag)
-    items = list(dist.items())
-    whens, cum = [], 0.0
-    for value, p in items[:-1]:
-        cum += p
-        whens.append(f"WHEN {u} < {cum!r} THEN '{value}'")
-    return "(CASE " + " ".join(whens) + f" ELSE '{items[-1][0]}' END)"

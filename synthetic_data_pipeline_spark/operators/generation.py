@@ -3,15 +3,17 @@ validator, SURVEY.md §3.1-3.3) — assembled from the shared-dialect SQL
 in plans/generate.py and run through Spark's SQL front-end; the DuckDB
 oracle executes the SAME logical SQL with only engine-syntax swaps
 (numbers source, explode, list length/filter, ordered string agg,
-regex-literal escaping).
+regex-literal escaping) and one independent form: the filler pad,
+closed-form on Spark and a per-word lambda on DuckDB.
 
 This makes generation itself oracle-checked — stronger than the
 reference, whose committed run fails its own validation
 (output/validation_report.txt:51-52).
 
 Scale shape: range() → narrow expressions → one explode (×sit_count) →
-groupBy(doc) for render → groupBy(sit) for the report. No joins at all;
-the two shuffles carry |slots| and |sits| rows.
+one hash exchange on doc_id, which the render groupBy(doc) reuses →
+groupBy(sit) for the report. The one join is the validator's assigned
+(doc, SIT) pair ⋈ rendered doc, shuffle-hash on doc_id.
 """
 
 from __future__ import annotations
@@ -33,11 +35,11 @@ from ..plans.generate import (
     ccn_body_sql,
     doc_sits_sql,
     docs_sql,
+    filler_pad_sql,
     filler_word_sql,
     iban_bban_sql,
     sit_block_sql,
     sit_value_chunks,
-    sit_value_sql,
 )
 
 _DIALECTS = {
@@ -50,7 +52,7 @@ _DIALECTS = {
             "concat_ws(' ', transform(array_sort(collect_list(struct(slot, block))), "
             "x -> x.block))"
         ),
-        "fill": "array_join(transform(sequence(1, ({n})), i -> {w}), ' ')",
+        "fill": filler_pad_sql,
         "ph": is_placeholder_spark_sql,
         "esc": lambda pat: pat.replace("\\", "\\\\"),
     },
@@ -60,17 +62,14 @@ _DIALECTS = {
         "len": "len",
         "filter": "list_filter",
         "agg_body": "string_agg(block, ' ' ORDER BY slot)",
-        "fill": (
-            "array_to_string(list_transform(range(1, ({n}) + 1), i -> {w}), ' ')"
+        "fill": lambda n: (
+            f"array_to_string(list_transform(range(1, ({n}) + 1), "
+            f"i -> {filler_word_sql()}), ' ')"
         ),
         "ph": is_placeholder_duckdb,
         "esc": lambda pat: pat,
     },
 }
-
-
-def _docs_only_sql(cfg: GenConfig) -> str:
-    return docs_sql(cfg, _DIALECTS["spark"]["numbers"].format(n=cfg.n_docs))
 
 
 def _gen_ctes_base(cfg: GenConfig, d: dict) -> str:
@@ -89,15 +88,49 @@ def _gen_ctes_base(cfg: GenConfig, d: dict) -> str:
     """
 
 
+# Value-dispatch steps evaluated before the REPARTITION hint; the rest
+# run after it (see _gen_ctes).
+_PRE_EXCHANGE_STEPS = 2
+
+
 def _gen_ctes(cfg: GenConfig, d: dict) -> str:
-    """WITH-clause body: docs → slots → doc_sits → vals (value+block).
-    Single-SQL form — used verbatim by the DuckDB oracle (DuckDB has no
-    codegen method limit); the Spark side of the value-bearing queries
-    goes through ``_staged_vals`` instead."""
+    """WITH-clause body: docs → slots → doc_sits → vals (value+block),
+    one text for both engines.
+
+    The value dispatch is a chain of projections, one TP chunk each:
+    step 0 takes the FP placeholder or the first TP chunk, and step i
+    keeps a non-NULL value or tries chunk i. One inlined dispatch is a
+    single generated JVM method over the 64 KB limit, so the stage
+    falls back to interpreted code. Chained projections alone do not
+    help, because whole-stage codegen puts them all in one method (a
+    projection gets its own method only when it reads every input
+    column twice). So a REPARTITION hint on doc_id (DuckDB reads it as
+    a comment) cuts the chain: the first ``_PRE_EXCHANGE_STEPS`` steps
+    compile with the slot generator, the rest in the stage after the
+    exchange, each stage well under the limit. The render aggregate
+    groups by doc_id, so it reuses that partitioning: one exchange per
+    generation plan."""
+    tp_chunks, fp_case = sit_value_chunks("slot")
+    steps = [f"CASE WHEN label = 'TP' THEN {tp_chunks[0]} ELSE {fp_case} END"] + [
+        f"CASE WHEN v{i - 1} IS NOT NULL THEN v{i - 1} ELSE {c} END"
+        for i, c in enumerate(tp_chunks[1:], 1)
+    ]
+    ctes, prev = [], "vals0"
+    for i, e in enumerate(steps):
+        if i == _PRE_EXCHANGE_STEPS:
+            ctes.append(
+                f"vals_p AS (SELECT /*+ REPARTITION({_gen_partitions(cfg)}, "
+                f"doc_id) */ * FROM {prev})"
+            )
+            prev = "vals_p"
+        ctes.append(f"vals_v{i} AS (SELECT *, {e} AS v{i} FROM {prev})")
+        prev = f"vals_v{i}"
+    chain = ",\n".join(ctes)
     return f"""
       {_gen_ctes_base(cfg, d)},
+      {chain},
       vals1 AS (
-        SELECT *, {sit_value_sql("slot")} AS value FROM vals0
+        SELECT *, coalesce(v{len(steps) - 1}, '?') AS value FROM {prev}
       ),
       vals AS (
         SELECT *, {sit_block_sql()} AS block FROM vals1
@@ -112,48 +145,6 @@ def _gen_partitions(cfg: GenConfig) -> int:
     corpus size — pure scheduler overhead; at a 100 TB-scale config the
     same formula grows the partition count linearly with n_docs."""
     return max(2, min(32, cfg.n_docs // 5_000 + 2))
-
-
-def _staged_vals(cfg: GenConfig, spark: SparkSession):
-    """Spark-side vals with codegen-safe staging: the slot table is
-    materialized ONCE with localCheckpoint after only small expressions
-    (docs → slots → sit assignment → ccn/iban bodies), then the 54-SIT
-    value dispatch is ROW-partitioned — each 6-SIT chunk evaluates its
-    own small CASE in its own union branch, i.e. its own codegen unit.
-    One inlined 54-branch dispatch exceeds the JVM 64KB method limit
-    inside the generate stage and silently drops the whole
-    generate+render+scan pipeline to interpreted mode (measured ~9s of
-    failed compile attempts + interpreted eval on a 2k-row slot table;
-    this form compiles everywhere)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    d = _DIALECTS["spark"]
-    tp_chunks, fp_case = sit_value_chunks("slot")
-    base = (
-        spark.sql(
-            expand_u16(
-                f"WITH {_gen_ctes_base(cfg, d)} SELECT * FROM vals0", "spark"
-            )
-        )
-        .coalesce(_gen_partitions(cfg))
-        .localCheckpoint()
-    )
-    parts = [
-        base.filter(F.col("sit_id").isin(cids)).selectExpr(
-            "*",
-            expand_u16(
-                f"(CASE WHEN label = 'TP' THEN coalesce({tp_case}, '?') "
-                f"ELSE {fp_case} END) AS value",
-                "spark",
-            ),
-        )
-        for cids, tp_case in tp_chunks
-    ]
-    return reduce(lambda a, b: a.unionByName(b), parts).withColumn(
-        "block", F.expr(sit_block_sql())
-    )
 
 
 def _rendered_cte(d: dict) -> str:
@@ -223,7 +214,7 @@ def _rendered_cte(d: dict) -> str:
     # SQL (DuckDB) does not.
     brk = "concat(' ', chr(10), chr(10), ' ')"
     fill_n = f"greatest(word_count_target - {d['len']}(split(body, ' ')), 0)"
-    fill = d["fill"].format(n=fill_n, w=filler_word_sql())
+    fill = d["fill"](fill_n)
     return f"""
       bodies AS (
         SELECT doc_id, format, word_count_target,
@@ -289,8 +280,8 @@ def _validation_sql(cfg: GenConfig, dialect: str) -> str:
     filtered = _ms_filtered(d, f"(CASE sit_id {whens} ELSE NULL END)")
     real = f"coalesce({d['len']}({filtered}), 0)"
     # TC SITs (empty regex) are generated but never scanned — same skip
-    # as the reference validator; the Spark q62 path drops them via its
-    # inner join against the per-pattern scan branches.
+    # as the reference validator; the Spark q62 path filters them out
+    # before its scan join (_build_scanned).
     scan_ids = ", ".join(f"'{sid}'" for sid in RE2_SAFE_IDS)
     return apply_sql_eround(expand_u16(f"""
       WITH {_gen_ctes(cfg, d)},
@@ -319,19 +310,7 @@ def q60_gen_meta_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q61_gen_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Staged like q62 (codegen-safe vals), then the same rendered+agg
-    SQL text the oracle runs."""
-    d = _DIALECTS["spark"]
-    _staged_vals(DEFAULT_CONFIG, spark).createOrReplaceTempView("gen_vals_staged")
-    return spark.sql(
-        apply_sql_eround(
-            expand_u16(
-                f"WITH vals AS (SELECT * FROM gen_vals_staged), "
-                f"{_rendered_cte(d)} {_corpus_agg_select(d)}",
-                "spark",
-            )
-        )
-    )
+    return spark.sql(_corpus_stats_sql(DEFAULT_CONFIG, "spark"))
 
 
 def _ms_whens(d: dict) -> list[str]:
@@ -366,31 +345,69 @@ def clear_scanned_pairs_cache() -> None:
     state.clear("scanned_pairs", "rendered_docs")
 
 
+def _rendered_sql(cfg: GenConfig) -> str:
+    """The generation SQL every Spark consumer of the rendered corpus
+    runs: the parquet sink in perfbench builds this same text from
+    ``_gen_ctes``/``_rendered_cte``. One text means one set of
+    generated classes, so Janino's class cache and the warm JIT serve
+    every consumer after the first."""
+    d = _DIALECTS["spark"]
+    return expand_u16(
+        f"WITH {_gen_ctes(cfg, d)}, {_rendered_cte(d)} "
+        "SELECT doc_id, format, text FROM rendered",
+        "spark",
+    )
+
+
+def _rendered_docs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
+    """(doc_id, format, text) of the generated corpus: ``_rendered_sql``
+    under a lazy localCheckpoint, memoised per session and config. The
+    checkpoint fixes the plan at the sink's full projection, so a
+    consumer selecting fewer columns cannot prune it into different
+    generated code."""
+    return state.get_or_build(
+        spark,
+        "rendered_docs",
+        repr(cfg),
+        lambda: spark.sql(_rendered_sql(cfg)).localCheckpoint(eager=False),
+    )
+
+
+def _doc_sits(spark: SparkSession, cfg: GenConfig):
+    """(doc_id, sit_id, label, instances) for every assigned slot,
+    the TC family included — the mapping table, without values."""
+    return spark.sql(
+        expand_u16(
+            f"WITH {_gen_ctes_base(cfg, _DIALECTS['spark'])} "
+            "SELECT doc_id, sit_id, label, instances FROM doc_sits",
+            "spark",
+        )
+    )
+
+
 # Scanned-pairs table per session and GenConfig: q62, q91, q98 and
 # the report assembly all consume the SAME generate → render → join →
 # regex-scan pipeline; within one session it is computed once in the
-# session state store (the already-present localCheckpoint
-# materializes it) — the in-session form of "at 100 TB you'd persist
-# the validation scan as a table" (same reuse pattern as
-# dedup.shingle_state). Results are identical with or without a memo
-# hit: the lineage is deterministic, consumers only append further
-# transformations.
+# session state store (the localCheckpoint materializes it) — the
+# in-session form of "at 100 TB you'd persist the validation scan as a
+# table" (same reuse pattern as dedup.shingle_state). Results are
+# identical with or without a memo hit: the lineage is deterministic,
+# consumers only append further transformations.
 def _scanned_pairs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
     """(doc_id, sit_id, label, instances, text, ms) for every ASSIGNED
     (doc, scanned-SIT) pair — the validator's loop shape
     (modules/validator.py:255-299 iterates mapping rows and runs only
-    that row's SIT regex on that doc). Joining vals to rendered before
-    the regex means each document is scanned with its ~4 assigned
-    patterns, not all |catalog| of them — at 100 TB that is the
-    difference between O(pairs) and O(docs × catalog) regex work.
+    that row's SIT regex on that doc). Joining the assignments to the
+    rendered corpus before the regex means each document is scanned
+    with its ~4 assigned patterns, not all |catalog| of them — at 100 TB
+    that is the difference between O(pairs) and O(docs × catalog) regex
+    work.
 
-    Codegen safety: the 33-branch dispatch is split into 6-branch CASE
-    chunks, each its own column, materialized with localCheckpoint
-    before the chunks are coalesced — one inlined mega-CASE (regex +
-    placeholder-filter per branch) exceeds the JVM 64KB method limit
-    and drops the stage to interpreted mode. (A union-of-row-chunks
-    form without the checkpoint was measured 3-5× slower here: each
-    branch re-executes the vals union + render agg + join.)
+    The documents come from ``_rendered_docs``, the memoised sink plan.
+    The 33-branch regex dispatch is split into 6-branch CASE chunks,
+    each its own column, materialized with localCheckpoint before the
+    chunks are coalesced: one inlined CASE (regex + placeholder filter
+    per branch) exceeds the JVM's 64 KB method limit.
 
     The join takes a shuffle-hash hint: the rendered side carries the
     full document text, and broadcasting it collects the whole corpus
@@ -405,18 +422,7 @@ def _build_scanned(spark: SparkSession, cfg: GenConfig):
     from pyspark.sql import functions as F
 
     d = _DIALECTS["spark"]
-    vals = _staged_vals(cfg, spark)
-    vals.createOrReplaceTempView("gen_vals_staged")
-    rendered = spark.sql(
-        expand_u16(
-            f"""
-            WITH vals AS (SELECT * FROM gen_vals_staged),
-            {_rendered_cte(d)}
-            SELECT doc_id, text FROM rendered
-            """,
-            "spark",
-        )
-    )
+    rendered = _rendered_docs(spark, cfg).select("doc_id", "text")
     whens = _ms_whens(d)
     chunk = 6
     chunks = [
@@ -424,7 +430,7 @@ def _build_scanned(spark: SparkSession, cfg: GenConfig):
         for i in range(0, len(whens), chunk)
     ]
     staged = (
-        vals.select("doc_id", "sit_id", "label", "instances")
+        _doc_sits(spark, cfg)
         .filter(F.col("sit_id").isin(RE2_SAFE_IDS))
         .join(rendered.hint("shuffle_hash"), "doc_id")
         .selectExpr(
@@ -440,7 +446,7 @@ def _build_scanned(spark: SparkSession, cfg: GenConfig):
     )
     # placeholder filter applied ONCE on the coalesced dispatch (the
     # branches carry raw matches; see _ms_whens)
-    out = staged.selectExpr(
+    return staged.selectExpr(
         "doc_id", "sit_id", "label", "instances", "text",
         _ms_filtered(
             d,
@@ -448,15 +454,12 @@ def _build_scanned(spark: SparkSession, cfg: GenConfig):
             + ")",
         ) + " AS ms",
     )
-    return out
 
 
 def q62_gen_validation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark side is staged, not one SQL: the fully-inlined generation +
-    regex-scan expression tree exceeds the JVM's 64KB codegen method
-    limit, silently dropping the whole stage to interpreted mode
-    (measured 21.5s → ~2s). Built on the per-assigned-pair scan — same
-    relation as the single-SQL DuckDB oracle."""
+    """Per-SIT validation counts over the per-assigned-pair scan
+    (``_scanned_pairs``) — the same relation as the single-SQL DuckDB
+    oracle, whose regex dispatch stays one CASE."""
     from pyspark.sql import functions as F
 
     return (
@@ -488,31 +491,6 @@ def q62_gen_validation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("sit_id")
     )
-
-
-def _rendered_docs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
-    """(doc_id, text) for the generated corpus — same staged-vals path
-    as :func:`_scanned_pairs` (64KB-codegen-safe), no pair join.
-    Memoized per session and config like the scanned-pairs table: the
-    render CTE's plan is large, and re-analyzing it per consumer (q99
-    twice per bench round) costs more than the tiny corpus itself."""
-
-    def build():
-        d = _DIALECTS["spark"]
-        vals = _staged_vals(cfg, spark)
-        vals.createOrReplaceTempView("gen_vals_staged")
-        return spark.sql(
-            expand_u16(
-                f"""
-                WITH vals AS (SELECT * FROM gen_vals_staged),
-                {_rendered_cte(d)}
-                SELECT doc_id, text FROM rendered
-                """,
-                "spark",
-            )
-        ).localCheckpoint(eager=False)
-
-    return state.get_or_build(spark, "rendered_docs", repr(cfg), build)
 
 
 # q99 runs the alternation form, which costs ~20ms/doc on Java regex
@@ -769,45 +747,59 @@ def write_validation_report(
     coverage_target: int | None = None,
 ) -> str:
     """S17 sink: the single-file validation report text artifact
-    (modules/validator.py:332-357), assembled from the oracle-checked
-    distributed aggregates — the q60 per-SIT meta (ALL SITs, including
-    the unscanned TC family, like the reference's mapping loop), the
-    q62 scan results, and the FP issue lines from the per-pair scan.
+    (modules/validator.py:332-357) for the corpus of ``cfg``. Every
+    section comes from that corpus's one scan (``_scanned_pairs``, over
+    the memoised sink plan) in two actions:
+
+    - the per-SIT lines and the summary: q60's columns for ALL SITs
+      (the unscanned TC family included, like the reference's mapping
+      loop) and q62's counts, one aggregate over the assignments
+      left-joined to the scan;
+    - the issue lines: both validator failure branches on the scan.
+
     The collect()s fetch ≤ |catalog| + 500 short rows — final result
     fetch, not a driver-side compute loop. Returns the report text and
     writes it to ``path`` as one file.
 
-    ``cfg`` must stay DEFAULT_CONFIG for the per-SIT/summary sections
-    (q60/q62 are pinned to it); it parameterizes only the issue scan.
-    ``inject=True`` applies q98's deterministic fault injection so both
-    failure branches render real lines; ``coverage_target`` overrides
-    the warning threshold (default ``cfg.per_sit_count``) — together
-    they exercise every report section for the golden test.
+    ``inject=True`` applies q98's deterministic fault injection to the
+    issue lines, so both failure branches render real lines;
+    ``coverage_target`` overrides the warning threshold (default
+    ``cfg.per_sit_count``) — together they exercise every report
+    section for the golden test.
     """
     from pyspark.sql import functions as F
 
     target = coverage_target if coverage_target is not None else cfg.per_sit_count
-    meta = {r.sit_id: r for r in q60_gen_meta_summary(spark, "").collect()}
-    val = {r.sit_id: r for r in q62_gen_validation_report(spark, "").collect()}
+    pairs = _scanned_pairs(spark, cfg)
+    tp, fp = F.col("label") == "TP", F.col("label") == "FP"
+    found = F.size("ms")
+    per_sit = {
+        r.sit_id: r
+        for r in _doc_sits(spark, cfg)
+        .join(pairs.select("doc_id", "sit_id", "ms"), ["doc_id", "sit_id"], "left")
+        .groupBy("sit_id")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("instances").alias("total_instances"),
+            F.count(F.when(tp & (found >= F.col("instances")), 1)).alias("tp_docs"),
+            F.count(F.when(fp & (found > 0), 1)).alias("fp_flagged"),
+        )
+        .collect()
+    }
     # both validator failure branches (validator.py:303-330): TP docs
     # short of their quota and FP docs with any real-looking match, each
     # with a ≤5-value sample, capped at 500 lines like the reference
-    pairs = _scanned_pairs(spark, cfg)
     if inject:
         pairs = inject_faults(pairs)
     issues = (
         pairs
-        .withColumn("found", F.size("ms"))
+        .withColumn("found", found)
         .withColumn(
             "needed",
-            F.when(
-                F.col("label") == "TP",
-                F.greatest(F.lit(1), F.col("instances")),
-            ).otherwise(F.lit(0)),
+            F.when(tp, F.greatest(F.lit(1), F.col("instances"))).otherwise(F.lit(0)),
         )
         .filter(
-            ((F.col("label") == "TP") & (F.col("found") < F.col("needed")))
-            | ((F.col("label") == "FP") & (F.col("found") > 0))
+            (tp & (F.col("found") < F.col("needed"))) | (fp & (F.col("found") > 0))
         )
         .select(
             "doc_id", "sit_id", "label", "found", "needed",
@@ -819,14 +811,12 @@ def write_validation_report(
     )
 
     lines = ["Validation report\n=================\n"]
-    lines.append(f"Total unique SITs observed in mapping: {len(meta)}\n")
-    for sid in sorted(meta):
-        m, v = meta[sid], val.get(sid)
-        tp = v.tp_satisfied if v is not None else 0
-        fp = v.fp_flagged if v is not None else 0
+    lines.append(f"Total unique SITs observed in mapping: {len(per_sit)}\n")
+    for sid in sorted(per_sit):
+        m = per_sit[sid]
         lines.append(
-            f"{sid}: docs={m.n_docs}, tp_docs={tp}, fp_flagged={fp}, "
-            f"total_instances={m.total_instances}"
+            f"{sid}: docs={m.n_docs}, tp_docs={m.tp_docs}, "
+            f"fp_flagged={m.fp_flagged}, total_instances={m.total_instances}"
         )
         if m.n_docs < target:
             lines.append(
@@ -834,8 +824,8 @@ def write_validation_report(
                 f"(target {target})"
             )
 
-    n_rows = sum(m.n_docs for m in meta.values())
-    n_inst = sum(m.total_instances for m in meta.values())
+    n_rows = sum(m.n_docs for m in per_sit.values())
+    n_inst = sum(m.total_instances for m in per_sit.values())
     lines.append("\nDistribution summary:\n")
     lines.append(f"Average SITs per doc: {n_rows / cfg.n_docs:.2f}")
     lines.append(f"Average instances per SIT (across docs): {n_inst / n_rows:.2f}")

@@ -3,7 +3,8 @@
 The reference ships 50 SIT definitions ``{id, name, regex, tc}`` in
 config.json:30-237, loaded at modules/meta_generator.py:55-57 and
 compiled per-run at modules/validator.py:42-54. The engine's catalog is
-a small broadcast dimension table (SURVEY.md §1.1).
+a small code table (SURVEY.md §1.1) that the generation and scan SQL
+is built from.
 
 Patterns here are re-authored, not copied: each is normalized to be
 semantically identical under Python ``re``, Java ``java.util.regex``
@@ -13,7 +14,6 @@ to a literal prefix, no lookbehind (SURVEY.md §4.3.3 portability trap).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # (sit_id, name, regex, tcs). Regexes are engine-portable: no lookaround,
@@ -114,13 +114,6 @@ SIT_CATALOG += [(sid, name, "", tcs) for sid, name, tcs in TC_SITS]
 # every catalog pattern is authored without them, so the scan set is
 # currently all non-TC SITs. The \1 filter stays as a guard.
 RE2_SAFE_IDS = [s[0] for s in SIT_CATALOG if s[2] and "\\1" not in s[2]]
-
-
-def sit_catalog_df(spark: SparkSession) -> DataFrame:
-    """The catalog as a broadcast-sized dimension DataFrame."""
-    return spark.createDataFrame(
-        SIT_CATALOG, "sit_id string, sit_name string, regex string, tcs array<string>"
-    )
 
 
 def is_placeholder(col: F.Column) -> F.Column:

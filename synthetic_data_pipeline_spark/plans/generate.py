@@ -29,6 +29,7 @@ only the numbers source and the per-row explode differ per engine.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 from ..functions.xsql import hash_int_range, hash_u16, hash_unit
@@ -256,27 +257,15 @@ def iban_gb_sql(bban_col: str) -> str:
     return f"concat('GB', {check}, {bban_col})"
 
 
-def sit_value_chunks(key: str = "slot") -> tuple[list[tuple[list[str], str]], str]:
-    """The TP dispatch as (chunk_sit_ids, small CASE) pairs plus the FP
-    CASE. Exposed separately so the Spark side can ROW-partition the
-    slot table by sit_id chunk and evaluate each small CASE in its own
-    union branch (its own codegen unit) — a single inlined 54-branch
-    dispatch blows the JVM 64KB method limit and silently drops the
-    whole generate stage to interpreted mode (measured ~9s of compile
-    attempts + interpreted eval on a 2k-row table)."""
-    return _sit_value_parts(key)
-
-
-def sit_value_sql(key: str = "slot") -> str:
-    """Dispatch CASE: per-sit TP value (regex-conformant) or FP
-    placeholder (content_generator.py:197-206 dispatch, F15/F16) —
-    single-expression form for the (DuckDB) single-SQL path."""
-    tp_chunks, fp_case = _sit_value_parts(key)
-    tp_expr = "coalesce(" + ", ".join(c for _ids, c in tp_chunks) + ", '?')"
-    return f"(CASE WHEN label = 'TP' THEN {tp_expr} ELSE {fp_case} END)"
-
-
-def _sit_value_parts(key: str = "slot") -> tuple[list[tuple[list[str], str]], str]:
+def sit_value_chunks(key: str = "slot") -> tuple[list[str], str]:
+    """Per-sit TP value (regex-conformant) or FP placeholder
+    (content_generator.py:197-206 dispatch, F15/F16), as the TP
+    dispatch split into small CASE chunks (NULL for a sit_id outside the
+    chunk) plus the FP CASE. One inlined 54-branch dispatch is a single
+    expression too large for one generated JVM method (64 KB); the
+    generation SQL (operators/generation.py::_gen_ctes) chains the
+    chunks as projections and splits the chain around its one exchange,
+    so each side compiles under the limit."""
     k = key
     tp = {
         "SIT_CCN": luhn_formatted_sql("ccn_body"),
@@ -434,14 +423,15 @@ def _sit_value_parts(key: str = "slot") -> tuple[list[tuple[list[str], str]], st
     #
     ids = [sid for sid, *_ in SIT_CATALOG]
     chunk = 6
-    tp_chunks = []
-    for i in range(0, len(ids), chunk):
-        cids = ids[i:i + chunk]
-        whens = " ".join(
+    tp_chunks = [
+        "(CASE sit_id "
+        + " ".join(
             f"WHEN '{sid}' THEN " + tp.get(sid, f"'<{sid}_VALUE>'")
-            for sid in cids
+            for sid in ids[i:i + chunk]
         )
-        tp_chunks.append((cids, f"(CASE sit_id {whens} ELSE NULL END)"))
+        + " ELSE NULL END)"
+        for i in range(0, len(ids), chunk)
+    ]
     fp_whens = " ".join(
         f"WHEN '{sid}' THEN " + fp.get(sid, f"'REDACTED_{sid}'")
         for sid, *_ in SIT_CATALOG
@@ -488,6 +478,16 @@ def sit_block_sql() -> str:
 # offset, and sentence length varies 7–10 words per doc — so the
 # corpus carries hundreds of distinct sentence forms instead of the 8
 # rotations a single fixed-stride/fixed-cadence pad produces.
+#
+# Two forms of one pad. ``filler_word_sql`` is the word at position i,
+# which DuckDB maps over 1..n in a lambda. Spark uses the closed form
+# ``filler_pad_sql``: the word index repeats every 16 positions and the
+# full stop every 7 + doc % 4, so a doc's pad is periodic with period
+# lcm(16, 7 + doc % 4) words and depends on doc only through doc % 16.
+# Those 16 period strings are built here, and the pad is the first n
+# words of a repeated period — built-in string functions that compile
+# into the generated code, instead of one interpreted lambda call per
+# padded word.
 FILLER_WORDS = [
     "lorem", "ipsum", "dolor", "amet", "tempor", "vitae", "sed", "magna",
     "elit", "nulla", "fusce", "porta", "ornare", "cursus", "neque", "augue",
@@ -495,10 +495,10 @@ FILLER_WORDS = [
 
 
 def filler_word_sql(pos: str = "i", doc: str = "doc_id") -> str:
-    """One filler word at 0-based position ``pos`` of document ``doc``
-    — pure ANSI arithmetic + CASE, identical on both engines. All
-    words stay lowercase/short (uppercase ≥8-char tokens would
-    false-positive the SWIFT/PASSPORT patterns, see module note)."""
+    """One filler word at position ``pos`` of document ``doc`` — pure
+    ANSI arithmetic + CASE, identical on both engines. All words stay
+    lowercase/short (uppercase ≥8-char tokens would false-positive the
+    SWIFT/PASSPORT patterns, see module note)."""
     n = len(FILLER_WORDS)
     idx = f"(({pos}) * (1 + 2 * (({doc}) % 4)) + ({doc})) % {n}"
     slen = f"(7 + (({doc}) % 4))"
@@ -509,4 +509,41 @@ def filler_word_sql(pos: str = "i", doc: str = "doc_id") -> str:
         f"concat(CASE {idx} {whens} "
         f"ELSE '{FILLER_WORDS[-1]}' END, "
         f"CASE WHEN ({pos}) % {slen} = {slen} - 1 THEN '.' ELSE '' END)"
+    )
+
+
+def _filler_period(doc: int) -> list[str]:
+    """Words 1..L of doc's pad, L = lcm(16, 7 + doc % 4) — the Python
+    twin of ``filler_word_sql`` over one period."""
+    n = len(FILLER_WORDS)
+    slen = 7 + doc % 4
+    return [
+        FILLER_WORDS[(i * (1 + 2 * (doc % 4)) + doc) % n]
+        + ("." if i % slen == slen - 1 else "")
+        for i in range(1, math.lcm(n, slen) + 1)
+    ]
+
+
+def filler_pad_sql(n: str, doc: str = "doc_id") -> str:
+    """The first ``n`` words of doc's pad joined by single spaces, in
+    closed form (see the note above ``FILLER_WORDS``): the doc's period
+    string, each word followed by one space, repeated ceil(n / L) times
+    and cut before its n-th space. Equals ``filler_word_sql`` mapped
+    over positions 1..n and space-joined."""
+    m = len(FILLER_WORDS)
+    periods = [_filler_period(r) for r in range(m)]
+    text = (
+        f"CASE ({doc}) % {m} "
+        + " ".join(f"WHEN {r} THEN '{' '.join(p)} '" for r, p in enumerate(periods))
+        + " END"
+    )
+    # L depends on doc % 4 only; residues 0..3 cover all four lengths
+    period_len = (
+        f"CASE ({doc}) % 4 "
+        + " ".join(f"WHEN {r} THEN {len(periods[r])}" for r in range(4))
+        + " END"
+    )
+    return (
+        f"substring_index(repeat({text}, "
+        f"CAST(ceil(({n}) / {period_len}) AS INT)), ' ', {n})"
     )

@@ -32,7 +32,7 @@ from email.parser import BytesParser
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StringType
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 from pyspark.sql.functions import pandas_udf
 
 from .xlsx import read_xlsx, write_xlsx
@@ -178,34 +178,36 @@ def extract_eml_text(data: bytes) -> str:
 # --- Spark surface --------------------------------------------------------
 
 
-@pandas_udf(BinaryType())
-def docx_udf(text: pd.Series) -> pd.Series:
-    return text.map(render_docx_bytes)
+def render_row(
+    fmt: str, text: str, subject: str
+) -> tuple[bytes | None, bytes | None, bytes | None]:
+    """(docx, pdf, eml) for one document, rendering only what its
+    format calls for (postprocessor.py:141-189 dispatch): document →
+    docx; pdf → docx + pdf; email → eml; email_with_attachment → eml
+    with the mapping xlsx rendition as a real MIME attachment
+    (postprocessor.py:158-189); chat → nothing."""
+    docx = render_docx_bytes(text) if fmt in ("document", "pdf") else None
+    pdf = render_pdf_bytes(text) if fmt == "pdf" else None
+    eml = None
+    if fmt == "email":
+        eml = render_eml_bytes(text, subject)
+    elif fmt == "email_with_attachment":
+        xlsx = render_xlsx_bytes([("field", "value"), ("subject", subject)])
+        eml = render_eml_bytes(text, subject, attachments=[("mapping.xlsx", xlsx)])
+    return docx, pdf, eml
 
 
-@pandas_udf(BinaryType())
-def pdf_udf(text: pd.Series) -> pd.Series:
-    return text.map(render_pdf_bytes)
+_RENDITION_COLS = ("docx", "pdf", "eml")
 
 
-@pandas_udf(BinaryType())
-def eml_udf(text: pd.Series, subject: pd.Series) -> pd.Series:
-    return pd.Series(
-        [render_eml_bytes(t, s) for t, s in zip(text, subject)]
+@pandas_udf(StructType([StructField(c, BinaryType()) for c in _RENDITION_COLS]))
+def renditions_udf(
+    fmt: pd.Series, text: pd.Series, subject: pd.Series
+) -> pd.DataFrame:
+    return pd.DataFrame(
+        [render_row(f, t, s) for f, t, s in zip(fmt, text, subject)],
+        columns=list(_RENDITION_COLS),
     )
-
-
-@pandas_udf(BinaryType())
-def eml_with_attachment_udf(text: pd.Series, subject: pd.Series) -> pd.Series:
-    """email_with_attachment format: the mapping xlsx rendition rides
-    along as a real MIME attachment (postprocessor.py:158-189)."""
-    out = []
-    for t, s in zip(text, subject):
-        xlsx = render_xlsx_bytes([("field", "value"), ("subject", s)])
-        out.append(
-            render_eml_bytes(t, s, attachments=[("mapping.xlsx", xlsx)])
-        )
-    return pd.Series(out)
 
 
 @pandas_udf(StringType())
@@ -225,25 +227,14 @@ def extract_eml_udf(data: pd.Series) -> pd.Series:
 
 def add_renditions(docs: DataFrame) -> DataFrame:
     """documents(doc_id, format, text) → + docx/pdf/eml binary columns,
-    only materializing the column the row's format calls for
-    (postprocessor.py:141-189 dispatch)."""
+    NULL where the row's format calls for no such rendition. One UDF
+    call per row renders only what ``render_row`` dispatches to; a
+    ``F.when`` per column around one UDF per rendition would still run
+    every UDF on every row."""
     subject = F.concat(F.lit("document "), F.col("doc_id").cast("string"))
-    return (
-        docs.withColumn(
-            "docx",
-            F.when(F.col("format").isin("document", "pdf"), docx_udf("text")),
-        )
-        .withColumn(
-            "pdf", F.when(F.col("format") == "pdf", pdf_udf("text"))
-        )
-        .withColumn(
-            "eml",
-            F.when(F.col("format") == "email", eml_udf("text", subject)).when(
-                F.col("format") == "email_with_attachment",
-                eml_with_attachment_udf("text", subject),
-            ),
-        )
-    )
+    return docs.withColumn(
+        "_r", renditions_udf("format", "text", subject)
+    ).select(*docs.columns, *[f"_r.{c}" for c in _RENDITION_COLS])
 
 
 def write_files_per_row(

@@ -355,3 +355,105 @@ def test_scanned_pairs_memoized_and_stable(spark):
         )
         == cold
     )
+
+
+def test_validation_report_other_config(spark, tmp_path):
+    """Every report section derives from the ``cfg`` corpus: the per-SIT
+    ``docs=`` values sum to that config's slot count, and its own
+    coverage target is met, so no warning appears."""
+    from synthetic_data_pipeline_spark.operators.generation import (
+        write_validation_report,
+    )
+    from synthetic_data_pipeline_spark.plans.generate import (
+        CYCLE,
+        CYCLE_SUM,
+        GenConfig,
+    )
+
+    cfg = GenConfig(per_sit_count=10)
+    assert cfg.n_docs != DEFAULT_CONFIG.n_docs
+    text = write_validation_report(spark, str(tmp_path / "r.txt"), cfg=cfg)
+    docs = [
+        int(re.search(r"docs=(\d+),", l).group(1))
+        for l in text.splitlines()
+        if l.startswith("SIT_")
+    ]
+    assert len(docs) == len(SIT_CATALOG)
+    assert sum(docs) == cfg.n_docs // len(CYCLE) * CYCLE_SUM
+    assert ">>> WARNING" not in text
+    avg = sum(docs) / cfg.n_docs
+    assert f"Average SITs per doc: {avg:.2f}" in text
+
+
+def test_generation_compiles_without_codegen_fallback(spark, tmp_path):
+    """The generation plans compile: with Spark's codegen fallback off,
+    a generated method over the JVM's 64 KB limit fails the query
+    instead of silently running interpreted. Covers the sink's SQL
+    (as perfbench builds it), q61 and the validation report."""
+    from synthetic_data_pipeline_spark import state
+    from synthetic_data_pipeline_spark.operators.generation import (
+        _rendered_cte,
+        q61_gen_corpus_stats,
+        write_validation_report,
+    )
+
+    key = "spark.sql.codegen.fallback"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        # memoised frames were planned under the old setting
+        state.clear()
+        d = _DIALECTS["spark"]
+        sql = expand_u16(
+            f"WITH {_gen_ctes(DEFAULT_CONFIG, d)}, {_rendered_cte(d)} "
+            "SELECT doc_id, format, text FROM rendered",
+            "spark",
+        )
+        # collect, not count: a count prunes the text and its dispatch
+        rows = spark.sql(sql).collect()
+        assert len(rows) == DEFAULT_CONFIG.n_docs
+        assert all(r.text for r in rows)
+        assert q61_gen_corpus_stats(spark, "").count() == len(
+            DEFAULT_CONFIG.formats
+        )
+        text = write_validation_report(spark, str(tmp_path / "r.txt"))
+        assert "No issues detected" in text
+    finally:
+        spark.conf.set(key, prev)
+        state.clear()
+
+
+def test_filler_closed_form_matches_lambda(spark):
+    """The Spark pad (closed form over the doc's period string) equals
+    the DuckDB pad (one filler word per position, mapped by a lambda)
+    for every doc_id % 16 residue, at lengths around the period. DuckDB
+    joins an empty list to NULL, which its concat reads as ''."""
+    import math
+
+    import duckdb
+
+    from synthetic_data_pipeline_spark.plans.generate import FILLER_WORDS
+
+    rows = []
+    for r in range(len(FILLER_WORDS)):
+        period = math.lcm(len(FILLER_WORDS), 7 + r % 4)
+        for doc in (r, r + 16 * 37):
+            for n in (0, 1, period - 1, period, period + 1, 4000):
+                rows.append(f"({doc}, {n})")
+    values = ", ".join(rows)
+
+    def pads(dialect, run):
+        fill = _DIALECTS[dialect]["fill"]("n")
+        sql = (
+            f"SELECT doc_id, n, coalesce({fill}, '') AS pad FROM "
+            f"(SELECT CAST(d AS BIGINT) AS doc_id, CAST(k AS INT) AS n "
+            f"FROM (VALUES {values}) AS t(d, k)) AS v"
+        )
+        return {(doc, n): pad for doc, n, pad in run(sql)}
+
+    spark_pads = pads("spark", lambda q: map(tuple, spark.sql(q).collect()))
+    duck_pads = pads("duckdb", lambda q: duckdb.connect().execute(q).fetchall())
+    assert len(spark_pads) == len(rows)
+    assert spark_pads == duck_pads
+    for (doc, n), pad in spark_pads.items():
+        assert (len(pad.split(" ")) if pad else 0) == n, (doc, n)

@@ -72,6 +72,30 @@ def test_rendition_dispatch_and_roundtrip(spark, docs):
         assert " ".join(x.out.split()) == " ".join(x.text.split())
 
 
+def test_render_row_dispatch():
+    """Per-row dispatch of the single rendition UDF, as plain Python:
+    each format renders exactly the renditions it calls for."""
+    import email
+
+    from synthetic_data_pipeline_spark.sources.renditions import render_row
+
+    assert render_row("chat", "hi", "document 5") == (None, None, None)
+    docx, pdf, eml = render_row("pdf", "body", "document 2")
+    assert docx is not None and pdf is not None and eml is None
+    docx, pdf, eml = render_row("document", "body", "document 3")
+    assert docx is not None and pdf is None and eml is None
+    docx, pdf, eml = render_row("email", "body", "document 1")
+    assert docx is None and pdf is None
+    assert not email.message_from_bytes(eml).is_multipart()
+    docx, pdf, eml = render_row("email_with_attachment", "body", "document 4")
+    assert docx is None and pdf is None
+    names = [
+        p.get_filename() for p in email.message_from_bytes(eml).walk()
+        if p.get_filename()
+    ]
+    assert names == ["mapping.xlsx"]
+
+
 def test_file_sink_and_binary_scan(spark, docs, tmp_path):
     out = str(tmp_path / "files")
     named = add_renditions(docs).filter(F.col("eml").isNotNull()).select(
