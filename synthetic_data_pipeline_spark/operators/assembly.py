@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.grams import tokens
 from ..functions.ranking import global_cumsum
 from ..functions.rounding import eround
 from ..functions.xsql import expand_u16, hash_u16
@@ -900,9 +901,7 @@ def _funnel_base(train: DataFrame) -> DataFrame:
     (the batch capstone AND each streaming micro-batch build exactly
     this frame): token count, distinct-ratio, normalized-text hash,
     and the s1 quality flag."""
-    from .textops import _tokens
-
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     n_tokens = F.size(toks)
     dr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
     norm_h = F.md5(

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import state
+from ..functions.grams import tokens
 from ..functions.rounding import eround
 from ..sources.tables import fan_out_scan, load_table
 
@@ -40,9 +41,7 @@ def distinct_tokens(docs: DataFrame) -> DataFrame:
     """(doc_id, token) — distinct whitespace tokens per document."""
     return docs.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-        ).alias("token"),
+        F.explode(F.array_distinct(tokens(F.col("text")))).alias("token"),
     )
 
 
@@ -52,7 +51,7 @@ def distinct_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     explode+window shuffle; 1-based element_at mirrors DuckDB's list
     indexing so the oracle is expression-for-expression identical).
     """
-    arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    arr = tokens(F.col("text"))
     docs = docs.select("doc_id", arr.alias("arr"))
     shingles = F.when(
         F.size("arr") >= n,
@@ -1347,6 +1346,33 @@ def incremental_dedup_from_index(
     )
 
 
+def evolving_dedup_batch(
+    spark: SparkSession, path: str, batch_df: DataFrame, batch_id: int
+) -> DataFrame:
+    """One micro-batch of q118's stream with an EVOLVING index: check
+    the batch against everything indexed SO FAR and against its own
+    members (within_batch_dups), then admit it (dedup_index_update's
+    idempotent batch partitions). So a near-dup pair is flagged on the
+    later doc whether the two arrive in the same micro-batch or in
+    different ones. REPLAY-CLEAN: the index probe anti-joins its hits
+    against the batch's own doc_ids, so a replayed batch (whose
+    partitions the index already holds) emits exactly the rows a
+    no-crash run would — no self-pairs, no doubled intra-batch pairs.
+    With a single batch the rows equal q118 ∪
+    within_batch_dups(arrivals) exactly."""
+    own_ids = batch_df.select(F.col("doc_id").alias("dup_of"))
+    idx_hits = incremental_dedup_from_index(spark, path, batch_df).join(
+        own_ids, "dup_of", "anti"
+    )
+    hits = (
+        idx_hits.select("new_doc_id", "dup_of", "jaccard")
+        .unionByName(within_batch_dups(batch_df))
+        .localCheckpoint()  # materialize BEFORE the index evolves
+    )
+    dedup_index_update(spark, path, batch_df, batch_id)
+    return hits
+
+
 def q118_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = token_state(spark, sf_dir)
     out = incremental_near_dups(
@@ -1503,7 +1529,7 @@ def _span_totals(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     are absent, exactly like the exploded count). Replaces a full
     corpus gram explode wherever a consumer only needed the
     denominator (q131/q180/q135 and the gate twins)."""
-    arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    arr = tokens(F.col("text"))
     return docs.select(
         "doc_id",
         "source",
@@ -1519,7 +1545,7 @@ def _span_grams(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     tier ran its explode in ONE task at sf0.1 — q131 2.41 s -> 1.05 s
     with the fan-out; no-op when the input already has ≥cores splits)."""
     docs = fan_out_scan(docs.sparkSession, docs)
-    arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    arr = tokens(F.col("text"))
     base = docs.select("doc_id", "source", arr.alias("arr"))
     grams = F.when(
         F.size("arr") >= n,
@@ -1901,7 +1927,7 @@ def span_gate_batch_longest(
     the gaps-and-islands window, and each doc comes back with its
     longest verbatim overlap + the admit verdict. Per-doc outcomes are
     IDENTICAL to q135's for the same docs (asserted by
-    test_incremental_span_gate_stream_equals_batch)."""
+    test_twin_sink_equals_batch[incremental_span_gate])."""
     return _longest_gate(batch_df, spark.read.parquet(index_path))
 
 
@@ -1912,7 +1938,7 @@ def span_gate_batch(
     vs the persisted index. Per-doc outcomes are IDENTICAL to q132's
     for the same docs — the index is state, so batch boundaries can't
     change any answer (asserted by
-    test_incremental_spans_stream_equals_batch)."""
+    test_twin_sink_equals_batch[incremental_spans])."""
     index = spark.read.parquet(index_path)
     flagged = (
         _span_grams(batch_df)
@@ -1951,7 +1977,7 @@ def _span_grams_pos(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     grams hashed to the 64-bit _gram_key before any shuffle, same as the q131 tier).
     Fans out the scan first — see _span_grams."""
     docs = fan_out_scan(docs.sparkSession, docs)
-    arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    arr = tokens(F.col("text"))
     base = docs.select("doc_id", "source", arr.alias("arr")).filter(
         F.size("arr") >= n
     )
@@ -2221,7 +2247,7 @@ def _rewrite_without_spans(
         .groupBy("doc_id")
         .agg(F.sort_array(F.collect_set("cpos")).alias("cov"))
     )
-    arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    arr = tokens(F.col("text"))
     base = docs.select("doc_id", "source", arr.alias("arr"))
     return (
         base.join(covered, "doc_id")
@@ -2252,7 +2278,7 @@ def dedup_span_strip_stats(docs: DataFrame) -> DataFrame:
     """Per-source accounting for the q157 strip — tokens kept/removed
     and docs touched, the number a corpus owner reads before shipping
     the deduplicated text."""
-    arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    arr = tokens(F.col("text"))
     totals = (
         docs.select("source", F.size(arr).alias("n_tok"))
         .groupBy("source")
@@ -2397,7 +2423,7 @@ def span_strip_batch(
     twin; shares write_span_index's persisted distinct-gram table with
     the q132/q135 twins). Per-doc outcomes are IDENTICAL to q159's for
     the same docs — the index is state, so batch boundaries can't
-    change any answer (test_incremental_span_strip_stream_equals_batch)."""
+    change any answer (test_twin_sink_equals_batch[incremental_span_strip])."""
     return _strip_against_index(batch_df, spark.read.parquet(index_path))
 
 

@@ -577,7 +577,7 @@ _Q151_ORACLE = f"""
 # upstream). q121 measures the same divergence across SOURCES of the
 # document corpus; this is its TIME axis over the event stream, and
 # the shape a streaming deployment would run against a persisted
-# baseline (streaming/jobs.py::drift_monitor_stream).
+# baseline (streaming/jobs.py::TWINS["drift_monitor"]).
 #
 # Scale shape: one (day, type) hash agg over the stream (map-side
 # combined), then all arithmetic runs on the days×types table —
@@ -1391,9 +1391,65 @@ def q211_transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def transition_counts_from_sink(spark: SparkSession, out_dir: str) -> DataFrame:
     """Re-sum the streamed per-batch (from_type, to_type, n) partials —
     counts are additive, so the union of any batch split equals the
-    whole-history frame (transition_counts_stream's contract)."""
+    whole-history frame (transition_counts_batch's contract)."""
     df = spark.read.option("basePath", out_dir).parquet(out_dir)
     return df.groupBy("from_type", "to_type").agg(F.sum("n").alias("n"))
+
+
+def transition_counts_batch(
+    spark: SparkSession, state_dir: str, batch_df: DataFrame, batch_id: int
+) -> DataFrame:
+    """One micro-batch of the q185/q211 transition chain: returns the
+    batch's ADDITIVE (from_type, to_type, n) partial — its within-batch
+    transitions PLUS the boundary transition from each user's carried
+    last event into the batch's first — so the re-summed sink equals
+    transition_counts over everything ingested
+    (transition_counts_from_sink). Cross-batch state is ONE row per user
+    (the latest (ts, event_id, event_type)), versioned per batch id
+    under ``state_dir``: a replayed batch reads its ORIGINAL predecessor
+    version and rewrites its own, so it lands identically (the
+    shard_append_batch contract; a long-lived deployment compacts old
+    versions). Assumes each user's events arrive in (ts, event_id)
+    order ACROSS batches — the per-key ordering a partitioned log gives;
+    out-of-order arrival would need watermark-delayed replay, which the
+    windowed twins cover. Per-batch work is batch-sized: a lag window
+    over state ∪ batch partitioned by user, one alphabet²-bounded count
+    agg and one per-user max agg; nothing rescans the history."""
+    import glob
+
+    cols = ["user_id", "ts", "event_id", "event_type"]
+    un = batch_df.select(*cols).withColumn("_is_state", F.lit(0))
+    versions = sorted(
+        v
+        for v in (int(p.rsplit("=", 1)[1]) for p in glob.glob(f"{state_dir}/v=*"))
+        if v < batch_id
+    )
+    if versions:
+        prev = spark.read.parquet(f"{state_dir}/v={versions[-1]}").select(*cols)
+        un = prev.withColumn("_is_state", F.lit(1)).unionByName(un)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    gap_s = F.col("ts").cast("long") - F.lag("ts").over(w).cast("long")
+    partial = (
+        un.select(
+            "_is_state",
+            F.lag("event_type").over(w).alias("from_type"),
+            F.col("event_type").alias("to_type"),
+            gap_s.alias("gap_s"),
+        )
+        .filter(
+            (F.col("_is_state") == 0)
+            & F.col("from_type").isNotNull()
+            & (F.col("gap_s") <= TRANSITION_GAP_MIN * 60)
+        )
+        .groupBy("from_type", "to_type")
+        .agg(F.count("*").alias("n"))
+    )
+    un.groupBy("user_id").agg(
+        F.max(F.struct("ts", "event_id", "event_type")).alias("m")
+    ).select("user_id", "m.*").write.mode("overwrite").parquet(
+        f"{state_dir}/v={batch_id}"
+    )
+    return partial
 
 
 _Q211_ORACLE = f"""

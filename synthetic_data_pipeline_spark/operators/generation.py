@@ -614,12 +614,14 @@ _FAIL_INFLATE_MOD = 5
 _FAIL_INFLATE_BY = 2
 
 
-def validation_failures(pairs) -> "DataFrame":
+def validation_failures(pairs, *keep: str) -> "DataFrame":
     """Failure rows from a (doc_id, sit_id, label, instances, ms) pair
     relation: TP pairs with fewer real matches than max(1, instances)
     (validator.py:303-318) and FP pairs with any real match
     (validator.py:319-330). ``ms`` is the already-placeholder-filtered
-    match list, so ``size(ms)`` is the reference's ``found_real``."""
+    match list, so ``size(ms)`` is the reference's ``found_real``.
+    ``keep`` names pair columns carried through (the report's sample
+    reads ``ms``)."""
     from pyspark.sql import functions as F
 
     needed = (
@@ -637,6 +639,7 @@ def validation_failures(pairs) -> "DataFrame":
             "label",
             needed.alias("needed"),
             F.size("ms").cast("long").alias("found"),
+            *keep,
         )
         .withColumn(
             "issue_type",
@@ -792,15 +795,7 @@ def write_validation_report(
     if inject:
         pairs = inject_faults(pairs)
     issues = (
-        pairs
-        .withColumn("found", found)
-        .withColumn(
-            "needed",
-            F.when(tp, F.greatest(F.lit(1), F.col("instances"))).otherwise(F.lit(0)),
-        )
-        .filter(
-            (tp & (F.col("found") < F.col("needed"))) | (fp & (F.col("found") > 0))
-        )
+        validation_failures(pairs, "ms")
         .select(
             "doc_id", "sit_id", "label", "found", "needed",
             F.slice(F.array_distinct("ms"), 1, 5).alias("sample"),

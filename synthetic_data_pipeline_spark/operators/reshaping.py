@@ -31,7 +31,7 @@ PRICE_LO, PRICE_HI = 800.0, 600_000.0  # o_totalprice domain padding
 # the property t-digest needs merge logic for and this gets for free)
 # and a read side (quantiles_from_hist), so the same core serves the
 # batch query, a persisted incremental index, and the streaming twin
-# (streaming/jobs.py::hist_index_stream) — the evolving-state pattern
+# (streaming/jobs.py::TWINS["hist_index"]) — the evolving-state pattern
 # (BM25/dedup/spans/clusters/shards/IVF) extended to ORDER STATISTICS.
 def price_hist(orders: DataFrame) -> DataFrame:
     """(bucket, n) fixed-width histogram partial — additive: the hist

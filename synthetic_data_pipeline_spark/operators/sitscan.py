@@ -24,6 +24,7 @@ from ..plans.catalog import (
     is_placeholder,
     is_placeholder_duckdb,
 )
+from ..functions.grams import tokens
 from ..sources.tables import load_table
 
 
@@ -399,9 +400,7 @@ def q167_pii_density(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .select(
             "source",
-            F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-                "n_tok"
-            ),
+            F.size(tokens(F.col("text"))).alias("n_tok"),
         )
         .groupBy("source")
         .agg(F.count("*").alias("n_docs"), F.sum("n_tok").alias("n_tokens"))

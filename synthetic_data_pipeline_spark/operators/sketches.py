@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import state
+from ..functions.grams import tokens
 from ..functions.xsql import hash_u16
 from ..functions.rounding import eround
 from ..sources.tables import fan_out_scan, load_table
@@ -571,12 +572,10 @@ def cluster_representatives(
     max-then-min-id pattern — no window, no max_by nondeterminism.
 
     ``labels``: (node, label) as produced by the cluster funnel."""
-    from .textops import _tokens
-
     q = docs.select(
         "doc_id",
         "source",
-        F.size(F.array_distinct(_tokens(F.col("text")))).alias("q"),
+        F.size(F.array_distinct(tokens(F.col("text")))).alias("q"),
     )
     m = q.join(labels.withColumnRenamed("node", "doc_id"), "doc_id")
     agg = m.groupBy("label").agg(
@@ -1191,7 +1190,7 @@ def q59_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("token"),
+        F.explode(tokens("text")).alias("token"),
     )
     freqs = toks.groupBy("doc_id", "lang", "token").agg(
         F.count("*").alias("cnt")
@@ -1248,7 +1247,7 @@ def q117_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("token")
+        F.explode(tokens("text")).alias("token")
     )
     counts = toks.groupBy("token").agg(F.count("*").alias("exact_n"))
 
@@ -1983,10 +1982,8 @@ def q204_weighted_length_quantiles(
 ) -> DataFrame:
     from pyspark.sql import Window
 
-    from .textops import _tokens
-
     docs = load_table(spark, sf_dir, "documents")
-    per_doc = docs.select(F.size(_tokens(F.col("text"))).alias("x"))
+    per_doc = docs.select(F.size(tokens(F.col("text"))).alias("x"))
     hist = sorted(
         (r.bucket, r.n)
         for r in dds_hist_weighted(

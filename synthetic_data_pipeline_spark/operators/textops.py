@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import state
+from ..functions.grams import tokens
 from ..functions.rounding import eround
 from ..sources.tables import load_table
 
@@ -28,11 +29,6 @@ _LANG_MARKERS: dict[str, list[str]] = {
     "fr": ["le", "la", "les"],
     "zh": ["的", "了", "是"],
 }
-
-
-def _tokens(col):
-    """Whitespace tokens of a trimmed, lowercased text column."""
-    return F.split(F.lower(F.trim(col)), r"\s+")
 
 
 def _bigram_array(arr_col: str = "arr"):
@@ -55,7 +51,7 @@ def _bigram_array(arr_col: str = "arr"):
 # --- q40: token counting (north star "token counting").
 def q40_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     return (
         docs.select("lang", F.size(toks).alias("n_tokens"), "n_chars")
         .groupBy("lang")
@@ -114,7 +110,7 @@ def q41_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 # distinct-token ratio, mean token length — aggregated per source.
 def q42_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     n_tokens = F.size(toks)
     n_distinct = F.size(F.array_distinct(toks))
     nospace_len = F.length(F.replace(F.lower(F.trim(F.col("text"))), F.lit(" "), F.lit("")))
@@ -162,7 +158,7 @@ def q43_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q44_trigram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", "lang", F.posexplode(_tokens(F.col("text"))).alias("pos", "token")
+        "doc_id", "lang", F.posexplode(tokens(F.col("text"))).alias("pos", "token")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     tri = toks.select(
@@ -196,7 +192,7 @@ def q49_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe = F.size(
         F.regexp_extract_all(F.lower(F.col("text")), F.lit(BPE_PATTERN), 0)
     )
-    ws = F.size(_tokens(F.col("text")))
+    ws = F.size(tokens(F.col("text")))
     return (
         docs.select("lang", bpe.alias("bpe_tokens"), ws.alias("ws_tokens"))
         .groupBy("lang")
@@ -220,7 +216,7 @@ def q49_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q66_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", "lang", F.posexplode(_tokens(F.col("text"))).alias("pos", "token")
+        "doc_id", "lang", F.posexplode(tokens(F.col("text"))).alias("pos", "token")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     tri = toks.select(
@@ -262,7 +258,7 @@ def q67_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count() action — a second action re-reads the scan at 100 TB)
     n_df = docs.agg(F.count("*").cast("double").alias("_n_docs"))
     toks = docs.select(
-        "doc_id", F.explode(_tokens(F.col("text"))).alias("token")
+        "doc_id", F.explode(tokens(F.col("text"))).alias("token")
     )
     tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("cnt"))
     doc_len = toks.groupBy("doc_id").agg(F.count("*").alias("len"))
@@ -331,7 +327,7 @@ QF_MIN_DISTINCT = 0.32
 def quality_drop_expr(docs: DataFrame) -> DataFrame:
     """(doc_id, source, qdrop) — q97's drop decision as a flag frame,
     shared by q192's stage-overlap audit so the two can't drift."""
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     n_tokens = F.size(toks)
     dr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
     return docs.select(
@@ -343,7 +339,7 @@ def quality_drop_expr(docs: DataFrame) -> DataFrame:
 
 def q97_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     n_tokens = F.size(toks)
     dr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
     per_doc = docs.select("doc_id", n_tokens.alias("n_tokens"), dr.alias("dr"))
@@ -423,7 +419,7 @@ def q102_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.xsql import expand_u16, hash_u16
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     n_tokens = F.size(toks)
     dr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
     kept = docs.select("doc_id", "lang", "n_chars", "text",
@@ -507,7 +503,7 @@ def distinct_ngrams(docs: DataFrame, n: int = DECON_N) -> DataFrame:
     from ..sources.tables import fan_out_scan
 
     docs = fan_out_scan(docs.sparkSession, docs)
-    arr = _tokens(F.col("text"))
+    arr = tokens(F.col("text"))
     grams_arr = F.when(
         F.size("arr") >= n,
         F.transform(
@@ -629,7 +625,7 @@ REP_TTR_MIN = 0.35
 
 def repetition_doc_signals(docs: DataFrame) -> DataFrame:
     """(doc_id, source, ttr, top_tok_frac, top_bigram_frac) per doc."""
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     base = docs.select(
         "doc_id",
         "source",
@@ -756,7 +752,7 @@ def doc_perplexity(docs: DataFrame) -> DataFrame:
     # the explode (see dsir_weights) — the model-count aggregates are
     # map-side-combined, so the re-reads are cheap scans
     base = docs.select(
-        "doc_id", "source", _tokens(F.col("text")).alias("arr")
+        "doc_id", "source", tokens(F.col("text")).alias("arr")
     )
     bg = base.select(
         "doc_id", "source", F.explode(_bigram_array()).alias("bg")
@@ -859,7 +855,7 @@ def bigram_lm_export(docs: DataFrame, k: int = LM_TOP_K) -> DataFrame:
     top-k runs over the VOCAB-bounded c12 table."""
     from .relational import ranked_topk
 
-    base = docs.select(_tokens(F.col("text")).alias("arr"))
+    base = docs.select(tokens(F.col("text")).alias("arr"))
     bg = base.select(F.explode(_bigram_array()).alias("bg"))
     c12 = bg.groupBy("bg").agg(F.count("*").alias("c12"))
     c1 = (
@@ -1006,7 +1002,7 @@ _Q111_ORACLE = f"""
 def q121_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "source", F.explode(_tokens(F.col("text"))).alias("token")
+        "source", F.explode(tokens(F.col("text"))).alias("token")
     )
     st = toks.groupBy("source", "token").agg(F.count("*").alias("c_st"))
     totals = st.groupBy("token").agg(F.sum("c_st").alias("c_t"))
@@ -1095,7 +1091,7 @@ def _dsir_grams(docs: DataFrame) -> DataFrame:
     from ..sources.tables import fan_out_scan
 
     docs = fan_out_scan(docs.sparkSession, docs)
-    arr = _tokens(F.col("text"))
+    arr = tokens(F.col("text"))
     bi = F.when(
         F.size("arr") >= 2,
         F.transform(
@@ -1267,7 +1263,7 @@ def _bpe_stages(
     q128 consumes the rules; q129 consumes the per-stage word tables
     (the compression curve)."""
     words = (
-        docs.select(F.explode(_tokens(F.col("text"))).alias("w"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count("*").alias("n"))
@@ -1509,7 +1505,7 @@ def bpe_encode_docs(
     )
     sample = docs.filter((F.col("doc_id") % doc_mod) == 0)
     toks = sample.select(
-        "doc_id", F.posexplode(_tokens(F.col("text"))).alias("wpos", "w")
+        "doc_id", F.posexplode(tokens(F.col("text"))).alias("wpos", "w")
     ).filter(F.length("w") > 0)
     syms = toks.join(wordmap, "w").select(
         "doc_id",
@@ -1581,7 +1577,7 @@ def tokenizer_fertility(
         F.size(F.split("ws", " ")).alias("n_syms"),
     )
     lwc = (
-        docs.select("lang", F.explode(_tokens(F.col("text"))).alias("w"))
+        docs.select("lang", F.explode(tokens(F.col("text"))).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("lang", "w")
         .agg(F.count("*").alias("cnt"))
@@ -1758,7 +1754,7 @@ def corpus_diversity(docs: DataFrame) -> DataFrame:
     second |sources| x |vocab|-bounded aggregate — the two-level
     count-distinct pattern, never ``countDistinct`` over a skewed
     corpus column. Reference parity: none; LLM-pipeline extension."""
-    base = docs.select("source", _tokens(F.col("text")).alias("arr"))
+    base = docs.select("source", tokens(F.col("text")).alias("arr"))
     uni = (
         base.select("source", F.explode("arr").alias("w"))
         .filter(F.length("w") > 0)
@@ -1928,7 +1924,7 @@ def _pos_ngrams(docs: DataFrame, n: int = DECON_N) -> DataFrame:
     from ..sources.tables import fan_out_scan
 
     docs = fan_out_scan(docs.sparkSession, docs)
-    arr = _tokens(F.col("text"))
+    arr = tokens(F.col("text"))
     base = docs.select("doc_id", "source", arr.alias("arr"))
     return base.select(
         "doc_id",
@@ -1994,7 +1990,7 @@ def boilerplate_clean_stats(docs: DataFrame) -> DataFrame:
     """Per-source accounting for the q155 strip: docs_touched,
     tokens_total, tokens_removed, removed_share — the number a pipeline
     owner reads before shipping the cleaned corpus."""
-    arr = _tokens(F.col("text"))
+    arr = tokens(F.col("text"))
     totals = (
         docs.select("source", F.size(arr).alias("n_tok"))
         .groupBy("source")
@@ -2095,7 +2091,7 @@ def decon_strip_batch(
     streaming twin): flag against the PERSISTED benchmark gram index
     (broadcast — benchmark-sized by construction), rewrite with the
     shared covered-position pass. Per-doc outcomes are IDENTICAL to
-    q160's for the same docs (test_decon_strip_stream_equals_batch)."""
+    q160's for the same docs (test_twin_sink_equals_batch[decon_strip])."""
     from .dedup import _rewrite_without_spans
 
     bench = spark.read.parquet(index_path)
@@ -2419,7 +2415,7 @@ def bm25_stats(docs: DataFrame):
     ``source`` so callers can restrict query/candidate sides by feed
     (q172's cross-source decontamination) without a join-back."""
     toks = docs.select(
-        "doc_id", "source", _tokens(F.col("text")).alias("arr")
+        "doc_id", "source", tokens(F.col("text")).alias("arr")
     ).select("doc_id", "source", F.explode(_bigram_array()).alias("token"))
     tf = toks.groupBy("doc_id", "source", "token").agg(
         F.count("*").alias("cnt")
@@ -2683,7 +2679,7 @@ def bm25_from_index(
     stats = spark.read.parquet(f"{index_dir}/stats")
     dfreq = spark.read.parquet(f"{index_dir}/dfreq")
     qtoks = new_docs.select(
-        F.col("doc_id").alias("query_id"), _tokens(F.col("text")).alias("arr")
+        F.col("doc_id").alias("query_id"), tokens(F.col("text")).alias("arr")
     ).select("query_id", F.explode(_bigram_array()).alias("token"))
     qtf = qtoks.groupBy("query_id", "token").agg(F.count("*").alias("cnt"))
     return bm25_topk(bm25_query_terms(qtf, dfreq, stats), tf, dlen)
@@ -2822,7 +2818,7 @@ _Q164_ORACLE = f"""
 # the corpus is scanned once per signal family.
 def q169_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     norm = F.regexp_replace(
         F.lower(F.trim(F.col("text"))), F.lit(r"\s+"), F.lit(" ")
     )
@@ -3271,7 +3267,7 @@ def q181_doremi_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     per_doc = doc_perplexity(docs)
     ntok = docs.select(
-        "doc_id", F.size(_tokens(F.col("text"))).alias("n_tok")
+        "doc_id", F.size(tokens(F.col("text"))).alias("n_tok")
     )
     src = (
         per_doc.join(ntok, "doc_id")
@@ -3329,7 +3325,7 @@ def quality_features(docs: DataFrame) -> DataFrame:
     u16 = F.expr(
         expand_u16(hash_u16("CAST(doc_id AS STRING)", "qclf"), "spark")
     )
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     n_tokens = F.size(toks)
     nospace = F.length(
         F.replace(F.lower(F.trim(F.col("text"))), F.lit(" "), F.lit(""))
@@ -3497,7 +3493,7 @@ QUALITY_DROP_Q = 0.10
 
 def q190_calibrated_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = _tokens(F.col("text"))
+    toks = tokens(F.col("text"))
     score = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     per_doc = docs.select("source", score.alias("score"))
     loc = per_doc.groupBy("source").agg(
@@ -3765,7 +3761,7 @@ KEYNESS_TOP_K = 5
 def q186_source_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "source", F.explode(_tokens(F.col("text"))).alias("token")
+        "source", F.explode(tokens(F.col("text"))).alias("token")
     )
     # |sources|×vocab-bounded (Zipf) frame consumed four times (both
     # marginals, the corpus total, and the scored join) — the lazy
@@ -3867,7 +3863,7 @@ ZIPF_HEAD_K = 1024
 
 def q206_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("source", _tokens(F.col("text")).alias("arr"))
+    base = docs.select("source", tokens(F.col("text")).alias("arr"))
     counts = (
         base.select("source", F.explode("arr").alias("t"))
         .groupBy("source", "t")
@@ -3979,7 +3975,7 @@ def q207_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.ranking import global_analytics
 
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", _tokens(F.col("text")).alias("arr"))
+    base = docs.select("doc_id", tokens(F.col("text")).alias("arr"))
     tiled = global_analytics(
         base.select("doc_id", F.size("arr").alias("n_toks")),
         "doc_id",
@@ -4112,7 +4108,7 @@ SPAN_LP_MIN = -3.65
 def q209_span_lm_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     base = docs.select(
-        "doc_id", "source", _tokens(F.col("text")).alias("arr")
+        "doc_id", "source", tokens(F.col("text")).alias("arr")
     )
     bgp = base.filter(F.size("arr") >= 2).select(
         "doc_id", "source", F.posexplode(_bigram_array()).alias("pos", "bg")
@@ -4251,7 +4247,7 @@ def q210_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .relational import ranked_topk
 
     docs = load_table(spark, sf_dir, "documents")
-    base = docs.select(_tokens(F.col("text")).alias("arr"))
+    base = docs.select(tokens(F.col("text")).alias("arr"))
     tok = base.select(F.explode("arr").alias("t"))
     c1 = tok.groupBy("t").agg(F.count("*").alias("c"))
     n_tok = tok.agg(F.count("*").alias("n"))

@@ -4,16 +4,30 @@ answers on the static events table (SURVEY.md §2.10)."""
 
 from __future__ import annotations
 
+import os
+import shutil
+
+import pytest
 from pyspark.sql import functions as F
 
+from synthetic_data_pipeline_spark.operators.dedup import (
+    q132_incremental_spans,
+    q135_incremental_span_gate,
+    q159_incremental_span_strip,
+)
 from synthetic_data_pipeline_spark.operators.events import (
     q30_tumbling_hourly,
     q31_sliding_hourly,
     q35_first_event_per_user_type,
 )
+from synthetic_data_pipeline_spark.operators.textops import (
+    q160_decontaminate_strip,
+)
 from synthetic_data_pipeline_spark.streaming.jobs import (
+    TWINS,
     dedup_first_events,
     run_available_now,
+    run_twin,
     session_counts,
     sliding_counts,
     stream_events,
@@ -207,12 +221,9 @@ def test_incremental_dedup_stream_equals_batch(spark, sf_dir, tmp_path):
     from synthetic_data_pipeline_spark.operators.dedup import (
         q118_incremental_dedup,
     )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        incremental_dedup_stream,
-    )
 
     out = str(tmp_path / "incr")
-    n = incremental_dedup_stream(spark, sf_dir, out)
+    n, _ = run_twin("incremental_dedup", spark, sf_dir, out)
     assert n >= 1
     got = sorted(
         map(tuple, spark.read.option("basePath", out).parquet(out)
@@ -256,13 +267,9 @@ def test_pipeline_funnel_stream_equals_batch(spark, sf_dir, tmp_path):
     from synthetic_data_pipeline_spark.operators.assembly import (
         q122_pipeline_funnel,
     )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        pipeline_funnel_stream,
-    )
-    from pyspark.sql import functions as F
 
     out = str(tmp_path / "funnel")
-    n = pipeline_funnel_stream(spark, sf_dir, out)
+    n, _ = run_twin("pipeline_funnel", spark, sf_dir, out)
     assert n >= 1
     got = {
         r.split: (r.n_docs, r.n_tokens)
@@ -286,90 +293,80 @@ def test_pipeline_funnel_stream_equals_batch(spark, sf_dir, tmp_path):
     assert sum(v[0] for v in got.values()) == sum(v[0] for v in want.values())
 
 
-def test_incremental_spans_stream_equals_batch(spark, sf_dir, tmp_path):
-    """The q132 streaming twin: per-doc (n_pos, n_dup, dup_share) rows
-    landed by the foreachBatch sink must equal the batch query's rows
-    exactly — the gram index is persisted state, so batch boundaries
-    can't change any answer."""
-    from synthetic_data_pipeline_spark.operators.dedup import (
-        q132_incremental_spans,
-    )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        incremental_spans_stream,
-    )
-
-    out = str(tmp_path / "gate")
-    n = incremental_spans_stream(spark, sf_dir, out)
-    assert n >= 1
-    got = {
-        r.doc_id: (r.source, r.n_pos, r.n_dup, r.dup_share)
-        for r in spark.read.option("basePath", out).parquet(out).collect()
-    }
-    want = {
-        r.doc_id: (r.source, r.n_pos, r.n_dup, r.dup_share)
-        for r in q132_incremental_spans(spark, sf_dir).collect()
-    }
-    assert got == want
-    assert len(want) > 0
-
-
-def test_incremental_span_strip_stream_equals_batch(spark, sf_dir, tmp_path):
-    """The q159 streaming twin: per-doc cleaned-text rows landed by
-    the foreachBatch sink must equal the batch query's rows exactly
-    (clean_text string included) — the distinct-gram index is
-    persisted state, so batch boundaries can't change what gets
-    stripped."""
-    from synthetic_data_pipeline_spark.operators.dedup import (
+# Twins whose per-doc sink rows equal their batch query's rows on the
+# named columns: the q132/q135/q159 gates against the persisted
+# distinct-gram index and q160's strip against the bench gram index.
+SINK_ROWS = {
+    "incremental_spans": (
+        q132_incremental_spans, ("source", "n_pos", "n_dup", "dup_share")
+    ),
+    "incremental_span_gate": (
+        q135_incremental_span_gate,
+        ("source", "n_pos", "n_dup", "longest_span_words", "admit"),
+    ),
+    "incremental_span_strip": (
         q159_incremental_span_strip,
-    )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        incremental_span_strip_stream,
-    )
-
-    out = str(tmp_path / "strip")
-    n = incremental_span_strip_stream(spark, sf_dir, out)
-    assert n >= 1
-    got = {
-        r.doc_id: (r.source, r.tokens_before, r.tokens_removed,
-                   r.clean_text)
-        for r in spark.read.option("basePath", out).parquet(out).collect()
-    }
-    want = {
-        r.doc_id: (r.source, r.tokens_before, r.tokens_removed,
-                   r.clean_text)
-        for r in q159_incremental_span_strip(spark, sf_dir).collect()
-    }
-    assert got == want
-    assert len(want) > 0
-
-
-def test_decon_strip_stream_equals_batch(spark, sf_dir, tmp_path):
-    """The q160 streaming twin: per-doc cleaned-text rows landed by
-    the foreachBatch sink must equal the batch query's rows exactly
-    (clean_text strings included) — the bench gram index is fixed
-    state, so batch boundaries can't change what gets stripped."""
-    from synthetic_data_pipeline_spark.operators.textops import (
+        ("source", "tokens_before", "tokens_removed", "clean_text"),
+    ),
+    "decon_strip": (
         q160_decontaminate_strip,
-    )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        decontaminate_strip_stream,
-    )
+        ("source", "tokens_before", "tokens_removed", "clean_text"),
+    ),
+}
 
-    out = str(tmp_path / "decon")
-    n = decontaminate_strip_stream(spark, sf_dir, out)
+
+@pytest.mark.parametrize("twin", sorted(SINK_ROWS))
+def test_twin_sink_equals_batch(spark, sf_dir, tmp_path, twin):
+    """Per-doc rows landed by the foreachBatch sink must equal the batch
+    query's rows exactly (clean_text strings included): the gram index
+    is persisted state and every answer is computed per doc, so batch
+    boundaries can't change any answer or what gets stripped."""
+    batch, cols = SINK_ROWS[twin]
+    out = str(tmp_path / "sink")
+    n, _ = run_twin(twin, spark, sf_dir, out)
     assert n >= 1
     got = {
-        r.doc_id: (r.source, r.tokens_before, r.tokens_removed,
-                   r.clean_text)
+        r.doc_id: tuple(r[c] for c in cols)
         for r in spark.read.option("basePath", out).parquet(out).collect()
     }
     want = {
-        r.doc_id: (r.source, r.tokens_before, r.tokens_removed,
-                   r.clean_text)
-        for r in q160_decontaminate_strip(spark, sf_dir).collect()
+        r.doc_id: tuple(r[c] for c in cols)
+        for r in batch(spark, sf_dir).collect()
     }
     assert got == want
     assert len(want) > 0
+
+
+def test_every_twin_has_a_stream_equals_batch_test():
+    """A TWINS row without a stream-equals-batch test fails here: the
+    parametrized ids plus the twins that own a ``test_<twin>_stream…``
+    test must be exactly the table."""
+    custom = {
+        name for name in TWINS
+        if any(t.startswith(f"test_{name}_stream") for t in globals())
+    }
+    assert sorted(set(SINK_ROWS) | custom) == sorted(TWINS)
+
+
+def test_run_twin_state_rule(spark, sf_dir, tmp_path):
+    """run_twin uses a state directory the caller passes as it is (a
+    sentinel placed in it survives the drain) and builds state only into
+    a fresh directory of its own, which it returns."""
+    from synthetic_data_pipeline_spark.operators.sketches import (
+        write_label_index,
+    )
+
+    state = tmp_path / "labels"
+    write_label_index(spark, sf_dir, str(state))
+    (state / "_sentinel").write_text("caller-built")
+    n, used = run_twin(
+        "cluster_split", spark, sf_dir, str(tmp_path / "a"),
+        state_dir=str(state),
+    )
+    assert n >= 1 and used == str(state)
+    assert (state / "_sentinel").read_text() == "caller-built"
+    n, built = run_twin("cluster_split", spark, sf_dir, str(tmp_path / "b"))
+    assert n >= 1 and built != str(state) and os.listdir(built)
 
 
 def test_cluster_maintenance_stream_equals_full_recompute(
@@ -391,13 +388,9 @@ def test_cluster_maintenance_stream_equals_full_recompute(
     from synthetic_data_pipeline_spark.operators.sketches import (
         cc_star_labels,
     )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        cluster_maintenance_stream,
-    )
 
-    state = str(tmp_path / "state")
     out = str(tmp_path / "labels_out")
-    n = cluster_maintenance_stream(spark, sf_dir, out, state_dir=state)
+    n, state = run_twin("cluster_maintenance", spark, sf_dir, out)
     assert n >= 1
     got = sorted(
         map(tuple, spark.read.parquet(f"{state}/labels").collect())
@@ -424,36 +417,9 @@ def test_cluster_maintenance_stream_equals_full_recompute(
     assert sunk_nodes == new_final_nodes
 
 
-def test_incremental_span_gate_stream_equals_batch(spark, sf_dir, tmp_path):
-    """The q135 streaming twin: per-doc longest-span + admit rows
-    landed by the foreachBatch sink must equal the batch query's rows
-    exactly — the distinct-gram index is persisted state and runs are
-    computed per doc, so batch boundaries can't change any answer."""
-    from synthetic_data_pipeline_spark.operators.dedup import (
-        q135_incremental_span_gate,
-    )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        incremental_span_gate_stream,
-    )
-
-    out = str(tmp_path / "gate")
-    n = incremental_span_gate_stream(spark, sf_dir, out)
-    assert n >= 1
-    got = {
-        r.doc_id: (r.source, r.n_pos, r.n_dup, r.longest_span_words, r.admit)
-        for r in spark.read.option("basePath", out).parquet(out).collect()
-    }
-    want = {
-        r.doc_id: (r.source, r.n_pos, r.n_dup, r.longest_span_words, r.admit)
-        for r in q135_incremental_span_gate(spark, sf_dir).collect()
-    }
-    assert got == want
-    assert len(want) > 0
-
-
 def test_cluster_split_stream_equals_batch(spark, sf_dir, tmp_path):
     """The q145 streaming twin: per-doc split assignments landed by the
-    stream-static label join must equal the batch assignment exactly —
+    per-batch label join must equal the batch assignment exactly —
     the split key is the persisted cluster label (or the doc's own id),
     so batch boundaries cannot move any document across splits."""
     from synthetic_data_pipeline_spark.operators.sketches import (
@@ -461,12 +427,9 @@ def test_cluster_split_stream_equals_batch(spark, sf_dir, tmp_path):
         cluster_split_assignments,
     )
     from synthetic_data_pipeline_spark.sources.tables import load_table
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        cluster_split_stream,
-    )
 
     out = str(tmp_path / "split")
-    n = cluster_split_stream(spark, sf_dir, out)
+    n, _ = run_twin("cluster_split", spark, sf_dir, out)
     assert n >= 1
     got = {
         r.doc_id: (r.clustered, r.gkey, r.split)
@@ -492,14 +455,11 @@ def test_drift_monitor_stream_equals_batch(spark, sf_dir, tmp_path):
         q166_event_drift,
         write_type_baseline,
     )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        drift_monitor_stream,
-    )
 
     out = str(tmp_path / "counts")
     base = str(tmp_path / "baseline")
     write_type_baseline(spark, sf_dir, base)
-    n, base_out = drift_monitor_stream(spark, sf_dir, out, baseline_dir=base)
+    n, base_out = run_twin("drift_monitor", spark, sf_dir, out, state_dir=base)
     assert n >= 1 and base_out == base
     got = sorted(map(tuple, drift_report_from(spark, out, base).collect()))
     want = sorted(map(tuple, q166_event_drift(spark, sf_dir).collect()))
@@ -516,14 +476,11 @@ def test_bm25_retrieval_stream_equals_batch(spark, sf_dir, tmp_path):
         q164_bm25_retrieval,
         write_bm25_index,
     )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        bm25_retrieval_stream,
-    )
 
     out = str(tmp_path / "hits")
     idx = str(tmp_path / "bm25_index")
     write_bm25_index(spark, sf_dir, idx)
-    n = bm25_retrieval_stream(spark, sf_dir, out, index_dir=idx)
+    n, _ = run_twin("bm25_retrieval", spark, sf_dir, out, state_dir=idx)
     assert n >= 1
     got = sorted(
         (r.query_id, r.rk, r.doc_id, r.score)
@@ -551,14 +508,12 @@ def test_quality_score_stream_equals_batch(spark, sf_dir, tmp_path):
         quality_features,
     )
     from synthetic_data_pipeline_spark.sources.tables import load_table
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        quality_score_stream,
-    )
 
     out = str(tmp_path / "scored")
-    mp = str(tmp_path / "model.json")
+    state = str(tmp_path / "qclf")
+    mp = f"{state}/model.json"
     write_quality_model(spark, sf_dir, mp)
-    n = quality_score_stream(spark, sf_dir, out, model_path=mp)
+    n, _ = run_twin("quality_score", spark, sf_dir, out, state_dir=state)
     assert n >= 1
     got = sorted(
         (r.doc_id, r.quality_prob, r.predicted)
@@ -584,14 +539,11 @@ def test_shard_append_stream_equals_batch(spark, sf_dir, tmp_path):
         q183_incremental_shards,
         write_shard_state,
     )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        shard_append_stream,
-    )
 
     out = str(tmp_path / "manifest")
     state = str(tmp_path / "state")
     write_shard_state(spark, sf_dir, state)
-    n = shard_append_stream(spark, sf_dir, out, state_dir=state)
+    n, _ = run_twin("shard_append", spark, sf_dir, out, state_dir=state)
     assert n >= 1
     got = sorted(
         (r.shard_id, r.n_docs, r.shard_tokens, r.first_doc, r.last_doc)
@@ -662,9 +614,6 @@ def test_bm25_index_maintenance_stream(spark, sf_dir, tmp_path):
         write_bm25_index,
     )
     from synthetic_data_pipeline_spark.sources.tables import load_table
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        bm25_index_maintenance_stream,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
     old_dir = str(tmp_path / "old_corpus")
@@ -673,7 +622,10 @@ def test_bm25_index_maintenance_stream(spark, sf_dir, tmp_path):
     )
     idx = str(tmp_path / "idx")
     write_bm25_index(spark, old_dir, idx)
-    n = bm25_index_maintenance_stream(spark, sf_dir, idx)
+    n, _ = run_twin(
+        "bm25_index_maintenance", spark, sf_dir, str(tmp_path / "sink"),
+        state_dir=idx,
+    )
     assert n >= 1
     queries = docs.filter(F.col("doc_id") % BM25_QUERY_MOD == 0)
     got = sorted(map(tuple, bm25_from_index(spark, idx, queries).collect()))
@@ -682,20 +634,16 @@ def test_bm25_index_maintenance_stream(spark, sf_dir, tmp_path):
 
 
 def test_evolving_dedup_catches_cross_batch_dup(spark, tmp_path):
-    """Boundary-independent coverage, driven through the same calls
-    the stream's transform makes: twins arriving in the SAME batch are
+    """Boundary-independent coverage, driven through the evolving
+    twin's batch function: twins arriving in the SAME batch are
     flagged by within_batch_dups, twins split ACROSS batches by the
-    index probe — and re-running a batch's check after its own
-    admission (the replay case) emits exactly the same rows (no
-    self-pairs, no doubled intra-batch pairs)."""
-    from pyspark.sql import functions as F
-
+    index probe — and re-running a batch after its own admission (the
+    replay case) emits exactly the same rows (no self-pairs, no doubled
+    intra-batch pairs)."""
     from synthetic_data_pipeline_spark.operators.dedup import (
-        dedup_index_update,
         distinct_shingles,
-        incremental_dedup_from_index,
+        evolving_dedup_batch,
         minhash_signatures_from_tokens,
-        within_batch_dups,
     )
 
     dup = "alpha beta gamma delta epsilon zeta eta theta " * 4
@@ -718,29 +666,23 @@ def test_evolving_dedup_catches_cross_batch_dup(spark, tmp_path):
     # batch 2: doc 40 twins batch 1's doc 30 (cross-batch)
     b2 = spark.createDataFrame([(40, dup2 + " coda", "s")], schema)
 
-    def check(batch_df):
-        own = batch_df.select(F.col("doc_id").alias("dup_of"))
-        idx_hits = incremental_dedup_from_index(
-            spark, idx, batch_df
-        ).join(own, "dup_of", "anti")
+    def check_then_admit(batch_df, batch_id):
         return sorted(
             (r.new_doc_id, r.dup_of)
-            for r in idx_hits.select("new_doc_id", "dup_of", "jaccard")
-            .unionByName(within_batch_dups(batch_df))
-            .collect()
+            for r in evolving_dedup_batch(
+                spark, idx, batch_df, batch_id
+            ).collect()
         )
 
-    hits1 = check(b1)
-    dedup_index_update(spark, idx, b1, batch_id=0)
+    hits1 = check_then_admit(b1, 0)
     assert hits1 == [(21, 20)]  # same-batch twins caught
 
-    hits2 = check(b2)
-    dedup_index_update(spark, idx, b2, batch_id=1)
+    hits2 = check_then_admit(b2, 1)
     assert hits2 == [(40, 30)]  # cross-batch twins caught
 
     # replay: batch 1's partitions are already in the index — the
     # check must emit the SAME rows, not self-pairs/doubled twins
-    assert check(b1) == hits1
+    assert check_then_admit(b1, 0) == hits1
 
 
 def test_dedup_index_update_replay_idempotent(spark, tmp_path):
@@ -794,12 +736,9 @@ def test_evolving_dedup_stream_single_drain_equals_q118(
         within_batch_dups,
     )
     from synthetic_data_pipeline_spark.sources.tables import load_table
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        incremental_dedup_stream_evolving,
-    )
 
     out = str(tmp_path / "hits")
-    n = incremental_dedup_stream_evolving(spark, sf_dir, out)
+    n, _ = run_twin("evolving_dedup", spark, sf_dir, out)
     assert n >= 1
     got = sorted(
         (r.new_doc_id, r.dup_of, r.jaccard)
@@ -830,14 +769,11 @@ def test_hourly_anomaly_stream_equals_batch(spark, sf_dir, tmp_path):
         anomaly_report_from,
         q187_hourly_anomalies,
     )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        hourly_anomaly_stream,
-    )
 
     out = str(tmp_path / "counts")
     # default-arg path: the stream trains its own baseline and MUST
     # return where it put it, or the scorer can't run (ADVICE r11)
-    n, base = hourly_anomaly_stream(spark, sf_dir, out)
+    n, base = run_twin("hourly_anomaly", spark, sf_dir, out)
     assert n >= 1 and base
     got = sorted(map(tuple, anomaly_report_from(spark, out, base).collect()))
     want = sorted(map(tuple, q187_hourly_anomalies(spark, sf_dir).collect()))
@@ -861,9 +797,6 @@ def test_ivf_maintenance_stream_equals_batch(spark, sf_dir, tmp_path):
         write_ivf_index,
     )
     from synthetic_data_pipeline_spark.sources.tables import load_table
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        ivf_maintenance_stream,
-    )
 
     b = expand_u16(hash_u16("CAST(vec_id AS STRING)", "ivfbatch"), "spark")
     emb = (
@@ -876,7 +809,10 @@ def test_ivf_maintenance_stream_equals_batch(spark, sf_dir, tmp_path):
 
     idx = str(tmp_path / "ivf_index")
     write_ivf_index(old, idx)
-    n = ivf_maintenance_stream(spark, sf_dir, idx)
+    n, _ = run_twin(
+        "ivf_maintenance", spark, sf_dir, str(tmp_path / "sink"),
+        state_dir=idx,
+    )
     assert n >= 1
     got = sorted(map(tuple, ivf_drift_report(spark, idx).collect()))
     want = sorted(map(tuple, ivf_maintenance_report(old, new).collect()))
@@ -892,12 +828,9 @@ def test_cohort_retention_stream_equals_batch(spark, sf_dir, tmp_path):
         q193_cohort_retention,
         retention_from_sink,
     )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        cohort_retention_stream,
-    )
 
     out = str(tmp_path / "activity")
-    n = cohort_retention_stream(spark, sf_dir, out)
+    n, _ = run_twin("cohort_retention", spark, sf_dir, out)
     assert n >= 1
     got = sorted(map(tuple, retention_from_sink(spark, out).collect()))
     want = sorted(map(tuple, q193_cohort_retention(spark, sf_dir).collect()))
@@ -913,12 +846,9 @@ def test_dds_sketch_stream_equals_batch(spark, sf_dir, tmp_path):
         dds_quantiles_from_sink,
         q200_quantile_sketch,
     )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        dds_sketch_stream,
-    )
 
     out = str(tmp_path / "dds")
-    n = dds_sketch_stream(spark, sf_dir, out)
+    n, _ = run_twin("dds_sketch", spark, sf_dir, out)
     assert n >= 1
     got = sorted(map(tuple, dds_quantiles_from_sink(spark, out).collect()))
     want = sorted(
@@ -938,12 +868,9 @@ def test_token_budget_sketch_stream_equals_batch(spark, sf_dir, tmp_path):
         dds_weighted_quantiles_from_sink,
         q204_weighted_length_quantiles,
     )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        token_budget_sketch_stream,
-    )
 
     out = str(tmp_path / "tbudget")
-    n = token_budget_sketch_stream(spark, sf_dir, out)
+    n, _ = run_twin("token_budget_sketch", spark, sf_dir, out)
     assert n >= 1
     got = sorted(
         map(tuple, dds_weighted_quantiles_from_sink(spark, out).collect())
@@ -963,12 +890,9 @@ def test_hist_index_stream_equals_batch(spark, sf_dir, tmp_path):
         q79_histogram_quantiles,
         quantiles_from_sink,
     )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        hist_index_stream,
-    )
 
     out = str(tmp_path / "hist")
-    n = hist_index_stream(spark, sf_dir, out)
+    n, _ = run_twin("hist_index", spark, sf_dir, out)
     assert n >= 1
     got = sorted(map(tuple, quantiles_from_sink(spark, out).collect()))
     want = sorted(
@@ -992,9 +916,6 @@ def test_transition_stream_planted_boundaries(spark, tmp_path):
         transition_counts,
         transition_counts_from_sink,
         transition_entropy_from_counts,
-    )
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        transition_counts_stream,
     )
 
     T = dt.datetime(2025, 3, 1, 12, 0, 0)
@@ -1030,7 +951,7 @@ def test_transition_stream_planted_boundaries(spark, tmp_path):
 
     out = str(tmp_path / "trans")
     state = str(tmp_path / "state")
-    n = transition_counts_stream(spark, src, out, state)
+    n, _ = run_twin("transition", spark, src, out, state)
     assert n >= 3  # one micro-batch per slice file
 
     got = sorted(
@@ -1075,16 +996,15 @@ def test_transition_stream_sf_equals_batch(spark, sf_dir, tmp_path):
         transition_entropy_from_counts,
     )
     from synthetic_data_pipeline_spark.sources.tables import load_table
-    from synthetic_data_pipeline_spark.streaming.jobs import (
-        stream_events,
-        transition_counts_stream,
-    )
 
+    # the twin streams a directory of event slices: here, one slice
+    # holding the whole events table
+    src = tmp_path / "slices"
+    src.mkdir()
+    shutil.copyfile(f"{sf_dir}/events.parquet", src / "events.parquet")
     out = str(tmp_path / "trans")
     state = str(tmp_path / "state")
-    n = transition_counts_stream(
-        spark, sf_dir, out, state, incoming=stream_events(spark, sf_dir)
-    )
+    n, _ = run_twin("transition", spark, str(src), out, state)
     assert n >= 1
     got = sorted(
         map(tuple, transition_counts_from_sink(spark, out).collect())
