@@ -1,19 +1,22 @@
 """End-to-end generation pipeline queries (reference stages 1-2 + the
-validator, SURVEY.md §3.1-3.3) — assembled from the shared-dialect SQL
-in plans/generate.py and run through Spark's SQL front-end; the DuckDB
-oracle executes the SAME logical SQL with only engine-syntax swaps
-(numbers source, explode, list length/filter, ordered string agg,
-regex-literal escaping) and one independent form: the filler pad,
-closed-form on Spark and a per-word lambda on DuckDB.
+validator, SURVEY.md §3.1-3.3).
+
+Spark generates the corpus with the per-document kernel
+(plans/generate.py::generate_doc, one Arrow pandas UDF over
+``range(0, n_docs)``); DuckDB, the oracle, runs the shared generation
+SQL built in plans/generate.py. Both dialects expose the same CTE
+names and columns (``docs``, ``doc_sits``, ``vals``, ``rendered``), so
+every query text downstream of them is written once, and oracle parity
+compares two independent implementations of the generator.
 
 This makes generation itself oracle-checked — stronger than the
 reference, whose committed run fails its own validation
 (output/validation_report.txt:51-52).
 
-Scale shape: range() → narrow expressions → one explode (×sit_count) →
-one hash exchange on doc_id, which the render groupBy(doc) reuses →
-groupBy(sit) for the report. The one join is the validator's assigned
-(doc, SIT) pair ⋈ rendered doc, shuffle-hash on doc_id.
+Scale shape: range() → the kernel, one narrow map per document (no
+exchange before the rendition UDF) → per-(doc, SIT) pairs exploded
+from the kernel's slots beside their text → groupBy(sit) for the
+report.
 """
 
 from __future__ import annotations
@@ -28,40 +31,119 @@ from ..plans.catalog import (
     is_placeholder_spark_sql,
 )
 from ..functions.rounding import apply_sql_eround
-from ..functions.xsql import expand_u16
+from ..functions.xsql import expand_u16, hash_u16
 from ..plans.generate import (
+    CCN_BODY,
     DEFAULT_CONFIG,
+    FRAMES,
+    IBAN_BBAN,
+    PARA_BREAK,
     GenConfig,
-    ccn_body_sql,
+    concat_sql,
     doc_sits_sql,
     docs_sql,
-    filler_pad_sql,
     filler_word_sql,
-    iban_bban_sql,
+    kernel_call_sql,
+    register_kernel,
     sit_block_sql,
-    sit_value_chunks,
+    sit_value_sql,
+    slot_attrs_sql,
+    template_sql,
 )
+
+
+def _kernel_ctes(cfg: GenConfig, d: dict) -> str:
+    """Spark's generation CTEs: ``gen`` is the kernel's output per
+    document; ``docs``, ``doc_sits`` and ``vals`` read it, with the
+    shared SQL's names and columns."""
+    return f"""
+      gen AS (
+        SELECT id AS doc_id, k.format, k.word_count_target, k.text, k.slots
+        FROM (SELECT id, {kernel_call_sql(cfg)} AS k FROM range(0, {cfg.n_docs}))
+      ),
+      docs AS (
+        SELECT doc_id, format, word_count_target, size(slots) AS sit_count,
+               slots[0].slot AS slot_base
+        FROM gen
+      ),
+      gen_slots AS (
+        SELECT doc_id, format, word_count_target, inline(slots) FROM gen
+      ),
+      doc_sits AS (SELECT *, {slot_attrs_sql()} FROM gen_slots),
+      vals AS (SELECT *, {sit_block_sql()} AS block FROM doc_sits)
+    """
+
+
+def _sql_gen_ctes(cfg: GenConfig, d: dict) -> str:
+    """The oracle's generation CTEs: docs → slots → doc_sits → vals
+    (value + block), all in SQL."""
+    numbers = f"(SELECT range AS doc_id FROM range(0, {cfg.n_docs}))"
+    return f"""
+      docs AS ({docs_sql(cfg, numbers)}),
+      {doc_sits_sql(cfg, "docs", "unnest(range(0, sit_count))")},
+      vals0 AS (
+        SELECT *, {concat_sql(CCN_BODY)} AS ccn_body,
+               {concat_sql(IBAN_BBAN)} AS iban_bban
+        FROM doc_sits
+      ),
+      vals1 AS (SELECT *, {sit_value_sql("slot")} AS value FROM vals0),
+      vals AS (SELECT *, {sit_block_sql()} AS block FROM vals1)
+    """
+
+
+def _sql_rendered_cte(d: dict) -> str:
+    """docs rendered to text: the FRAMES header/footer of the doc's
+    format and template variant around the slot-ordered SIT blocks,
+    then the filler pad to the word target (content_generator.py:
+    275-303's per-format dispatch and :236-242's padding, but
+    deterministic)."""
+    v = f"({hash_u16('doc_id', 'tmplv')} % 2)"
+
+    def frame(side: int) -> str:
+        def variant(fmt: str) -> str:
+            a, b = (template_sql(t[side], {"d": "CAST(doc_id AS STRING)"})
+                    for t in FRAMES[fmt])
+            return a if a == b else f"(CASE WHEN {v} = 0 THEN {a} ELSE {b} END)"
+
+        whens = " ".join(
+            f"WHEN '{f}' THEN {variant(f)}" for f in FRAMES if f != "document"
+        )
+        return f"(CASE format {whens} ELSE {variant('document')} END)"
+
+    brk = template_sql(PARA_BREAK, {})
+    fill_n = f"greatest(word_count_target - {d['len']}(split(body, ' ')), 0)"
+    return f"""
+      bodies AS (
+        SELECT doc_id, format, word_count_target,
+               string_agg(block, ' ' ORDER BY slot) AS body
+        FROM vals
+        GROUP BY doc_id, format, word_count_target
+      ),
+      rendered AS (
+        SELECT doc_id, format, word_count_target,
+               concat({frame(0)}, {brk}, body, {brk}, {frame(1)}, ' ',
+                      {d["fill"](fill_n)}) AS text
+        FROM bodies
+      )
+    """
+
 
 _DIALECTS = {
     "spark": {
-        "numbers": "(SELECT id AS doc_id FROM range(0, {n}))",
-        "explode_j": "explode(sequence(0, sit_count - 1))",
+        "gen": _kernel_ctes,
+        "render": lambda d: (
+            "rendered AS (SELECT doc_id, format, word_count_target, text FROM gen)"
+        ),
         "len": "size",
         "filter": "filter",
-        "agg_body": (
-            "concat_ws(' ', transform(array_sort(collect_list(struct(slot, block))), "
-            "x -> x.block))"
-        ),
-        "fill": filler_pad_sql,
         "ph": is_placeholder_spark_sql,
         "esc": lambda pat: pat.replace("\\", "\\\\"),
     },
     "duckdb": {
-        "numbers": "(SELECT range AS doc_id FROM range(0, {n}))",
-        "explode_j": "unnest(range(0, sit_count))",
+        "gen": _sql_gen_ctes,
+        "render": _sql_rendered_cte,
         "len": "len",
         "filter": "list_filter",
-        "agg_body": "string_agg(block, ' ' ORDER BY slot)",
         "fill": lambda n: (
             f"array_to_string(list_transform(range(1, ({n}) + 1), "
             f"i -> {filler_word_sql()}), ' ')"
@@ -72,162 +154,22 @@ _DIALECTS = {
 }
 
 
-def _gen_ctes_base(cfg: GenConfig, d: dict) -> str:
-    """WITH-clause body up to vals0 (slots + SIT assignment + the two
-    named generator bodies) — the part whose expressions are all small
-    enough for one codegen unit."""
-    numbers = d["numbers"].format(n=cfg.n_docs)
-    return f"""
-      docs AS ({docs_sql(cfg, numbers)}),
-      {doc_sits_sql(cfg, "docs", d["explode_j"])},
-      vals0 AS (
-        SELECT *, {ccn_body_sql("slot")} AS ccn_body,
-               {iban_bban_sql("slot")} AS iban_bban
-        FROM doc_sits
-      )
-    """
-
-
-# Value-dispatch steps evaluated before the REPARTITION hint; the rest
-# run after it (see _gen_ctes).
-_PRE_EXCHANGE_STEPS = 2
-
-
 def _gen_ctes(cfg: GenConfig, d: dict) -> str:
-    """WITH-clause body: docs → slots → doc_sits → vals (value+block),
-    one text for both engines.
-
-    The value dispatch is a chain of projections, one TP chunk each:
-    step 0 takes the FP placeholder or the first TP chunk, and step i
-    keeps a non-NULL value or tries chunk i. One inlined dispatch is a
-    single generated JVM method over the 64 KB limit, so the stage
-    falls back to interpreted code. Chained projections alone do not
-    help, because whole-stage codegen puts them all in one method (a
-    projection gets its own method only when it reads every input
-    column twice). So a REPARTITION hint on doc_id (DuckDB reads it as
-    a comment) cuts the chain: the first ``_PRE_EXCHANGE_STEPS`` steps
-    compile with the slot generator, the rest in the stage after the
-    exchange, each stage well under the limit. The render aggregate
-    groups by doc_id, so it reuses that partitioning: one exchange per
-    generation plan."""
-    tp_chunks, fp_case = sit_value_chunks("slot")
-    steps = [f"CASE WHEN label = 'TP' THEN {tp_chunks[0]} ELSE {fp_case} END"] + [
-        f"CASE WHEN v{i - 1} IS NOT NULL THEN v{i - 1} ELSE {c} END"
-        for i, c in enumerate(tp_chunks[1:], 1)
-    ]
-    ctes, prev = [], "vals0"
-    for i, e in enumerate(steps):
-        if i == _PRE_EXCHANGE_STEPS:
-            ctes.append(
-                f"vals_p AS (SELECT /*+ REPARTITION({_gen_partitions(cfg)}, "
-                f"doc_id) */ * FROM {prev})"
-            )
-            prev = "vals_p"
-        ctes.append(f"vals_v{i} AS (SELECT *, {e} AS v{i} FROM {prev})")
-        prev = f"vals_v{i}"
-    chain = ",\n".join(ctes)
-    return f"""
-      {_gen_ctes_base(cfg, d)},
-      {chain},
-      vals1 AS (
-        SELECT *, coalesce(v{len(steps) - 1}, '?') AS value FROM {prev}
-      ),
-      vals AS (
-        SELECT *, {sit_block_sql()} AS block FROM vals1
-      )
-    """
-
-
-def _gen_partitions(cfg: GenConfig) -> int:
-    """Partition count sized to the configured corpus: ~5k docs per
-    partition, capped at 32 locally. The default 32-partition layout
-    launches ~500 near-empty tasks per generation query at the test
-    corpus size — pure scheduler overhead; at a 100 TB-scale config the
-    same formula grows the partition count linearly with n_docs."""
-    return max(2, min(32, cfg.n_docs // 5_000 + 2))
+    """WITH-clause body defining docs, doc_sits and vals in dialect ``d``."""
+    return d["gen"](cfg, d)
 
 
 def _rendered_cte(d: dict) -> str:
-    """docs rendered to text: per-format frame (header/footer) around
-    the ordered SIT blocks + filler pad to the word target
-    (content_generator.py:275-303's per-format dispatch and :236-242's
-    padding, but deterministic). Email formats get From/To/Subject
-    framing and a regards footer (EMAIL_TEMPLATE), email_with_attachment
-    adds the attachment note, document/pdf get the CONFIDENTIAL header
-    with the doc id and a closing line (build_document_text). Frame
-    prose is lowercase/digit-safe and the doc id is prefixed with a
-    letter ('d123') so no \\b-delimited digit run can reach another
-    SIT's pattern space. Each format draws one of TWO template variants
-    per doc (the reference ships two templates per format —
-    templates/email_templates.md 'Formal Invoice Email' / 'Short
-    Notification', doc_templates.md 'Employee Record' / 'Financial
-    Statement', chat_templates.md 'Support Chat' / 'Quick Exchange')."""
-    from ..functions.xsql import hash_u16
+    """WITH-clause body defining ``rendered`` (doc_id, format,
+    word_count_target, text); follows ``_gen_ctes``."""
+    return d["render"](d)
 
-    v = f"({hash_u16('doc_id', 'tmplv')} % 2)"
-    email_hdr = (
-        f"concat('from: records-desk at corp-mail to: billing-team at "
-        f"corp-mail subject: ', CASE WHEN {v} = 0 "
-        "THEN 'invoice payment details' "
-        "ELSE 'payment confirmation' END)"
-    )
-    doc_hdr = (
-        f"concat(CASE WHEN {v} = 0 "
-        "THEN 'confidential - employee record d' "
-        "ELSE 'financial statement - confidential d' END, "
-        "CAST(doc_id AS STRING))"
-    )
-    chat_hdr = (
-        f"(CASE WHEN {v} = 0 THEN 'support chat transcript follows' "
-        "ELSE 'quick exchange transcript follows' END)"
-    )
-    # the attachment email names ITS OWN attachment (letter-prefixed
-    # doc id keeps the digit run out of \b-pattern space) — the
-    # reference's email_with_attachment body references the generated
-    # attachment filename (content_generator.py:208-234)
-    att_name = "'report-d', CAST(doc_id AS STRING), '.xlsx'"
-    pre = (
-        "(CASE format "
-        f"WHEN 'email' THEN {email_hdr} "
-        "WHEN 'email_with_attachment' THEN concat('from: records-desk at "
-        "corp-mail to: billing-team at corp-mail subject: see attached ', "
-        f"{att_name}) "
-        f"WHEN 'chat' THEN {chat_hdr} "
-        f"ELSE {doc_hdr} END)"
-    )
-    post = (
-        "(CASE format "
-        f"WHEN 'email' THEN (CASE WHEN {v} = 0 "
-        "THEN 'if you need anything else, please let me know. best "
-        "regards, records-desk' ELSE 'thanks, records-desk' END) "
-        "WHEN 'email_with_attachment' THEN "
-        f"concat('attached: ', {att_name}, ' regards, records-desk') "
-        "WHEN 'chat' THEN 'end of chat' "
-        f"ELSE (CASE WHEN {v} = 0 THEN 'approved by: records-desk "
-        "end of record' ELSE 'summary: see details above end of record' "
-        "END) END)"
-    )
-    # paragraph break — a real blank line between frame, body, and
-    # footer (multi-paragraph register; space-padded so ' '-tokenizing
-    # stays stable on both engines). chr(10) rather than a '\n' literal:
-    # Spark interprets backslash escapes in string literals, standard
-    # SQL (DuckDB) does not.
-    brk = "concat(' ', chr(10), chr(10), ' ')"
-    fill_n = f"greatest(word_count_target - {d['len']}(split(body, ' ')), 0)"
-    fill = d["fill"](fill_n)
-    return f"""
-      bodies AS (
-        SELECT doc_id, format, word_count_target,
-               {d["agg_body"]} AS body
-        FROM vals
-        GROUP BY doc_id, format, word_count_target
-      ),
-      rendered AS (
-        SELECT doc_id, format, word_count_target,
-               concat({pre}, {brk}, body, {brk}, {post}, ' ', {fill}) AS text
-        FROM bodies
-      )
-    """
+
+def _spark_sql(spark: SparkSession, sql: str) -> DataFrame:
+    """``spark.sql`` for a query over the generation CTEs: registers the
+    kernel in ``spark`` first."""
+    register_kernel(spark)
+    return spark.sql(sql)
 
 
 def _meta_summary_sql(cfg: GenConfig, dialect: str) -> str:
@@ -306,11 +248,11 @@ def _validation_sql(cfg: GenConfig, dialect: str) -> str:
 
 
 def q60_gen_meta_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_meta_summary_sql(DEFAULT_CONFIG, "spark"))
+    return _spark_sql(spark, _meta_summary_sql(DEFAULT_CONFIG, "spark"))
 
 
 def q61_gen_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_corpus_stats_sql(DEFAULT_CONFIG, "spark"))
+    return _spark_sql(spark, _corpus_stats_sql(DEFAULT_CONFIG, "spark"))
 
 
 def _ms_whens(d: dict) -> list[str]:
@@ -346,72 +288,58 @@ def clear_scanned_pairs_cache() -> None:
 
 
 def _rendered_sql(cfg: GenConfig) -> str:
-    """The generation SQL every Spark consumer of the rendered corpus
-    runs: the parquet sink in perfbench builds this same text from
-    ``_gen_ctes``/``_rendered_cte``. One text means one set of
-    generated classes, so Janino's class cache and the warm JIT serve
-    every consumer after the first."""
-    d = _DIALECTS["spark"]
-    return expand_u16(
-        f"WITH {_gen_ctes(cfg, d)}, {_rendered_cte(d)} "
-        "SELECT doc_id, format, text FROM rendered",
-        "spark",
+    """The kernel's output per document, (doc_id, format, text, slots):
+    the Spark generation query every memoised consumer reads."""
+    return (
+        f"WITH {_gen_ctes(cfg, _DIALECTS['spark'])} "
+        "SELECT doc_id, format, text, slots FROM gen"
     )
 
 
 def _rendered_docs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
-    """(doc_id, format, text) of the generated corpus: ``_rendered_sql``
-    under a lazy localCheckpoint, memoised per session and config. The
-    checkpoint fixes the plan at the sink's full projection, so a
-    consumer selecting fewer columns cannot prune it into different
-    generated code."""
+    """``_rendered_sql`` under a lazy localCheckpoint, memoised per
+    session and config: the report's scan and its slot table both read
+    it, so they cost one kernel run."""
     return state.get_or_build(
         spark,
         "rendered_docs",
         repr(cfg),
-        lambda: spark.sql(_rendered_sql(cfg)).localCheckpoint(eager=False),
+        lambda: _spark_sql(spark, _rendered_sql(cfg)).localCheckpoint(eager=False),
     )
 
 
 def _doc_sits(spark: SparkSession, cfg: GenConfig):
     """(doc_id, sit_id, label, instances) for every assigned slot,
     the TC family included — the mapping table, without values."""
-    return spark.sql(
-        expand_u16(
-            f"WITH {_gen_ctes_base(cfg, _DIALECTS['spark'])} "
-            "SELECT doc_id, sit_id, label, instances FROM doc_sits",
-            "spark",
-        )
+    return (
+        _rendered_docs(spark, cfg)
+        .selectExpr("doc_id", "inline(slots)")
+        .select("doc_id", "sit_id", "label", "instances")
     )
 
 
 # Scanned-pairs table per session and GenConfig: q62, q91, q98 and
-# the report assembly all consume the SAME generate → render → join →
-# regex-scan pipeline; within one session it is computed once in the
-# session state store (the localCheckpoint materializes it) — the
-# in-session form of "at 100 TB you'd persist the validation scan as a
-# table" (same reuse pattern as dedup.shingle_state). Results are
-# identical with or without a memo hit: the lineage is deterministic,
-# consumers only append further transformations.
+# the report assembly all consume the SAME generate → explode → regex-
+# scan pipeline; within one session it is computed once in the session
+# state store (the localCheckpoint materializes it) — the in-session
+# form of "at 100 TB you'd persist the validation scan as a table"
+# (same reuse pattern as dedup.shingle_state). Results are identical
+# with or without a memo hit: the lineage is deterministic, consumers
+# only append further transformations.
 def _scanned_pairs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
     """(doc_id, sit_id, label, instances, text, ms) for every ASSIGNED
     (doc, scanned-SIT) pair — the validator's loop shape
     (modules/validator.py:255-299 iterates mapping rows and runs only
-    that row's SIT regex on that doc). Joining the assignments to the
-    rendered corpus before the regex means each document is scanned
-    with its ~4 assigned patterns, not all |catalog| of them — at 100 TB
-    that is the difference between O(pairs) and O(docs × catalog) regex
-    work.
+    that row's SIT regex on that doc). Each document is scanned with its
+    ~4 assigned patterns, not all |catalog| of them — at 100 TB that is
+    the difference between O(pairs) and O(docs × catalog) regex work.
 
-    The documents come from ``_rendered_docs``, the memoised sink plan.
-    The 33-branch regex dispatch is split into 6-branch CASE chunks,
-    each its own column, materialized with localCheckpoint before the
-    chunks are coalesced: one inlined CASE (regex + placeholder filter
-    per branch) exceeds the JVM's 64 KB method limit.
-
-    The join takes a shuffle-hash hint: the rendered side carries the
-    full document text, and broadcasting it collects the whole corpus
-    to the driver per call — wasteful here, fatal at 100 TB.
+    The pairs are the kernel's slots exploded beside their document's
+    text (``_rendered_docs``), so no join is needed. The 33-branch regex
+    dispatch is split into 6-branch CASE chunks, each its own column,
+    materialized with localCheckpoint before the chunks are coalesced:
+    one inlined CASE (regex + placeholder filter per branch) exceeds the
+    JVM's 64 KB method limit.
     """
     return state.get_or_build(
         spark, "scanned_pairs", repr(cfg), lambda: _build_scanned(spark, cfg)
@@ -422,7 +350,6 @@ def _build_scanned(spark: SparkSession, cfg: GenConfig):
     from pyspark.sql import functions as F
 
     d = _DIALECTS["spark"]
-    rendered = _rendered_docs(spark, cfg).select("doc_id", "text")
     whens = _ms_whens(d)
     chunk = 6
     chunks = [
@@ -430,9 +357,9 @@ def _build_scanned(spark: SparkSession, cfg: GenConfig):
         for i in range(0, len(whens), chunk)
     ]
     staged = (
-        _doc_sits(spark, cfg)
+        _rendered_docs(spark, cfg)
+        .selectExpr("doc_id", "text", "inline(slots)")
         .filter(F.col("sit_id").isin(RE2_SAFE_IDS))
-        .join(rendered.hint("shuffle_hash"), "doc_id")
         .selectExpr(
             "doc_id",
             "sit_id",
@@ -441,7 +368,6 @@ def _build_scanned(spark: SparkSession, cfg: GenConfig):
             "text",
             *[f"{c} AS _ms{i}" for i, c in enumerate(chunks)],
         )
-        .coalesce(_gen_partitions(cfg))
         .localCheckpoint()
     )
     # placeholder filter applied ONCE on the coalesced dispatch (the

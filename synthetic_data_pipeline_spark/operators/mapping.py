@@ -27,7 +27,7 @@ from ..functions.rounding import apply_sql_eround
 from ..functions.xsql import expand_u16
 from ..plans.catalog import SIT_CATALOG
 from ..plans.generate import DEFAULT_CONFIG, GenConfig
-from .generation import _DIALECTS, _gen_ctes
+from .generation import _DIALECTS, _gen_ctes, _spark_sql
 
 
 def _packed_cte(d: dict) -> str:
@@ -147,15 +147,15 @@ def _tcs_sql(cfg: GenConfig, dialect: str) -> str:
 
 
 def q63_mapping_pack_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_unpack_sql(DEFAULT_CONFIG, "spark"))
+    return _spark_sql(spark, _unpack_sql(DEFAULT_CONFIG, "spark"))
 
 
 def q64_mapping_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_upsert_sql(DEFAULT_CONFIG, "spark"))
+    return _spark_sql(spark, _upsert_sql(DEFAULT_CONFIG, "spark"))
 
 
 def q65_distinct_tcs_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_tcs_sql(DEFAULT_CONFIG, "spark"))
+    return _spark_sql(spark, _tcs_sql(DEFAULT_CONFIG, "spark"))
 
 
 QUERIES = {

@@ -2600,7 +2600,11 @@ def write_bm25_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     lineage, which re-ran the corpus explode per table (3 corpus
     passes); r14 A/B at sf0.1, interleaved min-of-3 inside q171:
     5.39 s -> 4.02 s (-25%)."""
-    docs = load_table(spark, sf_dir, "documents")
+    write_bm25_index_frame(spark, load_table(spark, sf_dir, "documents"), path)
+
+
+def write_bm25_index_frame(spark: SparkSession, docs: DataFrame, path: str) -> None:
+    """``write_bm25_index`` over a (doc_id, source, text) frame."""
     tf, _dlen, _stats, _dfreq = bm25_stats(docs)
     tf.write.mode("overwrite").parquet(f"{path}/tf/batch=-1")
     tfp = spark.read.parquet(f"{path}/tf")

@@ -8,8 +8,8 @@ Two semantic redesigns vs the reference (SURVEY.md §4.3.1-2):
    PRNG (``random.seed(42)`` at meta_generator.py:64) through every
    draw; a cluster cannot reproduce a sequential stream. Every draw
    here is ``md5(key:tag)`` arithmetic — a pure per-row function,
-   identical under any partitioning AND in DuckDB, so generation itself
-   is oracle-checked. Outputs are distributionally (not byte-)
+   identical under any partitioning and in any engine, so generation
+   itself is oracle-checked. Outputs are distributionally (not byte-)
    identical to the reference.
 
 2. **Closed-form quota planning.** The reference's greedy
@@ -22,15 +22,41 @@ Two semantic redesigns vs the reference (SURVEY.md §4.3.1-2):
    slot→SIT round-robin (slot % n_sits) makes per-SIT coverage exact by
    construction: floor(total_slots / n_sits) ≥ per_sit_count.
 
-The generation SQL is written once in the shared Spark/DuckDB dialect
-(md5, substr, ascii, CASE, repeat, lpad, chr — identical semantics);
-only the numbers source and the per-row explode differ per engine.
+One specification, two implementations:
+
+- Spark runs ``generate_doc``, a per-document kernel, as one Arrow
+  pandas UDF (``sdp_gen_doc``, registered by ``register_kernel``) over
+  ``range(0, n_docs)``: each document is a few dozen md5 draws and
+  string joins, one narrow map with no exchange.
+- DuckDB runs the SQL builders below (``docs_sql``, ``doc_sits_sql``,
+  ``sit_value_sql``, ``sit_block_sql``, ``filler_word_sql``) as the
+  oracle (operators/generation.py), so oracle parity compares two
+  independent implementations.
+
+Both read the same literal tables — the catalog, ``CYCLE``, the
+word-target and instance buckets, the TP value recipes
+(``TP_PARTS``), the FP placeholders, the block and frame templates and
+the filler pool — so only the control flow is written twice.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
+import re
 from dataclasses import dataclass
+from typing import NamedTuple
+
+import pandas as pd
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..functions.xsql import hash_int_range, hash_u16, hash_unit
 from ..plans.catalog import SIT_CATALOG
@@ -42,6 +68,12 @@ CYCLE_PREFIX = [sum(CYCLE[:i]) for i in range(len(CYCLE))]
 CYCLE_SUM = sum(CYCLE)  # 68 slots per 20 docs
 
 FORMATS = ["email", "chat", "document", "pdf", "email_with_attachment"]
+
+# word target: 65% in 500-1500, else 300-4000 (config.json:6-12)
+WORD_TARGET = (0.65, (500, 1500), (300, 4000))
+# instance buckets (cumulative probability, lo, hi): 1-2 @60%, 3-5 @30%,
+# 6-10 @10% (shape of config.json:19-24, bounded to keep docs small)
+INSTANCE_BUCKETS = ((0.6, 1, 2), (0.9, 3, 5), (1.0, 6, 10))
 
 
 @dataclass(frozen=True)
@@ -63,6 +95,18 @@ class GenConfig:
 DEFAULT_CONFIG = GenConfig()
 
 
+def _u16(key: int, tag: str) -> int:
+    """The kernel's draw: ``hash_u16``'s value, in [0, 65535]."""
+    return int(hashlib.md5(f"{key}:{tag}".encode()).hexdigest()[:4], 16)
+
+
+def _lit(s: str) -> str:
+    """SQL string literal; a newline becomes chr(10), since Spark reads
+    backslash escapes in literals and standard SQL does not."""
+    pieces = [f"'{p}'" for p in s.replace("'", "''").split("\n")]
+    return pieces[0] if len(pieces) == 1 else f"concat({', chr(10), '.join(pieces)})"
+
+
 def _case_mod20(expr: str, values: list[int]) -> str:
     whens = " ".join(f"WHEN {i} THEN {v}" for i, v in enumerate(values[:-1]))
     return f"(CASE ({expr}) % 20 {whens} ELSE {values[-1]} END)"
@@ -77,11 +121,11 @@ def docs_sql(cfg: GenConfig, numbers_src: str) -> str:
         f"WHEN {i} THEN '{f}'" for i, f in enumerate(cfg.formats[:-1])
     )
     fmt = f"(CASE {fmt_idx} {fmt_whens} ELSE '{cfg.formats[-1]}' END)"
-    # word target: 65% in 500-1500, else 300-4000 (config.json:6-12)
+    p, r1, r2 = WORD_TARGET
     wct = (
-        f"(CASE WHEN {hash_unit('doc_id', 'wsel')} < 0.65 "
-        f"THEN {hash_int_range('doc_id', 'wct1', 500, 1500)} "
-        f"ELSE {hash_int_range('doc_id', 'wct2', 300, 4000)} END)"
+        f"(CASE WHEN {hash_unit('doc_id', 'wsel')} < {p} "
+        f"THEN {hash_int_range('doc_id', 'wct1', *r1)} "
+        f"ELSE {hash_int_range('doc_id', 'wct2', *r2)} END)"
     )
     cnt = _case_mod20("doc_id", CYCLE)
     # floor(x/20.0) instead of integer '/' — Spark and DuckDB both
@@ -100,6 +144,32 @@ def docs_sql(cfg: GenConfig, numbers_src: str) -> str:
     """
 
 
+def _tc_list(tcs: list[str]) -> str:
+    """Lowercase comma-joined TC list, used by the template context
+    lines — lowercase so no uppercase-class pattern can ever fire on
+    template prose (the disjointness invariant, plans/catalog.py)."""
+    return ", ".join(t.lower() for t in tcs)
+
+
+def slot_attrs_sql() -> str:
+    """sit_name, tcs and confidence of a (sit_id, label, instances) row:
+    catalog lookups and the confidence rules (meta_generator.py:42-53,
+    config.json:25-29). Both engines derive them in SQL."""
+    *head, last = SIT_CATALOG
+    name_whens = " ".join(f"WHEN '{sid}' THEN '{name}'" for sid, name, *_r in head)
+    tcs_whens = " ".join(
+        f"WHEN '{sid}' THEN '{_tc_list(tcs)}'" for sid, _n, _rx, tcs in head
+    )
+    return (
+        f"(CASE sit_id {name_whens} ELSE '{last[1]}' END) AS sit_name, "
+        f"(CASE sit_id {tcs_whens} ELSE '{_tc_list(last[3])}' END) AS tcs, "
+        "(CASE WHEN label = 'TP' AND instances >= 6 THEN 'High' "
+        "WHEN label = 'TP' AND instances >= 3 THEN 'Medium' "
+        "WHEN label = 'FP' AND instances >= 3 THEN 'Medium' "
+        "ELSE 'Low' END) AS confidence"
+    )
+
+
 def doc_sits_sql(cfg: GenConfig, docs_cte: str, explode_j: str) -> str:
     """One row per (doc, sit-slot). ``explode_j`` is the dialect's
     per-row 0..sit_count-1 generator expression aliased ``j``."""
@@ -107,41 +177,19 @@ def doc_sits_sql(cfg: GenConfig, docs_cte: str, explode_j: str) -> str:
         f"WHEN {i} THEN '{sid}'" for i, (sid, *_rest) in enumerate(SIT_CATALOG[:-1])
     )
     sit_id = f"(CASE (slot % {cfg.n_sits}) {sit_whens} ELSE '{SIT_CATALOG[-1][0]}' END)"
-    name_whens = " ".join(
-        f"WHEN '{sid}' THEN '{name}'" for sid, name, *_r in SIT_CATALOG[:-1]
-    )
-    sit_name = (
-        f"(CASE sit_id {name_whens} ELSE '{SIT_CATALOG[-1][1]}' END)"
-    )
-    # lowercase comma-joined TC list, used by the template context
-    # lines — lowercase so no uppercase-class pattern can ever fire on
-    # template prose (the disjointness invariant, plans/catalog.py).
-    tcs_whens = " ".join(
-        f"WHEN '{sid}' THEN '{', '.join(t.lower() for t in tcs)}'"
-        for sid, _name, _rx, tcs in SIT_CATALOG[:-1]
-    )
-    tcs_expr = (
-        f"(CASE sit_id {tcs_whens} "
-        f"ELSE '{', '.join(t.lower() for t in SIT_CATALOG[-1][3])}' END)"
-    )
     label = (
         f"(CASE WHEN {hash_unit('slot', 'label')} < {cfg.tp_ratio} "
         f"THEN 'TP' ELSE 'FP' END)"
     )
-    # instance buckets: 1-2 @60%, 3-5 @30%, 6-10 @10% (shape of
-    # config.json:19-24, bounded to keep rendered docs small)
     u = hash_unit("slot", "instsel")
+    *head, (_p, lo, hi) = INSTANCE_BUCKETS
     inst = (
-        f"(CASE WHEN {u} < 0.6 THEN {hash_int_range('slot', 'inst1', 1, 2)} "
-        f"WHEN {u} < 0.9 THEN {hash_int_range('slot', 'inst2', 3, 5)} "
-        f"ELSE {hash_int_range('slot', 'inst3', 6, 10)} END)"
-    )
-    # confidence rules (meta_generator.py:42-53, config.json:25-29)
-    conf = (
-        "(CASE WHEN label = 'TP' AND instances >= 6 THEN 'High' "
-        "WHEN label = 'TP' AND instances >= 3 THEN 'Medium' "
-        "WHEN label = 'FP' AND instances >= 3 THEN 'Medium' "
-        "ELSE 'Low' END)"
+        "(CASE "
+        + " ".join(
+            f"WHEN {u} < {p} THEN {hash_int_range('slot', f'inst{i}', lo_i, hi_i)}"
+            for i, (p, lo_i, hi_i) in enumerate(head, 1)
+        )
+        + f" ELSE {hash_int_range('slot', f'inst{len(INSTANCE_BUCKETS)}', lo, hi)} END)"
     )
     return f"""
       slots AS (
@@ -160,66 +208,207 @@ def doc_sits_sql(cfg: GenConfig, docs_cte: str, explode_j: str) -> str:
         SELECT *, {label} AS label, {inst} AS instances FROM doc_sits0
       ),
       doc_sits AS (
-        SELECT *, {sit_name} AS sit_name, {tcs_expr} AS tcs,
-               {conf} AS confidence
-        FROM doc_sits1
+        SELECT *, {slot_attrs_sql()} FROM doc_sits1
       )
     """
 
 
 # ---------------------------------------------------------------------------
 # SIT value generators (reference content_generator.py:38-175, F7-F16).
-# Each returns shared-dialect SQL over the per-slot md5 draws; TP values
-# match the catalog regex, FP values are placeholders rejected by
-# is_placeholder.
+# A TP value is a recipe: literal strings and md5 draws, concatenated.
+# Each draw renders as shared-dialect SQL (``sql``) and as the kernel's
+# Python (``py``); TP values match the catalog regex, FP values are
+# placeholders rejected by is_placeholder.
+
+_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
 
 
-def _digits(key: str, tag: str, n: int) -> str:
-    """SQL: exactly-n-digit string (leading zeros allowed) from md5 draws."""
-    parts = []
-    for c in range(0, n, 4):
-        k = min(4, n - c)
-        parts.append(
-            f"lpad(CAST({hash_u16(key, f'{tag}{c}')} % {10 ** k} AS STRING), {k}, '0')"
+class _Num(NamedTuple):
+    """``add + u16(key, tag) % mod`` in decimal, '0'-padded to ``pad``."""
+
+    tag: str
+    mod: int
+    add: int = 0
+    pad: int = 0
+
+    def sql(self, key: str) -> str:
+        s = f"CAST({self.add} + {hash_u16(key, self.tag)} % {self.mod} AS STRING)"
+        return f"lpad({s}, {self.pad}, '0')" if self.pad else s
+
+    def py(self, key: int) -> str:
+        return str(self.add + _u16(key, self.tag) % self.mod).rjust(self.pad, "0")
+
+
+class _Pick(NamedTuple):
+    """One character of ``alphabet``, drawn uniformly."""
+
+    tag: str
+    alphabet: str = _UPPER
+
+    def sql(self, key: str) -> str:
+        n = len(self.alphabet)
+        return f"substr('{self.alphabet}', 1 + ({hash_u16(key, self.tag)} % {n}), 1)"
+
+    def py(self, key: int) -> str:
+        return self.alphabet[_u16(key, self.tag) % len(self.alphabet)]
+
+
+class _Maybe(NamedTuple):
+    """``parts`` when the draw is even, else ''."""
+
+    tag: str
+    parts: tuple
+
+    def sql(self, key: str) -> str:
+        return (
+            f"(CASE WHEN {hash_u16(key, self.tag)} % 2 = 0 "
+            f"THEN {concat_sql(self.parts, key)} ELSE '' END)"
         )
-    return "concat(" + ", ".join(parts) + ")" if len(parts) > 1 else parts[0]
+
+    def py(self, key: int) -> str:
+        return concat_py(self.parts, key) if _u16(key, self.tag) % 2 == 0 else ""
 
 
-def _letter(key: str, tag: str) -> str:
-    return f"chr(65 + ({hash_u16(key, tag)} % 26))"
+def concat_sql(parts, key: str = "slot") -> str:
+    """A recipe as SQL, drawing on column ``key``."""
+    items = [_lit(p) if isinstance(p, str) else p.sql(key) for p in parts]
+    return items[0] if len(items) == 1 else f"concat({', '.join(items)})"
 
 
-def _letter_from(key: str, tag: str, alphabet: str) -> str:
-    """One char drawn uniformly from an explicit alphabet (used when a
-    pattern's letter class is restricted, e.g. NINO, ICD-10)."""
-    return f"substr('{alphabet}', 1 + ({hash_u16(key, tag)} % {len(alphabet)}), 1)"
+def concat_py(parts, key: int) -> str:
+    """A recipe's value for the row key ``key``."""
+    return "".join(p if isinstance(p, str) else p.py(key) for p in parts)
 
 
-def _letters(key: str, tag: str, n: int, alphabet: str | None = None) -> str:
-    parts = [
-        _letter_from(key, f"{tag}{i}", alphabet) if alphabet else _letter(key, f"{tag}{i}")
-        for i in range(n)
+def _digits(tag: str, n: int) -> list:
+    """Exactly n digits (leading zeros allowed), ≤4 per draw."""
+    return [
+        _Num(f"{tag}{c}", 10 ** min(4, n - c), pad=min(4, n - c))
+        for c in range(0, n, 4)
     ]
-    return "concat(" + ", ".join(parts) + ")" if n > 1 else parts[0]
 
 
-def _nonzero_lead_digits(key: str, tag: str, n: int) -> str:
-    """First digit 1-9, then n-1 md5 digits — a \\b-delimited n-digit
-    run that can never be the all-zero placeholder shape."""
-    head = f"CAST(1 + {hash_u16(key, f'{tag}h')} % 9 AS STRING)"
-    return f"concat({head}, {_digits(key, tag, n - 1)})" if n > 1 else head
+def _letters(tag: str, n: int, alphabet: str = _UPPER) -> list:
+    return [_Pick(f"{tag}{i}", alphabet) for i in range(n)]
 
 
-def iban_bban_sql(key: str = "slot") -> str:
-    """16-digit BBAN body, materialized as a column like ccn_body."""
-    return _digits(key, "iban", 16)
+def _nonzero_lead(tag: str, n: int) -> list:
+    """First digit 1-9, then n-1 digits — a \\b-delimited n-digit run
+    that can never be the all-zero placeholder shape."""
+    return [_Num(f"{tag}h", 9, 1), *_digits(tag, n - 1)]
 
 
-def ccn_body_sql(key: str = "slot") -> str:
-    """15-digit card body '4' + 14 md5 digits; materialized as a column
-    so the Luhn expression can reference it by name (a correlated scalar
-    subquery would not survive both planners)."""
-    return f"concat('4', {_digits(key, 'ccn', 14)})"
+# The two check-digit SITs draw a digit body; the check rule reads it
+# digit by digit, so the SQL materializes each body as a column.
+CCN_BODY = ["4", *_digits("ccn", 14)]  # 15-digit card body
+IBAN_BBAN = _digits("iban", 16)
+
+TP_PARTS = {
+    "SIT_SSN": [_Num("ssn1", 700, 100, 3), "-", _Num("ssn2", 90, 10, 2), "-",
+                *_digits("ssn3", 4)],
+    "SIT_IPV4": [_Num("ip1", 223, 1), ".", _Num("ip2", 256), ".",
+                 _Num("ip3", 256), ".", _Num("ip4", 254, 1)],
+    "SIT_EMAIL": ["user", _Num("em", 65536), "@corp-mail.com"],
+    "SIT_PHONE": [_Num("ph1", 800, 200), "-", _Num("ph2", 1000, pad=3), "-",
+                  *_digits("ph3", 4)],
+    "SIT_ABA": [_Num("aba0", 4), *_digits("aba", 8)],
+    "SIT_PASSPORT": [_Pick("pp"), *_digits("ppd", 8)],
+    "SIT_DEA": [_Pick("dea1"), _Pick("dea2"), *_digits("dead", 7)],
+    # 8-char BIC half the time, 11-char (branch suffix) otherwise —
+    # the reference's SWIFT-8/SWIFT-11 variants in one generator.
+    # Letters only: a digit in the tail could seed a \b-digit run.
+    "SIT_SWIFT": [*_letters("sw", 8), _Maybe("sw11", tuple(_letters("swb", 3)))],
+    "SIT_ITIN": ["9", *_digits("it1", 2), "-7", _Num("it2", 10), "-",
+                 *_digits("it3", 4)],
+    "SIT_DATE": ["20", _Num("dy", 25, pad=2), "-", _Num("dm", 12, 1, 2), "-",
+                 _Num("dd", 28, 1, 2)],
+    # label-anchored families: the label keyword is part of the VALUE
+    # so the pattern matches wherever the value lands in a document,
+    # independent of the surrounding block's sit_name prefix.
+    "SIT_PASSPORT_LABELED": ["passport no: ", *_letters("plb", 3),
+                             *_nonzero_lead("pld", 6)],
+    "SIT_BANK_US": ["account number: ", *_nonzero_lead("bus", 10)],
+    "SIT_DRIVER_US": ["driver license: ", *(
+        p for i in range(4) for p in (_Pick(f"dl{i}"), _Num(f"dld{i}", 9, 1))
+    )],
+    "SIT_CAN_PHIN": ["phin: ", _Num("phh", 3, 7), *_digits("phd", 8)],
+    "SIT_AUS_MEDACC": ["medical account: ", *_nonzero_lead("mda", 11)],
+    "SIT_CAN_DRIVER": ["permis no: ", *_nonzero_lead("cdr1", 5), "-",
+                       *_digits("cdr2", 5)],
+    "SIT_AUS_DRIVER": ["driver licence: ", *_letters("adl", 2),
+                       _Num("add", 90, 10), *_letters("adt", 2)],
+    # lowercase-only token: never collides with any uppercase class
+    "SIT_AZURE_SAS": ["sig=", *_letters("sas", 16, "abcdefghijklmnopqrst")],
+    # bare, shape-disjoint families
+    "SIT_ICD10": [_Pick("i10l", "ABCDFGHJKL"), _Num("i10d", 90, 10), ".",
+                  _Num("i10x", 10)],
+    "SIT_ICD9": ["E", _Num("i9d", 900, 100), ".", _Num("i9x", 10)],
+    "SIT_UK_NINO": [*_letters("nin", 2, "ACEGHJKLMNOPRSTWXYZ"),
+                    *_nonzero_lead("nind", 6), _Pick("nint", "ABCD")],
+    "SIT_BR_CPF": [*_nonzero_lead("cpf1", 3), ".", *_digits("cpf2", 3), ".",
+                   *_digits("cpf3", 3), "-", *_digits("cpf4", 2)],
+    "SIT_BR_RG": [_Num("rg1", 90, 10), ".", *_digits("rg2", 3), ".",
+                  *_digits("rg3", 3), "-", _Num("rg4", 10)],
+    "SIT_CAN_SIN": [*_nonzero_lead("sin1", 3), "-", *_digits("sin2", 3), "-",
+                    *_digits("sin3", 3)],
+    "SIT_CAN_BANK": _nonzero_lead("cbk", 7),
+    "SIT_AUS_TFN": _nonzero_lead("tfn", 8),
+    "SIT_CAN_HEALTH": [_Num("chh", 3, 4), *_digits("chd", 8)],
+    "SIT_FR_INSEE": [_Num("ins", 2, 1), *_digits("insd", 12)],
+    "SIT_EU_DEBIT": ["6", *_digits("eud", 15)],
+    "SIT_CAN_PASSPORT": [*_letters("cpp", 2), *_nonzero_lead("cppd", 6)],
+    "SIT_AUS_PASSPORT": [_Pick("app"), *_nonzero_lead("appd", 7)],
+    "SIT_AUS_BANK": _nonzero_lead("abk", 6),
+}
+
+FP_VALUES = {
+    "SIT_CCN": "0000 0000 0000 0000",
+    "SIT_SSN": "XXX-XX-XXXX",
+    "SIT_IBAN": "XX00XXXXXXXXXXXXXXXX",
+    "SIT_IPV4": "999.999.999.999",
+    "SIT_EMAIL": "xxx@xxx.com",
+    "SIT_PHONE": "000-000-0000",
+    "SIT_ABA": "000000000",
+    "SIT_PASSPORT": "X00000000",
+    "SIT_DEA": "XX0000000",
+    "SIT_SWIFT": "XXXXXXXX",
+    "SIT_ITIN": "9XX-7X-XXXX",
+    "SIT_DATE": "0000-00-00",
+    "SIT_PASSPORT_LABELED": "passport no: XXX000000",
+    "SIT_BANK_US": "account number: 0000000000",
+    "SIT_DRIVER_US": "driver license: X0X0X0X0",
+    "SIT_CAN_PHIN": "phin: 000000000",
+    "SIT_AUS_MEDACC": "medical account: 00000000000",
+    "SIT_CAN_DRIVER": "permis no: 00000-00000",
+    "SIT_AUS_DRIVER": "driver licence: XX00XX",
+    "SIT_AZURE_SAS": "sig=000000000000",
+    "SIT_ICD10": "X00.0",
+    "SIT_ICD9": "E000.0",
+    "SIT_UK_NINO": "XX000000X",
+    "SIT_BR_CPF": "000.000.000-00",
+    "SIT_BR_RG": "00.000.000-0",
+    "SIT_CAN_SIN": "000-000-000",
+    "SIT_CAN_BANK": "0000000",
+    "SIT_AUS_TFN": "00000000",
+    "SIT_CAN_HEALTH": "000000000",
+    "SIT_FR_INSEE": "0000000000000",
+    "SIT_EU_DEBIT": "0000000000000000",
+    "SIT_CAN_PASSPORT": "XX000000",
+    "SIT_AUS_PASSPORT": "X0000000",
+    "SIT_AUS_BANK": "000000",
+}
+
+
+# TC SITs: the reference's generic fallback (content_generator.py:
+# 133-138) — TP '<ID_VALUE>', FP 'REDACTED_<id>' (placeholder by the
+# 'redacted' marker). Underscore-joined, so no \b-delimited letter or
+# digit run ever escapes into another SIT's pattern space.
+def _tc_tp(sid: str) -> str:
+    return f"<{sid}_VALUE>"
+
+
+def _fp_value(sid: str) -> str:
+    return FP_VALUES.get(sid, f"REDACTED_{sid}")
 
 
 def luhn_formatted_sql(body_col: str = "ccn_body") -> str:
@@ -242,6 +431,14 @@ def luhn_formatted_sql(body_col: str = "ccn_body") -> str:
     )
 
 
+def _luhn_formatted(body: str) -> str:
+    s = sum(
+        (2 * int(c) - 9 if 2 * int(c) > 9 else 2 * int(c)) if (16 - i) % 2 else int(c)
+        for i, c in enumerate(body, 1)
+    )
+    return f"{body[:4]} {body[4:8]} {body[8:12]} {body[12:]}{(10 - s % 10) % 10}"
+
+
 def iban_gb_sql(bban_col: str) -> str:
     """'GB' + real mod-97 check digits + the 16-digit BBAN
     (content_generator.py:50-74 re-derived). The rearranged check string
@@ -257,220 +454,124 @@ def iban_gb_sql(bban_col: str) -> str:
     return f"concat('GB', {check}, {bban_col})"
 
 
-def sit_value_chunks(key: str = "slot") -> tuple[list[str], str]:
+def sit_value_sql(key: str = "slot") -> str:
     """Per-sit TP value (regex-conformant) or FP placeholder
-    (content_generator.py:197-206 dispatch, F15/F16), as the TP
-    dispatch split into small CASE chunks (NULL for a sit_id outside the
-    chunk) plus the FP CASE. One inlined 54-branch dispatch is a single
-    expression too large for one generated JVM method (64 KB); the
-    generation SQL (operators/generation.py::_gen_ctes) chains the
-    chunks as projections and splits the chain around its one exchange,
-    so each side compiles under the limit."""
-    k = key
-    tp = {
-        "SIT_CCN": luhn_formatted_sql("ccn_body"),
-        "SIT_SSN": (
-            f"concat(lpad(CAST(100 + {hash_u16(k, 'ssn1')} % 700 AS STRING), 3, '0'), '-', "
-            f"lpad(CAST(10 + {hash_u16(k, 'ssn2')} % 90 AS STRING), 2, '0'), '-', "
-            f"{_digits(k, 'ssn3', 4)})"
-        ),
-        "SIT_IBAN": iban_gb_sql("iban_bban"),
-        "SIT_IPV4": (
-            f"concat(CAST(1 + {hash_u16(k, 'ip1')} % 223 AS STRING), '.', "
-            f"CAST({hash_u16(k, 'ip2')} % 256 AS STRING), '.', "
-            f"CAST({hash_u16(k, 'ip3')} % 256 AS STRING), '.', "
-            f"CAST(1 + {hash_u16(k, 'ip4')} % 254 AS STRING))"
-        ),
-        "SIT_EMAIL": f"concat('user', CAST({hash_u16(k, 'em')} AS STRING), '@corp-mail.com')",
-        "SIT_PHONE": (
-            f"concat(CAST(200 + {hash_u16(k, 'ph1')} % 800 AS STRING), '-', "
-            f"lpad(CAST({hash_u16(k, 'ph2')} % 1000 AS STRING), 3, '0'), '-', "
-            f"{_digits(k, 'ph3', 4)})"
-        ),
-        "SIT_ABA": f"concat(CAST({hash_u16(k, 'aba0')} % 4 AS STRING), {_digits(k, 'aba', 8)})",
-        "SIT_PASSPORT": f"concat({_letter(k, 'pp')}, {_digits(k, 'ppd', 8)})",
-        "SIT_DEA": f"concat({_letter(k, 'dea1')}, {_letter(k, 'dea2')}, {_digits(k, 'dead', 7)})",
-        # 8-char BIC half the time, 11-char (branch suffix) otherwise —
-        # the reference's SWIFT-8/SWIFT-11 variants in one generator.
-        # Letters only: a digit in the tail could seed a \b-digit run.
-        "SIT_SWIFT": (
-            f"concat({_letters(k, 'sw', 8)}, "
-            f"CASE WHEN {hash_u16(k, 'sw11')} % 2 = 0 "
-            f"THEN {_letters(k, 'swb', 3)} ELSE '' END)"
-        ),
-        "SIT_ITIN": (
-            f"concat('9', {_digits(k, 'it1', 2)}, '-7', "
-            f"CAST({hash_u16(k, 'it2')} % 10 AS STRING), '-', {_digits(k, 'it3', 4)})"
-        ),
-        "SIT_DATE": (
-            f"concat('20', lpad(CAST({hash_u16(k, 'dy')} % 25 AS STRING), 2, '0'), '-', "
-            f"lpad(CAST(1 + {hash_u16(k, 'dm')} % 12 AS STRING), 2, '0'), '-', "
-            f"lpad(CAST(1 + {hash_u16(k, 'dd')} % 28 AS STRING), 2, '0'))"
-        ),
-        # label-anchored families: the label keyword is part of the VALUE
-        # so the pattern matches wherever the value lands in a document,
-        # independent of the surrounding block's sit_name prefix.
-        "SIT_PASSPORT_LABELED": (
-            f"concat('passport no: ', {_letters(k, 'plb', 3)}, {_nonzero_lead_digits(k, 'pld', 6)})"
-        ),
-        "SIT_BANK_US": f"concat('account number: ', {_nonzero_lead_digits(k, 'bus', 10)})",
-        "SIT_DRIVER_US": (
-            "concat('driver license: ', "
-            + ", ".join(
-                f"{_letter(k, f'dl{i}')}, CAST(1 + {hash_u16(k, f'dld{i}')} % 9 AS STRING)"
-                for i in range(4)
-            )
-            + ")"
-        ),
-        "SIT_CAN_PHIN": (
-            f"concat('phin: ', CAST(7 + {hash_u16(k, 'phh')} % 3 AS STRING), "
-            f"{_digits(k, 'phd', 8)})"
-        ),
-        "SIT_AUS_MEDACC": f"concat('medical account: ', {_nonzero_lead_digits(k, 'mda', 11)})",
-        "SIT_CAN_DRIVER": (
-            f"concat('permis no: ', {_nonzero_lead_digits(k, 'cdr1', 5)}, '-', {_digits(k, 'cdr2', 5)})"
-        ),
-        "SIT_AUS_DRIVER": (
-            f"concat('driver licence: ', {_letters(k, 'adl', 2)}, "
-            f"CAST(10 + {hash_u16(k, 'add')} % 90 AS STRING), {_letters(k, 'adt', 2)})"
-        ),
-        # lowercase-only token: never collides with any uppercase class
-        "SIT_AZURE_SAS": (
-            "concat('sig=', "
-            + ", ".join(
-                f"chr(97 + ({hash_u16(k, f'sas{i}')} % 20))" for i in range(16)
-            )
-            + ")"
-        ),
-        # bare, shape-disjoint families
-        "SIT_ICD10": (
-            f"concat({_letter_from(k, 'i10l', 'ABCDFGHJKL')}, CAST(10 + {hash_u16(k, 'i10d')} % 90 AS STRING), "
-            f"'.', CAST({hash_u16(k, 'i10x')} % 10 AS STRING))"
-        ),
-        "SIT_ICD9": (
-            f"concat('E', CAST(100 + {hash_u16(k, 'i9d')} % 900 AS STRING), '.', "
-            f"CAST({hash_u16(k, 'i9x')} % 10 AS STRING))"
-        ),
-        "SIT_UK_NINO": (
-            f"concat({_letters(k, 'nin', 2, 'ACEGHJKLMNOPRSTWXYZ')}, "
-            f"{_nonzero_lead_digits(k, 'nind', 6)}, {_letter_from(k, 'nint', 'ABCD')})"
-        ),
-        "SIT_BR_CPF": (
-            f"concat({_nonzero_lead_digits(k, 'cpf1', 3)}, '.', {_digits(k, 'cpf2', 3)}, '.', "
-            f"{_digits(k, 'cpf3', 3)}, '-', {_digits(k, 'cpf4', 2)})"
-        ),
-        "SIT_BR_RG": (
-            f"concat(CAST(10 + {hash_u16(k, 'rg1')} % 90 AS STRING), '.', {_digits(k, 'rg2', 3)}, '.', "
-            f"{_digits(k, 'rg3', 3)}, '-', CAST({hash_u16(k, 'rg4')} % 10 AS STRING))"
-        ),
-        "SIT_CAN_SIN": (
-            f"concat({_nonzero_lead_digits(k, 'sin1', 3)}, '-', {_digits(k, 'sin2', 3)}, '-', "
-            f"{_digits(k, 'sin3', 3)})"
-        ),
-        "SIT_CAN_BANK": _nonzero_lead_digits(k, "cbk", 7),
-        "SIT_AUS_TFN": _nonzero_lead_digits(k, "tfn", 8),
-        "SIT_CAN_HEALTH": (
-            f"concat(CAST(4 + {hash_u16(k, 'chh')} % 3 AS STRING), {_digits(k, 'chd', 8)})"
-        ),
-        "SIT_FR_INSEE": (
-            f"concat(CAST(1 + {hash_u16(k, 'ins')} % 2 AS STRING), {_digits(k, 'insd', 12)})"
-        ),
-        "SIT_EU_DEBIT": f"concat('6', {_digits(k, 'eud', 15)})",
-        "SIT_CAN_PASSPORT": f"concat({_letters(k, 'cpp', 2)}, {_nonzero_lead_digits(k, 'cppd', 6)})",
-        "SIT_AUS_PASSPORT": f"concat({_letter(k, 'app')}, {_nonzero_lead_digits(k, 'appd', 7)})",
-        "SIT_AUS_BANK": _nonzero_lead_digits(k, "abk", 6),
-    }
-    fp = {
-        "SIT_CCN": "'0000 0000 0000 0000'",
-        "SIT_SSN": "'XXX-XX-XXXX'",
-        "SIT_IBAN": "'XX00XXXXXXXXXXXXXXXX'",
-        "SIT_IPV4": "'999.999.999.999'",
-        "SIT_EMAIL": "'xxx@xxx.com'",
-        "SIT_PHONE": "'000-000-0000'",
-        "SIT_ABA": "'000000000'",
-        "SIT_PASSPORT": "'X00000000'",
-        "SIT_DEA": "'XX0000000'",
-        "SIT_SWIFT": "'XXXXXXXX'",
-        "SIT_ITIN": "'9XX-7X-XXXX'",
-        "SIT_DATE": "'0000-00-00'",
-        "SIT_PASSPORT_LABELED": "'passport no: XXX000000'",
-        "SIT_BANK_US": "'account number: 0000000000'",
-        "SIT_DRIVER_US": "'driver license: X0X0X0X0'",
-        "SIT_CAN_PHIN": "'phin: 000000000'",
-        "SIT_AUS_MEDACC": "'medical account: 00000000000'",
-        "SIT_CAN_DRIVER": "'permis no: 00000-00000'",
-        "SIT_AUS_DRIVER": "'driver licence: XX00XX'",
-        "SIT_AZURE_SAS": "'sig=000000000000'",
-        "SIT_ICD10": "'X00.0'",
-        "SIT_ICD9": "'E000.0'",
-        "SIT_UK_NINO": "'XX000000X'",
-        "SIT_BR_CPF": "'000.000.000-00'",
-        "SIT_BR_RG": "'00.000.000-0'",
-        "SIT_CAN_SIN": "'000-000-000'",
-        "SIT_CAN_BANK": "'0000000'",
-        "SIT_AUS_TFN": "'00000000'",
-        "SIT_CAN_HEALTH": "'000000000'",
-        "SIT_FR_INSEE": "'0000000000000'",
-        "SIT_EU_DEBIT": "'0000000000000000'",
-        "SIT_CAN_PASSPORT": "'XX000000'",
-        "SIT_AUS_PASSPORT": "'X0000000'",
-        "SIT_AUS_BANK": "'000000'",
-    }
-    # TC SITs: the reference's generic fallback (content_generator.py:
-    # 133-138) — TP '<ID_VALUE>', FP 'REDACTED_<id>' (placeholder by the
-    # 'redacted' marker). Underscore-joined, so no \b-delimited letter
-    # or digit run ever escapes into another SIT's pattern space.
-    #
+    (content_generator.py:197-206 dispatch, F15/F16) as one CASE over
+    ``sit_id`` and ``label``; reads the ``ccn_body``/``iban_bban``
+    columns for the two check-digit SITs."""
+    tp = {sid: concat_sql(parts, key) for sid, parts in TP_PARTS.items()}
+    tp["SIT_CCN"] = luhn_formatted_sql("ccn_body")
+    tp["SIT_IBAN"] = iban_gb_sql("iban_bban")
     ids = [sid for sid, *_ in SIT_CATALOG]
-    chunk = 6
-    tp_chunks = [
-        "(CASE sit_id "
-        + " ".join(
-            f"WHEN '{sid}' THEN " + tp.get(sid, f"'<{sid}_VALUE>'")
-            for sid in ids[i:i + chunk]
-        )
-        + " ELSE NULL END)"
-        for i in range(0, len(ids), chunk)
-    ]
-    fp_whens = " ".join(
-        f"WHEN '{sid}' THEN " + fp.get(sid, f"'REDACTED_{sid}'")
-        for sid, *_ in SIT_CATALOG
+    tp_whens = " ".join(f"WHEN '{s}' THEN {tp.get(s, _lit(_tc_tp(s)))}" for s in ids)
+    fp_whens = " ".join(f"WHEN '{s}' THEN {_lit(_fp_value(s))}" for s in ids)
+    return (
+        f"(CASE WHEN label = 'TP' THEN (CASE sit_id {tp_whens} ELSE '?' END) "
+        f"ELSE (CASE sit_id {fp_whens} ELSE 'REDACTED' END) END)"
     )
-    fp_case = f"(CASE sit_id {fp_whens} ELSE 'REDACTED' END)"
-    return tp_chunks, fp_case
+
+
+def _sit_value(sid: str, label: str, slot: int) -> str:
+    if label != "TP":
+        return _fp_value(sid)
+    if sid == "SIT_CCN":
+        return _luhn_formatted(concat_py(CCN_BODY, slot))
+    if sid == "SIT_IBAN":
+        bban = concat_py(IBAN_BBAN, slot)
+        return f"GB{98 - int(bban + '161100') % 97:02d}{bban}"
+    parts = TP_PARTS.get(sid)
+    return concat_py(parts, slot) if parts else _tc_tp(sid)
+
+
+# Per-(doc,sit) text block, format-aware — the reference's three body
+# builders (content_generator.py:208-234): email formats get a per-SIT
+# context line (build_email_body), chat gets three timestamped turns
+# with agent/client speaker alternation — ask, answer, acknowledge
+# (build_chat_text, CHAT_LINE_TEMPLATE, multi-turn per the reference's
+# transcripts), document/pdf (and any other format) get a details line
+# (build_document_text). {vals} is the value and ' | ', repeated
+# ``instances`` times; {t} is slot % 10. All template prose is
+# lowercase and digit-safe (times are 2-digit groups), so no catalog
+# pattern can fire on it — the disjointness invariant.
+_EMAIL_BLOCK = "{name}: {vals}context: related to {tcs}."
+BLOCKS = {
+    "email": _EMAIL_BLOCK,
+    "email_with_attachment": _EMAIL_BLOCK,
+    "chat": (
+        "[09:0{t}] agent: please share the {name}. "
+        "[09:0{t}] client: the {name} is {vals}thanks. "
+        "[09:0{t}] agent: thank you, the {name} has been noted."
+    ),
+    "document": "{name}: {vals}details: related tcs: {tcs}.",
+}
+
+# Per-format frame around the ordered SIT blocks (content_generator.py:
+# 275-303's per-format dispatch): one (header, footer) pair per
+# template variant, u16(doc_id, 'tmplv') % 2 — the reference ships two
+# templates per format (templates/email_templates.md 'Formal Invoice
+# Email' / 'Short Notification', doc_templates.md 'Employee Record' /
+# 'Financial Statement', chat_templates.md 'Support Chat' / 'Quick
+# Exchange'). {d} is the doc id, always letter-prefixed ('d123') so no
+# \b-delimited digit run can reach another SIT's pattern space; the
+# attachment email names its own attachment (content_generator.py:
+# 208-234). Frame and filler prose is all-lowercase on purpose:
+# uppercase words ≥8 chars would false-positive the SWIFT/PASSPORT
+# patterns — the reference's own committed run suffers exactly that
+# (validation_report.txt:52).
+_MAIL_HEAD = "from: records-desk at corp-mail to: billing-team at corp-mail subject: "
+_ATTACHED = (
+    _MAIL_HEAD + "see attached report-d{d}.xlsx",
+    "attached: report-d{d}.xlsx regards, records-desk",
+)
+FRAMES = {
+    "email": (
+        (_MAIL_HEAD + "invoice payment details",
+         "if you need anything else, please let me know. best regards, records-desk"),
+        (_MAIL_HEAD + "payment confirmation", "thanks, records-desk"),
+    ),
+    "email_with_attachment": (_ATTACHED, _ATTACHED),
+    "chat": (
+        ("support chat transcript follows", "end of chat"),
+        ("quick exchange transcript follows", "end of chat"),
+    ),
+    "document": (
+        ("confidential - employee record d{d}",
+         "approved by: records-desk end of record"),
+        ("financial statement - confidential d{d}",
+         "summary: see details above end of record"),
+    ),
+}
+# a real blank line between frame, body and footer (multi-paragraph
+# register; space-padded so ' '-tokenizing stays stable on both engines)
+PARA_BREAK = " \n\n "
+
+
+def template_sql(template: str, exprs: dict[str, str]) -> str:
+    """A BLOCKS/FRAMES template as SQL: literal text and the ``exprs``
+    of its {name} fields, concatenated."""
+    parts = re.split(r"\{(\w+)\}", template)
+    return "concat(" + ", ".join(
+        exprs[p] if i % 2 else _lit(p) for i, p in enumerate(parts) if p or i % 2
+    ) + ")"
 
 
 def sit_block_sql() -> str:
-    """Per-(doc,sit) text block, format-aware — the reference's three
-    body builders (content_generator.py:208-234): email formats get a
-    per-SIT context line (build_email_body), chat gets three
-    timestamped turns with agent/client speaker alternation — ask,
-    answer, acknowledge (build_chat_text, CHAT_LINE_TEMPLATE,
-    multi-turn per the reference's transcripts), document/pdf get a
-    details line (build_document_text). All template prose is lowercase
-    and digit-safe (times are 2-digit groups), so no catalog pattern
-    can fire on it — the disjointness invariant."""
-    vals = "repeat(concat(value, ' | '), instances)"
-    t = "'[09:0', CAST(slot % 10 AS STRING), ']'"
-    return (
-        "(CASE WHEN format IN ('email', 'email_with_attachment') THEN "
-        f"concat(sit_name, ': ', {vals}, 'context: related to ', tcs, '.') "
-        "WHEN format = 'chat' THEN "
-        f"concat({t}, ' agent: please share the ', sit_name, '. ', "
-        f"{t}, ' client: the ', sit_name, ' is ', {vals}, 'thanks. ', "
-        f"{t}, ' agent: thank you, the ', sit_name, ' has been noted.') "
-        "ELSE "
-        f"concat(sit_name, ': ', {vals}, 'details: related tcs: ', tcs, '.') "
-        "END)"
+    """The BLOCKS template of the row's format, as SQL."""
+    fields = {
+        "name": "sit_name",
+        "tcs": "tcs",
+        "vals": "repeat(concat(value, ' | '), instances)",
+        "t": "CAST(slot % 10 AS STRING)",
+    }
+    whens = " ".join(
+        f"WHEN '{f}' THEN {template_sql(t, fields)}"
+        for f, t in BLOCKS.items() if f != "document"
     )
+    return f"(CASE format {whens} ELSE {template_sql(BLOCKS['document'], fields)} END)"
 
 
-# Frame/filler prose (operators/generation.py::_rendered_cte) is
-# all-lowercase on purpose: uppercase words ≥8 chars would
-# false-positive the SWIFT/PASSPORT patterns — the reference's own
-# committed run suffers exactly that (validation_report.txt:52).
-# The pad is multi-register with per-doc register MIXING rather than
-# one repeated token — the reference pads with faker sentences
+# The filler pad is multi-register with per-doc register MIXING rather
+# than one repeated token — the reference pads with faker sentences
 # (content_generator.py:236-242); distributional fidelity, not byte
 # fidelity, is the standard. Each doc walks the 16-word pool with an
 # odd per-doc stride (odd ⇒ coprime with 16 ⇒ a full-cycle
@@ -479,15 +580,10 @@ def sit_block_sql() -> str:
 # corpus carries hundreds of distinct sentence forms instead of the 8
 # rotations a single fixed-stride/fixed-cadence pad produces.
 #
-# Two forms of one pad. ``filler_word_sql`` is the word at position i,
-# which DuckDB maps over 1..n in a lambda. Spark uses the closed form
-# ``filler_pad_sql``: the word index repeats every 16 positions and the
-# full stop every 7 + doc % 4, so a doc's pad is periodic with period
-# lcm(16, 7 + doc % 4) words and depends on doc only through doc % 16.
-# Those 16 period strings are built here, and the pad is the first n
-# words of a repeated period — built-in string functions that compile
-# into the generated code, instead of one interpreted lambda call per
-# padded word.
+# Two forms of one pad: DuckDB maps ``filler_word_sql`` (the word at
+# position i) over positions 1..n in a lambda; the kernel repeats the
+# doc's period (``_filler_period``) — the word index repeats every 16
+# positions and the full stop every 7 + doc % 4.
 FILLER_WORDS = [
     "lorem", "ipsum", "dolor", "amet", "tempor", "vitae", "sed", "magna",
     "elit", "nulla", "fusce", "porta", "ornare", "cursus", "neque", "augue",
@@ -496,9 +592,9 @@ FILLER_WORDS = [
 
 def filler_word_sql(pos: str = "i", doc: str = "doc_id") -> str:
     """One filler word at position ``pos`` of document ``doc`` — pure
-    ANSI arithmetic + CASE, identical on both engines. All words stay
-    lowercase/short (uppercase ≥8-char tokens would false-positive the
-    SWIFT/PASSPORT patterns, see module note)."""
+    ANSI arithmetic + CASE. All words stay lowercase/short (uppercase
+    ≥8-char tokens would false-positive the SWIFT/PASSPORT patterns,
+    see the frame note)."""
     n = len(FILLER_WORDS)
     idx = f"(({pos}) * (1 + 2 * (({doc}) % 4)) + ({doc})) % {n}"
     slen = f"(7 + (({doc}) % 4))"
@@ -524,26 +620,87 @@ def _filler_period(doc: int) -> list[str]:
     ]
 
 
-def filler_pad_sql(n: str, doc: str = "doc_id") -> str:
-    """The first ``n`` words of doc's pad joined by single spaces, in
-    closed form (see the note above ``FILLER_WORDS``): the doc's period
-    string, each word followed by one space, repeated ceil(n / L) times
-    and cut before its n-th space. Equals ``filler_word_sql`` mapped
-    over positions 1..n and space-joined."""
-    m = len(FILLER_WORDS)
-    periods = [_filler_period(r) for r in range(m)]
-    text = (
-        f"CASE ({doc}) % {m} "
-        + " ".join(f"WHEN {r} THEN '{' '.join(p)} '" for r, p in enumerate(periods))
-        + " END"
+def filler_pad(doc: int, n: int) -> str:
+    """The first ``n`` words of doc's pad, space-joined."""
+    period = _filler_period(doc)
+    return " ".join(period[i % len(period)] for i in range(n))
+
+
+def generate_doc(doc_id: int, cfg: GenConfig = DEFAULT_CONFIG):
+    """One document, as the generation SQL derives it: ``(format,
+    word_count_target, text, slots)``, each slot ``(slot, sit_id,
+    label, instances, value)`` in slot order. The kernel Spark runs."""
+    fmt = cfg.formats[_u16(doc_id, "fmt") % len(cfg.formats)]
+    p, (lo1, hi1), (lo2, hi2) = WORD_TARGET
+    if _u16(doc_id, "wsel") / 65536.0 < p:
+        target = lo1 + _u16(doc_id, "wct1") % (hi1 - lo1 + 1)
+    else:
+        target = lo2 + _u16(doc_id, "wct2") % (hi2 - lo2 + 1)
+    q, r = divmod(doc_id, len(CYCLE))
+    base = q * CYCLE_SUM + CYCLE_PREFIX[r]
+    block = BLOCKS.get(fmt, BLOCKS["document"])
+    slots, blocks = [], []
+    for slot in range(base, base + CYCLE[r]):
+        sid, name, _rx, tcs = SIT_CATALOG[min(slot % cfg.n_sits, len(SIT_CATALOG) - 1)]
+        label = "TP" if _u16(slot, "label") / 65536.0 < cfg.tp_ratio else "FP"
+        u = _u16(slot, "instsel") / 65536.0
+        i, (_p, lo, hi) = next(
+            (i, b) for i, b in enumerate(INSTANCE_BUCKETS, 1) if u < b[0]
+        )
+        instances = lo + _u16(slot, f"inst{i}") % (hi - lo + 1)
+        value = _sit_value(sid, label, slot)
+        slots.append((slot, sid, label, instances, value))
+        blocks.append(block.format(
+            name=name, tcs=_tc_list(tcs), vals=(value + " | ") * instances,
+            t=slot % 10,
+        ))
+    body = " ".join(blocks)
+    variant = FRAMES.get(fmt, FRAMES["document"])[_u16(doc_id, "tmplv") % 2]
+    head, foot = (s.replace("{d}", str(doc_id)) for s in variant)
+    pad = filler_pad(doc_id, max(target - len(body.split(" ")), 0))
+    text = f"{head}{PARA_BREAK}{body}{PARA_BREAK}{foot} {pad}"
+    return fmt, target, text, slots
+
+
+KERNEL = "sdp_gen_doc"
+
+
+def _struct(**fields) -> StructType:
+    return StructType([StructField(k, t) for k, t in fields.items()])
+
+
+@pandas_udf(_struct(
+    format=StringType(), word_count_target=IntegerType(), text=StringType(),
+    slots=ArrayType(_struct(
+        slot=LongType(), sit_id=StringType(), label=StringType(),
+        instances=IntegerType(), value=StringType(),
+    )),
+))
+def _gen_doc_udf(
+    doc_id: pd.Series, tp_ratio: pd.Series, n_sits: pd.Series, formats: pd.Series
+) -> pd.DataFrame:
+    return pd.DataFrame(
+        [
+            generate_doc(int(d), GenConfig(
+                tp_ratio=float(t), n_sits=int(n), formats=tuple(f.split(","))
+            ))
+            for d, t, n, f in zip(doc_id, tp_ratio, n_sits, formats)
+        ],
+        columns=["format", "word_count_target", "text", "slots"],
     )
-    # L depends on doc % 4 only; residues 0..3 cover all four lengths
-    period_len = (
-        f"CASE ({doc}) % 4 "
-        + " ".join(f"WHEN {r} THEN {len(periods[r])}" for r in range(4))
-        + " END"
-    )
+
+
+def kernel_call_sql(cfg: GenConfig, doc_id: str = "id") -> str:
+    """The SQL call of the kernel for ``cfg`` on column ``doc_id``."""
     return (
-        f"substring_index(repeat({text}, "
-        f"CAST(ceil(({n}) / {period_len}) AS INT)), ' ', {n})"
+        f"{KERNEL}({doc_id}, {cfg.tp_ratio!r}D, {cfg.n_sits}, "
+        f"'{','.join(cfg.formats)}')"
     )
+
+
+def register_kernel(spark) -> None:
+    """Register the kernel as ``sdp_gen_doc`` in ``spark``. A temporary
+    function belongs to one session, so every Spark generation entry
+    point calls this (idempotent, no Spark job): it keeps sessions the
+    package did not build, ``spark.newSession()`` among them, working."""
+    spark.udf.register(KERNEL, _gen_doc_udf)

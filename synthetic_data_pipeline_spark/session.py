@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .plans.generate import register_kernel
+
 _DEFAULT_CONF: dict[str, str] = {
     # Adaptive execution: runtime shuffle-partition coalescing, skew-join
     # splitting, and join-strategy re-planning — core of the 100TB story.
@@ -71,4 +73,6 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    register_kernel(spark)
+    return spark

@@ -44,7 +44,7 @@ from ..operators import reshaping as rs
 from ..operators import similarity as sim
 from ..operators import sketches as sk
 from ..operators import textops as tx
-from ..sources.tables import normalize_ts
+from ..sources.tables import load_table, normalize_ts
 
 
 def stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -278,10 +278,11 @@ def _against(fn):
     )
 
 
+_VECTOR_COLS = ("vec_id", "label", "CAST(embedding AS array<double>) AS v")
+
+
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return stream_table(spark, sf_dir, "embeddings").selectExpr(
-        "vec_id", "label", "CAST(embedding AS array<double>) AS v"
-    )
+    return stream_table(spark, sf_dir, "embeddings").selectExpr(*_VECTOR_COLS)
 
 
 def _token_budget(batch_df: DataFrame) -> DataFrame:
@@ -312,6 +313,26 @@ _IVF_ARRIVED = (
     expand_u16(hash_u16("CAST(vec_id AS STRING)", "ivfbatch"), "spark")
     + f" % {sim.IVF_BATCH_MOD} = 0"
 )
+
+
+def _ivf_base(spark: SparkSession, sf_dir: str, state_dir: str) -> None:
+    """The IVF index over the vectors outside the arrival slice."""
+    sim.write_ivf_index(
+        load_table(spark, sf_dir, "embeddings")
+        .selectExpr(*_VECTOR_COLS)
+        .filter(f"NOT ({_IVF_ARRIVED})"),
+        state_dir,
+    )
+
+
+def _bm25_base(spark: SparkSession, sf_dir: str, state_dir: str) -> None:
+    """The BM25 index over the documents outside the arrival slice."""
+    tx.write_bm25_index_frame(
+        spark,
+        load_table(spark, sf_dir, "documents").filter(f"NOT ({_ARRIVED})"),
+        state_dir,
+    )
+
 
 TWINS: dict[str, Twin] = {
     # q118: arrivals checked against the static persisted dedup index
@@ -386,10 +407,14 @@ TWINS: dict[str, Twin] = {
     "shard_append": Twin(
         _DOCS, asm.shard_append_batch, asm.write_shard_state, _ARRIVED
     ),
-    # index maintenance: arrivals land in a caller-built index (bm25's
+    # index maintenance: arrivals land in the index of the rest (bm25's
     # and q189's IVF); the sink lands nothing, the index is the output
-    "bm25_index_maintenance": Twin(_DOCS, tx.bm25_index_update, keep=_ARRIVED),
-    "ivf_maintenance": Twin(_vectors, sim.ivf_index_append, keep=_IVF_ARRIVED),
+    "bm25_index_maintenance": Twin(
+        _DOCS, tx.bm25_index_update, _bm25_base, _ARRIVED
+    ),
+    "ivf_maintenance": Twin(
+        _vectors, sim.ivf_index_append, _ivf_base, _IVF_ARRIVED
+    ),
 }
 
 

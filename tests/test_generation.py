@@ -8,15 +8,19 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from synthetic_data_pipeline_spark.operators.generation import (
     _DIALECTS,
+    _REDACT_CONFIG,
     _gen_ctes,
+    _rendered_cte,
     q60_gen_meta_summary,
     q62_gen_validation_report,
 )
 from synthetic_data_pipeline_spark.functions.xsql import expand_u16
 from synthetic_data_pipeline_spark.plans.catalog import SIT_CATALOG
-from synthetic_data_pipeline_spark.plans.generate import DEFAULT_CONFIG
+from synthetic_data_pipeline_spark.plans.generate import DEFAULT_CONFIG, GenConfig
 
 
 def test_quota_coverage(spark, sf_dir):
@@ -423,37 +427,146 @@ def test_generation_compiles_without_codegen_fallback(spark, tmp_path):
         state.clear()
 
 
-def test_filler_closed_form_matches_lambda(spark):
-    """The Spark pad (closed form over the doc's period string) equals
-    the DuckDB pad (one filler word per position, mapped by a lambda)
-    for every doc_id % 16 residue, at lengths around the period. DuckDB
+def test_filler_closed_form_matches_lambda():
+    """The kernel's pad (its doc's period string, repeated) equals the
+    DuckDB pad (one filler word per position, mapped by a lambda) for
+    every doc_id % 16 residue, at lengths around the period. DuckDB
     joins an empty list to NULL, which its concat reads as ''."""
     import math
 
     import duckdb
 
-    from synthetic_data_pipeline_spark.plans.generate import FILLER_WORDS
+    from synthetic_data_pipeline_spark.plans.generate import (
+        FILLER_WORDS,
+        filler_pad,
+    )
 
     rows = []
     for r in range(len(FILLER_WORDS)):
         period = math.lcm(len(FILLER_WORDS), 7 + r % 4)
         for doc in (r, r + 16 * 37):
             for n in (0, 1, period - 1, period, period + 1, 4000):
-                rows.append(f"({doc}, {n})")
-    values = ", ".join(rows)
-
-    def pads(dialect, run):
-        fill = _DIALECTS[dialect]["fill"]("n")
-        sql = (
-            f"SELECT doc_id, n, coalesce({fill}, '') AS pad FROM "
-            f"(SELECT CAST(d AS BIGINT) AS doc_id, CAST(k AS INT) AS n "
-            f"FROM (VALUES {values}) AS t(d, k)) AS v"
-        )
-        return {(doc, n): pad for doc, n, pad in run(sql)}
-
-    spark_pads = pads("spark", lambda q: map(tuple, spark.sql(q).collect()))
-    duck_pads = pads("duckdb", lambda q: duckdb.connect().execute(q).fetchall())
-    assert len(spark_pads) == len(rows)
-    assert spark_pads == duck_pads
-    for (doc, n), pad in spark_pads.items():
+                rows.append((doc, n))
+    values = ", ".join(f"({doc}, {n})" for doc, n in rows)
+    fill = _DIALECTS["duckdb"]["fill"]("n")
+    sql = (
+        f"SELECT doc_id, n, coalesce({fill}, '') AS pad FROM "
+        f"(SELECT CAST(d AS BIGINT) AS doc_id, CAST(k AS INT) AS n "
+        f"FROM (VALUES {values}) AS t(d, k)) AS v"
+    )
+    duck_pads = {
+        (doc, n): pad for doc, n, pad in duckdb.connect().execute(sql).fetchall()
+    }
+    kernel_pads = {(doc, n): filler_pad(doc, n) for doc, n in rows}
+    assert len(kernel_pads) == len(rows)
+    assert kernel_pads == duck_pads
+    for (doc, n), pad in kernel_pads.items():
         assert (len(pad.split(" ")) if pad else 0) == n, (doc, n)
+
+
+_PARITY_CONFIGS = {
+    "default": DEFAULT_CONFIG,
+    "redact": _REDACT_CONFIG,
+    "other": GenConfig(
+        per_sit_count=10, tp_ratio=0.3, n_sits=20,
+        formats=("chat", "pdf", "email"),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PARITY_CONFIGS))
+def test_kernel_matches_sql_oracle(spark, name):
+    """The Spark kernel's ``rendered`` and ``vals`` rows equal DuckDB's
+    run of the shared generation SQL, row for row — two independent
+    implementations of one generator."""
+    import duckdb
+
+    cfg = _PARITY_CONFIGS[name]
+    queries = {
+        "rendered": "SELECT doc_id, format, word_count_target, text FROM rendered",
+        "vals": (
+            "SELECT doc_id, format, word_count_target, slot, sit_id, label, "
+            "instances, sit_name, tcs, confidence, value, block FROM vals"
+        ),
+    }
+    for cte, select in queries.items():
+        got = {}
+        for dialect in ("spark", "duckdb"):
+            d = _DIALECTS[dialect]
+            sql = expand_u16(
+                f"WITH {_gen_ctes(cfg, d)}, {_rendered_cte(d)} {select}",
+                dialect,
+            )
+            if dialect == "spark":
+                rows = map(tuple, spark.sql(sql).collect())
+            else:
+                rows = duckdb.connect().execute(sql).fetchall()
+            got[dialect] = sorted(rows)
+        assert len(got["spark"]) == len(got["duckdb"]) > 0, cte
+        assert got["spark"] == got["duckdb"], cte
+
+
+def test_spark_generation_plan_shape(spark):
+    """Spark generates with the kernel, not the large generation SQL:
+    no Spark generation query carries an md5 draw or a REPARTITION
+    cut, and the sink (generation → rendition UDF) runs with no
+    exchange."""
+    from synthetic_data_pipeline_spark.operators import mapping
+    from synthetic_data_pipeline_spark.operators.generation import (
+        _corpus_stats_sql,
+        _meta_summary_sql,
+        _rendered_sql,
+    )
+    from synthetic_data_pipeline_spark.sources.renditions import add_renditions
+
+    d = _DIALECTS["spark"]
+    texts = [
+        _rendered_sql(DEFAULT_CONFIG),
+        f"WITH {_gen_ctes(DEFAULT_CONFIG, d)}, {_rendered_cte(d)} "
+        "SELECT doc_id, format, text FROM rendered",
+        _meta_summary_sql(DEFAULT_CONFIG, "spark"),
+        _corpus_stats_sql(DEFAULT_CONFIG, "spark"),
+        mapping._unpack_sql(DEFAULT_CONFIG, "spark"),
+        mapping._upsert_sql(DEFAULT_CONFIG, "spark"),
+        mapping._tcs_sql(DEFAULT_CONFIG, "spark"),
+    ]
+    for text in texts:
+        assert "md5(" not in text.lower() and "REPARTITION" not in text.upper()
+    sink = add_renditions(spark.sql(_rendered_sql(DEFAULT_CONFIG)))
+    plan = sink._jdf.queryExecution().executedPlan().toString()
+    assert "sdp_gen_doc" in plan and "renditions_udf" in plan
+    assert "Exchange" not in plan, plan
+
+
+def test_generation_on_a_foreign_session(spark, sf_dir, tmp_path):
+    """A session the package did not build (``spark.newSession()``, as
+    an external harness may hand over) has no kernel registered; the
+    generation queries and the report register it and give the default
+    session's results."""
+    from synthetic_data_pipeline_spark.operators import generation, mapping
+    from synthetic_data_pipeline_spark.operators.generation import (
+        q61_gen_corpus_stats,
+        write_validation_report,
+    )
+
+    queries = [
+        q60_gen_meta_summary,
+        q61_gen_corpus_stats,
+        mapping.q63_mapping_pack_roundtrip,
+        mapping.q64_mapping_upsert,
+        mapping.q65_distinct_tcs_histogram,
+    ]
+
+    def run(session, out):
+        results = [sorted(map(tuple, q(session, sf_dir).collect())) for q in queries]
+        # the memo is per application, so a cleared one makes the
+        # report build its frames in ``session``
+        generation.clear_scanned_pairs_cache()
+        return results, write_validation_report(session, str(out))
+
+    want = run(spark, tmp_path / "default.txt")
+    other = spark.newSession()
+    assert not other.catalog.functionExists("sdp_gen_doc")
+    got = run(other, tmp_path / "foreign.txt")
+    generation.clear_scanned_pairs_cache()
+    assert all(want[0]) and got == want

@@ -819,6 +819,54 @@ def test_ivf_maintenance_stream_equals_batch(spark, sf_dir, tmp_path):
     assert got == want and len(want) > 0
 
 
+def test_index_maintenance_twins_build_their_own_index(
+    spark, sf_dir, tmp_path
+):
+    """Without a caller's index, the bm25 and IVF maintenance rows
+    index the non-arrival slice themselves, so the drained index gives
+    the results of the caller-built-index tests above."""
+    from synthetic_data_pipeline_spark.functions.xsql import (
+        expand_u16,
+        hash_u16,
+    )
+    from synthetic_data_pipeline_spark.operators.similarity import (
+        IVF_BATCH_MOD,
+        _as_double,
+        ivf_drift_report,
+        ivf_maintenance_report,
+    )
+    from synthetic_data_pipeline_spark.operators.textops import (
+        BM25_QUERY_MOD,
+        bm25_from_index,
+        q164_bm25_retrieval,
+    )
+    from synthetic_data_pipeline_spark.sources.tables import load_table
+
+    n, idx = run_twin(
+        "bm25_index_maintenance", spark, sf_dir, str(tmp_path / "bm25")
+    )
+    assert n >= 1
+    docs = load_table(spark, sf_dir, "documents")
+    queries = docs.filter(F.col("doc_id") % BM25_QUERY_MOD == 0)
+    got = sorted(map(tuple, bm25_from_index(spark, idx, queries).collect()))
+    want = sorted(map(tuple, q164_bm25_retrieval(spark, sf_dir).collect()))
+    assert got == want and len(want) > 0
+
+    n, idx = run_twin("ivf_maintenance", spark, sf_dir, str(tmp_path / "ivf"))
+    assert n >= 1
+    b = expand_u16(hash_u16("CAST(vec_id AS STRING)", "ivfbatch"), "spark")
+    emb = (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "label", _as_double("embedding").alias("v"))
+        .withColumn("_new", F.expr(f"{b} % {IVF_BATCH_MOD} = 0"))
+    )
+    old = emb.filter(~F.col("_new")).drop("_new")
+    new = emb.filter(F.col("_new")).drop("_new")
+    got = sorted(map(tuple, ivf_drift_report(spark, idx).collect()))
+    want = sorted(map(tuple, ivf_maintenance_report(old, new).collect()))
+    assert got == want and len(want) > 0
+
+
 def test_cohort_retention_stream_equals_batch(spark, sf_dir, tmp_path):
     """The q193 streaming twin: retention matrix computed from the
     streamed per-batch (user, day) activity sink must equal the batch
