@@ -13,22 +13,31 @@ This makes generation itself oracle-checked — stronger than the
 reference, whose committed run fails its own validation
 (output/validation_report.txt:51-52).
 
+The validator's regex scan is likewise written once per engine:
+Spark runs ``plans/catalog.py::real_matches`` (Python ``re`` over
+``SIT_PATTERNS``) as one Arrow pandas UDF over the assigned pairs;
+DuckDB runs one SQL CASE of ``regexp_extract_all`` calls (``_pairs_sql``),
+so the scan's oracle parity also compares two regex engines.
+
 Scale shape: range() → the kernel, one narrow map per document (no
 exchange before the rendition UDF) → per-(doc, SIT) pairs exploded
-from the kernel's slots beside their text → groupBy(sit) for the
-report.
+from the kernel's slots beside their text → the scan UDF, one narrow
+map per pair → groupBy(sit) for the report.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, StringType
 
 from .. import state
 from ..plans.catalog import (
     RE2_SAFE_IDS,
-    SIT_CATALOG,
+    SIT_PATTERNS,
     is_placeholder_duckdb,
-    is_placeholder_spark_sql,
+    real_matches,
 )
 from ..functions.rounding import apply_sql_eround
 from ..functions.xsql import expand_u16, hash_u16
@@ -135,21 +144,15 @@ _DIALECTS = {
             "rendered AS (SELECT doc_id, format, word_count_target, text FROM gen)"
         ),
         "len": "size",
-        "filter": "filter",
-        "ph": is_placeholder_spark_sql,
-        "esc": lambda pat: pat.replace("\\", "\\\\"),
     },
     "duckdb": {
         "gen": _sql_gen_ctes,
         "render": _sql_rendered_cte,
         "len": "len",
-        "filter": "list_filter",
         "fill": lambda n: (
             f"array_to_string(list_transform(range(1, ({n}) + 1), "
             f"i -> {filler_word_sql()}), ' ')"
         ),
-        "ph": is_placeholder_duckdb,
-        "esc": lambda pat: pat,
     },
 }
 
@@ -212,39 +215,56 @@ def _corpus_stats_sql(cfg: GenConfig, dialect: str) -> str:
     """, dialect))
 
 
-def _validation_sql(cfg: GenConfig, dialect: str) -> str:
-    """The reference validator (modules/validator.py:235-360) as one
-    query: per (doc, sit), count non-placeholder regex matches in the
-    rendered text; TP rows are satisfied when real ≥ instances, FP rows
-    are flagged by any real match."""
-    d = _DIALECTS[dialect]
-    whens = " ".join(_ms_whens(d))
-    filtered = _ms_filtered(d, f"(CASE sit_id {whens} ELSE NULL END)")
-    real = f"coalesce({d['len']}({filtered}), 0)"
-    # TC SITs (empty regex) are generated but never scanned — same skip
-    # as the reference validator; the Spark q62 path filters them out
-    # before its scan join (_build_scanned).
+def _ms_sql(sit_id: str, text: str) -> str:
+    """DuckDB form of ``real_matches``: the non-placeholder matches of
+    SIT ``sit_id``'s pattern in ``text``, in match order. One CASE runs
+    the row's own pattern (RE2 needs a literal pattern per call)."""
+    whens = " ".join(
+        f"WHEN '{sid}' THEN regexp_extract_all({text}, '{pat.pattern}', 0)"
+        for sid, pat in SIT_PATTERNS.items()
+    )
+    return (
+        f"list_filter(CASE {sit_id} {whens} END, "
+        f"x -> NOT {is_placeholder_duckdb('x')})"
+    )
+
+
+def _pairs_sql(cfg: GenConfig) -> str:
+    """DuckDB WITH-clause body ending in ``pairs`` (doc_id, sit_id,
+    label, instances, text, ms): ``_scanned_pairs`` in SQL. TC SITs
+    (empty regex) are generated but never scanned, like the reference
+    validator."""
+    d = _DIALECTS["duckdb"]
     scan_ids = ", ".join(f"'{sid}'" for sid in RE2_SAFE_IDS)
-    return apply_sql_eround(expand_u16(f"""
-      WITH {_gen_ctes(cfg, d)},
+    return f"""
+      {_gen_ctes(cfg, d)},
       {_rendered_cte(d)},
-      scanned AS (
-        SELECT v.sit_id, v.doc_id, v.label, v.instances,
-               {real} AS real_matches
+      pairs AS (
+        SELECT v.doc_id, v.sit_id, v.label, v.instances, r.text,
+               {_ms_sql("v.sit_id", "r.text")} AS ms
         FROM vals v JOIN rendered r ON v.doc_id = r.doc_id
         WHERE v.sit_id IN ({scan_ids})
       )
+    """
+
+
+def _validation_sql(cfg: GenConfig) -> str:
+    """The reference validator (modules/validator.py:235-360) as one
+    DuckDB query over ``pairs``: TP rows are satisfied when their real
+    matches ≥ instances, FP rows are flagged by any real match."""
+    return apply_sql_eround(expand_u16(f"""
+      WITH {_pairs_sql(cfg)}
       SELECT sit_id,
              count(*) AS n_docs,
              CAST(sum(CASE WHEN label = 'TP' THEN 1 ELSE 0 END) AS BIGINT) AS tp_total,
-             CAST(sum(CASE WHEN label = 'TP' AND real_matches >= instances
+             CAST(sum(CASE WHEN label = 'TP' AND len(ms) >= instances
                            THEN 1 ELSE 0 END) AS BIGINT) AS tp_satisfied,
-             CAST(sum(CASE WHEN label = 'FP' AND real_matches > 0
+             CAST(sum(CASE WHEN label = 'FP' AND len(ms) > 0
                            THEN 1 ELSE 0 END) AS BIGINT) AS fp_flagged,
              CAST(sum(instances) AS BIGINT) AS total_instances
-      FROM scanned
+      FROM pairs
       GROUP BY sit_id ORDER BY sit_id
-    """, dialect))
+    """, "duckdb"))
 
 
 def q60_gen_meta_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,32 +273,6 @@ def q60_gen_meta_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q61_gen_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _spark_sql(spark, _corpus_stats_sql(DEFAULT_CONFIG, "spark"))
-
-
-def _ms_whens(d: dict) -> list[str]:
-    """Per-SIT WHEN branches of the scan dispatch: for the row's own
-    sit_id, the RAW matches of that SIT's pattern in the rendered
-    text. One literal regex per branch (both engines require foldable
-    patterns; literals also keep the compiled regex cached in
-    codegen). The placeholder filter is applied ONCE by the caller
-    (``_ms_filtered``) on the dispatched array — inlining the large
-    placeholder expression per branch made Catalyst PLANNING dominate
-    the scan (same finding as sitscan.sit_scan_frame, round 8)."""
-    return [
-        f"WHEN '{sid}' THEN "
-        f"regexp_extract_all(text, '{d['esc'](rx)}', 0)"
-        for sid, _n, rx, _t in SIT_CATALOG
-        if sid in RE2_SAFE_IDS
-    ]
-
-
-def _ms_filtered(d: dict, arr: str) -> str:
-    """Non-placeholder matches of a dispatched match array — the single
-    application point of the placeholder predicate. filter(NULL) is
-    NULL in both dialects, so unmatched sit_ids stay NULL exactly as
-    the bare CASE dispatch left them."""
-    ph = d["ph"]("x")
-    return f"{d['filter']}({arr}, x -> NOT {ph})"
 
 
 def clear_scanned_pairs_cache() -> None:
@@ -334,58 +328,45 @@ def _scanned_pairs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
     ~4 assigned patterns, not all |catalog| of them — at 100 TB that is
     the difference between O(pairs) and O(docs × catalog) regex work.
 
-    The pairs are the kernel's slots exploded beside their document's
-    text (``_rendered_docs``), so no join is needed. The 33-branch regex
-    dispatch is split into 6-branch CASE chunks, each its own column,
-    materialized with localCheckpoint before the chunks are coalesced:
-    one inlined CASE (regex + placeholder filter per branch) exceeds the
-    JVM's 64 KB method limit.
+    ``_build_scanned`` under an eager localCheckpoint, so the scan runs
+    once per memo entry and ``count()`` on it cannot prune the UDF.
     """
     return state.get_or_build(
-        spark, "scanned_pairs", repr(cfg), lambda: _build_scanned(spark, cfg)
+        spark,
+        "scanned_pairs",
+        repr(cfg),
+        lambda: _build_scanned(spark, cfg).localCheckpoint(),
     )
 
 
-def _build_scanned(spark: SparkSession, cfg: GenConfig):
+@pandas_udf(ArrayType(StringType()))
+def _scan_udf(sit_id: pd.Series, text: pd.Series) -> pd.Series:
+    return pd.Series([real_matches(s, t) for s, t in zip(sit_id, text)])
+
+
+def _build_scanned(spark: SparkSession, cfg: GenConfig) -> DataFrame:
+    """The scan's plan: the kernel's slots of the scanned SITs exploded
+    beside their document's text (``_rendered_docs``, so no join), and
+    one Arrow pandas UDF that returns ``ms``, the row's non-placeholder
+    matches in match order (``real_matches``). The patterns compile once
+    per Python worker, when it imports the catalog."""
     from pyspark.sql import functions as F
 
-    d = _DIALECTS["spark"]
-    whens = _ms_whens(d)
-    chunk = 6
-    chunks = [
-        f"(CASE sit_id {' '.join(whens[i:i + chunk])} ELSE NULL END)"
-        for i in range(0, len(whens), chunk)
-    ]
-    staged = (
+    return (
         _rendered_docs(spark, cfg)
         .selectExpr("doc_id", "text", "inline(slots)")
         .filter(F.col("sit_id").isin(RE2_SAFE_IDS))
-        .selectExpr(
-            "doc_id",
-            "sit_id",
-            "label",
-            "instances",
-            "text",
-            *[f"{c} AS _ms{i}" for i, c in enumerate(chunks)],
+        .select(
+            "doc_id", "sit_id", "label", "instances", "text",
+            _scan_udf("sit_id", "text").alias("ms"),
         )
-        .localCheckpoint()
-    )
-    # placeholder filter applied ONCE on the coalesced dispatch (the
-    # branches carry raw matches; see _ms_whens)
-    return staged.selectExpr(
-        "doc_id", "sit_id", "label", "instances", "text",
-        _ms_filtered(
-            d,
-            "coalesce(" + ", ".join(f"_ms{i}" for i in range(len(chunks)))
-            + ")",
-        ) + " AS ms",
     )
 
 
 def q62_gen_validation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-SIT validation counts over the per-assigned-pair scan
-    (``_scanned_pairs``) — the same relation as the single-SQL DuckDB
-    oracle, whose regex dispatch stays one CASE."""
+    (``_scanned_pairs``) — the same relation as the DuckDB oracle's
+    ``pairs`` (``_pairs_sql``)."""
     from pyspark.sql import functions as F
 
     return (
@@ -438,16 +419,13 @@ def q99_redact_generated(spark: SparkSession, sf_dir: str) -> DataFrame:
     return redact_df(_rendered_docs(spark, _REDACT_CONFIG))
 
 
-def _redact_generated_sql(cfg: GenConfig, dialect: str) -> str:
-    """Chain-form oracle for q99 (see q99_redact_generated docstring)."""
-    d = _DIALECTS[dialect]
+def _redact_generated_sql(cfg: GenConfig) -> str:
+    """Chain-form DuckDB oracle for q99 (see q99_redact_generated
+    docstring)."""
+    d = _DIALECTS["duckdb"]
     col = "text"
-    for sit_id, _name, regex, _tcs in SIT_CATALOG:
-        if sit_id not in RE2_SAFE_IDS:
-            continue
-        pat = regex.replace("'", "''")
-        flag = ", 'g'" if dialect == "duckdb" else ""
-        col = f"regexp_replace({col}, '{pat}', '[{sit_id}]'{flag})"
+    for sit_id, pat in SIT_PATTERNS.items():
+        col = f"regexp_replace({col}, '{pat.pattern}', '[{sit_id}]', 'g')"
     return expand_u16(f"""
       WITH {_gen_ctes(cfg, d)},
       {_rendered_cte(d)}
@@ -456,7 +434,7 @@ def _redact_generated_sql(cfg: GenConfig, dialect: str) -> str:
                   AS BIGINT) AS n_redactions,
              md5({col}) AS redacted_md5
       FROM rendered ORDER BY doc_id
-    """, dialect)
+    """, "duckdb")
 
 
 def q91_sit_issue_list(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -488,24 +466,12 @@ def q91_sit_issue_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cap_issues(matched)
 
 
-def _issue_list_sql(cfg: GenConfig, dialect: str) -> str:
-    """Single-SQL form of q91 (the DuckDB oracle; DuckDB has no codegen
-    method limit so the dispatch stays one CASE)."""
-    d = _DIALECTS[dialect]
-    whens = " ".join(_ms_whens(d))
-    scan_ids = ", ".join(f"'{sid}'" for sid in RE2_SAFE_IDS)
-    unnest = "explode" if dialect == "spark" else "unnest"
+def _issue_list_sql(cfg: GenConfig) -> str:
+    """Single-SQL form of q91 (the DuckDB oracle)."""
     return expand_u16(f"""
-      WITH {_gen_ctes(cfg, d)},
-      {_rendered_cte(d)},
-      pairs AS (
-        SELECT v.sit_id, v.doc_id, r.text,
-               {_ms_filtered(d, f"(CASE v.sit_id {whens} ELSE NULL END)")} AS ms
-        FROM vals v JOIN rendered r ON v.doc_id = r.doc_id
-        WHERE v.sit_id IN ({scan_ids})
-      ),
+      WITH {_pairs_sql(cfg)},
       mrows AS (
-        SELECT sit_id, doc_id, text, {unnest}(ms) AS match FROM pairs
+        SELECT sit_id, doc_id, text, unnest(ms) AS match FROM pairs
       ),
       p AS (
         SELECT DISTINCT sit_id, doc_id, match,
@@ -523,7 +489,7 @@ def _issue_list_sql(cfg: GenConfig, dialect: str) -> str:
       SELECT sit_id, doc_id, match, start, excerpt
       FROM ranked WHERE rn <= 5
       ORDER BY sit_id, doc_id, match LIMIT 500
-    """, dialect)
+    """, "duckdb")
 
 
 # --- q98: per-doc validation-failure list (the reference validator's
@@ -619,21 +585,11 @@ def q98_validation_failures(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cap_issues(validation_failures(pert), order_cols=("doc_id",))
 
 
-def _failures_sql(cfg: GenConfig, dialect: str) -> str:
-    """Single-SQL twin of q98 — same fault-injection constants, same
-    caps."""
-    d = _DIALECTS[dialect]
-    whens = " ".join(_ms_whens(d))
-    scan_ids = ", ".join(f"'{sid}'" for sid in RE2_SAFE_IDS)
+def _failures_sql(cfg: GenConfig) -> str:
+    """Single-SQL DuckDB twin of q98 — same fault-injection constants,
+    same caps."""
     return expand_u16(f"""
-      WITH {_gen_ctes(cfg, d)},
-      {_rendered_cte(d)},
-      pairs AS (
-        SELECT v.doc_id, v.sit_id, v.label, v.instances,
-               {_ms_filtered(d, f"(CASE v.sit_id {whens} ELSE NULL END)")} AS ms
-        FROM vals v JOIN rendered r ON v.doc_id = r.doc_id
-        WHERE v.sit_id IN ({scan_ids})
-      ),
+      WITH {_pairs_sql(cfg)},
       pert AS (
         SELECT doc_id, sit_id,
                CASE WHEN doc_id % {_FAIL_FLIP_MOD} = 0 AND label = 'TP'
@@ -648,7 +604,7 @@ def _failures_sql(cfg: GenConfig, dialect: str) -> str:
         SELECT sit_id, doc_id, label,
                CAST(CASE WHEN label = 'TP' THEN greatest(1, instances)
                          ELSE 0 END AS BIGINT) AS needed,
-               CAST({d['len']}(ms) AS BIGINT) AS found
+               CAST(len(ms) AS BIGINT) AS found
         FROM pert
       ),
       iss AS (
@@ -665,7 +621,7 @@ def _failures_sql(cfg: GenConfig, dialect: str) -> str:
       SELECT sit_id, doc_id, label, needed, found, issue_type
       FROM ranked WHERE rn <= 5
       ORDER BY sit_id, doc_id LIMIT 500
-    """, dialect)
+    """, "duckdb")
 
 
 def write_validation_report(
@@ -785,8 +741,8 @@ QUERIES = {
 ORACLES = {
     "q60_gen_meta_summary": _meta_summary_sql(DEFAULT_CONFIG, "duckdb"),
     "q61_gen_corpus_stats": _corpus_stats_sql(DEFAULT_CONFIG, "duckdb"),
-    "q62_gen_validation_report": _validation_sql(DEFAULT_CONFIG, "duckdb"),
-    "q91_sit_issue_list": _issue_list_sql(DEFAULT_CONFIG, "duckdb"),
-    "q98_validation_failures": _failures_sql(DEFAULT_CONFIG, "duckdb"),
-    "q99_redact_generated": _redact_generated_sql(_REDACT_CONFIG, "duckdb"),
+    "q62_gen_validation_report": _validation_sql(DEFAULT_CONFIG),
+    "q91_sit_issue_list": _issue_list_sql(DEFAULT_CONFIG),
+    "q98_validation_failures": _failures_sql(DEFAULT_CONFIG),
+    "q99_redact_generated": _redact_generated_sql(_REDACT_CONFIG),
 }

@@ -7,12 +7,20 @@ a small code table (SURVEY.md §1.1) that the generation and scan SQL
 is built from.
 
 Patterns here are re-authored, not copied: each is normalized to be
-semantically identical under Python ``re``, Java ``java.util.regex``
-(Spark's rlike / regexp_extract_all) and RE2 (DuckDB) — flags hoisted
-to a literal prefix, no lookbehind (SURVEY.md §4.3.3 portability trap).
+semantically identical under Python ``re`` (with ``re.ASCII``), Java
+``java.util.regex`` (Spark's rlike / regexp_extract_all) and RE2
+(DuckDB) — flags hoisted to a literal prefix, no lookbehind (SURVEY.md
+§4.3.3 portability trap).
+
+The placeholder predicate exists in three forms over one spec: a Spark
+Column (``is_placeholder``), DuckDB SQL text (``is_placeholder_duckdb``)
+and Python (``is_placeholder_py``, used by the Spark generation scan
+beside ``SIT_PATTERNS``).
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import functions as F
 
@@ -115,6 +123,14 @@ SIT_CATALOG += [(sid, name, "", tcs) for sid, name, tcs in TC_SITS]
 # currently all non-TC SITs. The \1 filter stays as a guard.
 RE2_SAFE_IDS = [s[0] for s in SIT_CATALOG if s[2] and "\\1" not in s[2]]
 
+# The scanned SITs' patterns compiled once for Python ``re``. ``re.ASCII``
+# gives ``\d``, ``\b`` and ``(?i)`` the ASCII meaning Java and RE2 give
+# them, so a Python scan finds the same matches as the SQL scans.
+SIT_PATTERNS: dict[str, re.Pattern] = {
+    sid: re.compile(rx, re.ASCII) for sid, _n, rx, _t in SIT_CATALOG
+    if sid in RE2_SAFE_IDS
+}
+
 
 def is_placeholder(col: F.Column) -> F.Column:
     """Reusable Column predicate classifying a matched value as a fake/
@@ -145,29 +161,6 @@ def is_placeholder(col: F.Column) -> F.Column:
     )
 
 
-# Spark-SQL-dialect twin of ``is_placeholder`` (for queries built as
-# SQL text; Spark string literals process backslash escapes, DuckDB's
-# don't — regexes here are escape-free on purpose).
-def is_placeholder_spark_sql(var: str) -> str:
-    s = f"lower(trim({var}))"
-    alnum = f"regexp_replace({s}, '[^a-z0-9]', '')"
-    digits = f"regexp_replace({s}, '[^0-9]', '')"
-    return (
-        "("
-        f"position('xxx' IN {s}) > 0 OR "
-        f"position('redacted' IN {s}) > 0 OR "
-        f"position('placeholder' IN {s}) > 0 OR "
-        f"position('example' IN {s}) > 0 OR "
-        f"position('sample' IN {s}) > 0 OR "
-        f"{s} RLIKE '^[x*\\\\-_]{{3,}}$' OR "
-        f"length({s}) <= 2 OR "
-        f"(length({alnum}) > 0 AND length(replace({alnum}, substr({alnum}, 1, 1), '')) = 0) OR "
-        f"(length({digits}) > 0 AND {digits} RLIKE '^0+$') OR "
-        f"CAST(length({alnum}) AS DOUBLE) < length({s}) * 0.4"
-        ")"
-    )
-
-
 # DuckDB-dialect twin of ``is_placeholder`` for oracle SQL generation.
 # Same spec, RE2 + DuckDB function names ('g' flag: DuckDB's
 # regexp_replace is first-match-only by default, Spark's is global).
@@ -189,3 +182,27 @@ def is_placeholder_duckdb(var: str) -> str:
         f"CAST(length({alnum}) AS DOUBLE) < length({s}) * 0.4"
         ")"
     )
+
+
+def is_placeholder_py(s: str) -> bool:
+    """Python twin of ``is_placeholder``. ``strip(" ")`` is SQL's
+    ``trim``, which removes spaces only."""
+    s = s.strip(" ").lower()
+    digits = re.sub(r"[^0-9]", "", s)
+    alnum = re.sub(r"[^a-z0-9]", "", s)
+    return (
+        any(m in s for m in ("xxx", "redacted", "placeholder", "example", "sample"))
+        or re.fullmatch(r"[x*\-_]{3,}", s) is not None
+        or len(s) <= 2
+        or len(set(alnum)) == 1
+        or set(digits) == {"0"}
+        or len(alnum) < len(s) * 0.4
+    )
+
+
+def real_matches(sit_id: str, text: str) -> list[str]:
+    """The non-placeholder matches of ``sit_id``'s pattern in ``text``,
+    in match order: the Python form of the validator's per-pair scan
+    (modules/validator.py:279-299)."""
+    ms = (m[0] for m in SIT_PATTERNS[sit_id].finditer(text))
+    return [m for m in ms if not is_placeholder_py(m)]

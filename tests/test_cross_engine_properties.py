@@ -1,7 +1,7 @@
 """Property-style cross-engine parity for the foundational functions:
-the md5 counter-mode draws and the 3-dialect is_placeholder predicate
-must agree value-for-value between Spark and DuckDB on adversarial
-inputs — these two primitives underpin every oracle match.
+the md5 counter-mode draws and the is_placeholder predicate (Spark
+Column, DuckDB SQL and Python forms) must agree value-for-value on
+adversarial inputs — these two primitives underpin every oracle match.
 """
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ from synthetic_data_pipeline_spark.functions.xsql import expand_u16, hash_u16, h
 from synthetic_data_pipeline_spark.plans.catalog import (
     is_placeholder,
     is_placeholder_duckdb,
+    is_placeholder_py,
 )
 
 random.seed(1234)
@@ -81,6 +82,9 @@ def test_is_placeholder_dialects_agree(spark):
     }
     diff = {v: (got[v], want.get(v)) for v in got if got[v] != want.get(v)}
     assert not diff, f"dialect disagreement on: {diff}"
+    py_diff = {v: (got[v], is_placeholder_py(v)) for v in vals
+               if got[v] != is_placeholder_py(v)}
+    assert not py_diff, f"Python form disagrees on: {py_diff}"
     # sanity of the spec itself
     assert got["0000 0000 0000 0000"] and got["999.999.999.999"]
     assert got["xxx"] and got["REDACTED_7"] and got["a sample value"]

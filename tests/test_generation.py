@@ -19,7 +19,11 @@ from synthetic_data_pipeline_spark.operators.generation import (
     q62_gen_validation_report,
 )
 from synthetic_data_pipeline_spark.functions.xsql import expand_u16
-from synthetic_data_pipeline_spark.plans.catalog import SIT_CATALOG
+from synthetic_data_pipeline_spark.plans.catalog import (
+    SIT_CATALOG,
+    SIT_PATTERNS,
+    real_matches,
+)
 from synthetic_data_pipeline_spark.plans.generate import DEFAULT_CONFIG, GenConfig
 
 
@@ -85,33 +89,14 @@ def test_tp_values_match_python_re(spark, sf_dir):
             "spark",
         )
     ).collect()
-    patterns = {sid: re.compile(rx) for sid, _n, rx, _t in SIT_CATALOG if rx}
     n_tp = 0
     for r in vals:
-        if r.label == "TP" and r.sit_id in patterns:
+        if r.label == "TP" and r.sit_id in SIT_PATTERNS:
             n_tp += 1
-            assert patterns[r.sit_id].search(r.value), (
+            assert SIT_PATTERNS[r.sit_id].search(r.value), (
                 f"{r.sit_id} TP value {r.value!r} fails python re"
             )
     assert n_tp > 100
-
-
-def _is_placeholder_py(s: str) -> bool:
-    """Python mirror of plans/catalog.py::is_placeholder (spec test)."""
-    s = s.strip().lower()
-    digits = re.sub(r"[^0-9]", "", s)
-    alnum = re.sub(r"[^a-z0-9]", "", s)
-    if any(m in s for m in ("xxx", "redacted", "placeholder", "example", "sample")):
-        return True
-    if re.fullmatch(r"[x*\-_]{3,}", s):
-        return True
-    if len(s) <= 2:
-        return True
-    if alnum and len(set(alnum)) == 1:
-        return True
-    if digits and set(digits) == {"0"}:
-        return True
-    return len(alnum) < len(s) * 0.4
 
 
 def test_catalog_pairwise_disjoint():
@@ -130,26 +115,21 @@ def test_catalog_pairwise_disjoint():
     )
     rows = duckdb.connect().execute(sql).fetchall()
     assert len(rows) > 1000
-    pats = {sid: re.compile(rx) for sid, _n, rx, _t in SIT_CATALOG if rx}
     seen_sits = set()
     for sid, label, value, inst, block in rows:
         seen_sits.add(sid)
-        own = pats.get(sid)
-        real_own = (
-            [m for m in own.findall(block) if not _is_placeholder_py(m)]
-            if own
-            else []
-        )
+        own = sid in SIT_PATTERNS
+        real_own = real_matches(sid, block) if own else []
         if own and label == "TP":
             assert len(real_own) >= inst, (
                 f"{sid} TP block yields {len(real_own)} < {inst} matches: {block[:120]!r}"
             )
         elif own:
             assert not real_own, f"{sid} FP block self-matches: {real_own[:3]}"
-        for other, pat in pats.items():
+        for other in SIT_PATTERNS:
             if other == sid:
                 continue
-            cross = [m for m in pat.findall(block) if not _is_placeholder_py(m)]
+            cross = real_matches(other, block)
             assert not cross, (
                 f"{other} fires on {sid}/{label} block: {cross[:3]} in {block[:140]!r}"
             )
@@ -570,3 +550,82 @@ def test_generation_on_a_foreign_session(spark, sf_dir, tmp_path):
     got = run(other, tmp_path / "foreign.txt")
     generation.clear_scanned_pairs_cache()
     assert all(want[0]) and got == want
+
+
+@pytest.mark.parametrize("name", ["default", "other"])
+def test_scanned_pairs_match_duckdb_pairs(spark, name):
+    """The Spark scan (Python ``re`` in an Arrow UDF) and DuckDB's
+    ``pairs`` (RE2 in SQL) give the same ``ms`` for every assigned
+    pair, list order included: the report's sample is order-sensitive."""
+    import duckdb
+
+    from synthetic_data_pipeline_spark.operators import generation
+    from synthetic_data_pipeline_spark.operators.generation import _pairs_sql
+
+    cfg = _PARITY_CONFIGS[name]
+    got = sorted(
+        (r.doc_id, r.sit_id, list(r.ms))
+        for r in generation._scanned_pairs(spark, cfg)
+        .select("doc_id", "sit_id", "ms")
+        .collect()
+    )
+    sql = expand_u16(
+        f"WITH {_pairs_sql(cfg)} SELECT doc_id, sit_id, ms FROM pairs", "duckdb"
+    )
+    want = sorted(
+        (d, s, list(ms)) for d, s, ms in duckdb.connect().execute(sql).fetchall()
+    )
+    assert len(got) == len(want) > 0
+    # some lists hold several matches, so their order is checked
+    assert any(len(ms) > 1 for _d, _s, ms in got)
+    assert got == want
+
+
+def test_scan_plan_shape(spark):
+    """The Spark scan runs no JVM regex: its executed plan has no
+    ``regexp_extract_all`` or ``RLike``, and exactly one Arrow UDF
+    (the scan; the kernel sits behind the rendered corpus's
+    checkpoint)."""
+    from synthetic_data_pipeline_spark.operators.generation import _build_scanned
+
+    plan = _build_scanned(spark, DEFAULT_CONFIG)._jdf.queryExecution()
+    text = plan.executedPlan().toString()
+    assert "regexp_extract_all" not in text.lower(), text
+    assert "rlike" not in text.lower(), text
+    assert text.count("ArrowEvalPython") == 1, text
+    assert "_scan_udf" in text, text
+
+
+def test_scan_udf_matches_duckdb_off_ascii(spark):
+    """The Spark scan UDF and DuckDB's ``_ms_sql`` agree where Unicode
+    ``re`` would not: non-ASCII letters and digits next to a match
+    (``\\b``, ``\\d``), beside placeholder values the filter drops."""
+    import duckdb
+
+    from synthetic_data_pipeline_spark.operators.generation import (
+        _ms_sql,
+        _scan_udf,
+    )
+
+    cases = [
+        (0, "SIT_AUS_BANK", "ref é123456 and 654321é end"),
+        (1, "SIT_CCN", "card 4111 1111 1111 1111é or 5500-0000-0000-0004 or 0000"),
+        (2, "SIT_SSN", "SSN 000-00-0000 and 123-45-6789 then 234-56-7890"),
+        (3, "SIT_DATE", "on 2024-01-0٢ and 2023-12-31ü, 2022-02-02"),
+    ]
+    df = spark.createDataFrame(cases, "i long, sit_id string, text string")
+    got = {
+        r.i: list(r.ms)
+        for r in df.select("i", _scan_udf("sit_id", "text").alias("ms")).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(i BIGINT, sit_id VARCHAR, text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?, ?)", cases)
+    want = {
+        i: list(ms)
+        for i, ms in con.execute(
+            f"SELECT i, {_ms_sql('sit_id', 'text')} FROM t"
+        ).fetchall()
+    }
+    assert got == want
+    assert got[0] == ["123456", "654321"] and got[2] == ["123-45-6789", "234-56-7890"]

@@ -11,7 +11,6 @@ renditions rather than the original strings.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import functions as F
 
@@ -21,7 +20,7 @@ from synthetic_data_pipeline_spark.operators.generation import (
     _gen_ctes,
     _rendered_cte,
 )
-from synthetic_data_pipeline_spark.plans.catalog import SIT_CATALOG
+from synthetic_data_pipeline_spark.plans.catalog import SIT_PATTERNS, real_matches
 from synthetic_data_pipeline_spark.plans.generate import GenConfig
 from synthetic_data_pipeline_spark.sources.io import write_partitioned_parquet
 from synthetic_data_pipeline_spark.sources.renditions import (
@@ -75,27 +74,11 @@ def test_generate_render_extract_validate_loop(spark, tmp_path):
     ).collect()
     # TC SITs carry an empty regex — generated but never scanned, the
     # validator's skip of uncompilable patterns.
-    patterns = {sid: re.compile(rx) for sid, _n, rx, _t in SIT_CATALOG if rx}
-
-    def is_ph(v: str) -> bool:
-        s = v.strip().lower()
-        alnum = re.sub(r"[^a-z0-9]", "", s)
-        digits = re.sub(r"[^0-9]", "", s)
-        return (
-            any(m in s for m in ("xxx", "redacted", "placeholder", "example", "sample"))
-            or bool(re.fullmatch(r"[x*\-_]{3,}", s))
-            or len(s) <= 2
-            or (len(alnum) > 0 and alnum == alnum[0] * len(alnum))
-            or (len(digits) > 0 and set(digits) == {"0"})
-            or len(alnum) < len(s) * 0.4
-        )
-
     n_tp = n_fp = 0
     for v in vals:
-        if v.sit_id not in patterns:
+        if v.sit_id not in SIT_PATTERNS:
             continue
-        text = recovered[v.doc_id]
-        real = [m for m in patterns[v.sit_id].findall(text) if not is_ph(m)]
+        real = real_matches(v.sit_id, recovered[v.doc_id])
         if v.label == "TP":
             n_tp += 1
             assert len(real) >= v.instances, (

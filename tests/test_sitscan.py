@@ -16,7 +16,7 @@ from synthetic_data_pipeline_spark.operators.generation import (
     _rendered_cte,
     q91_sit_issue_list,
 )
-from synthetic_data_pipeline_spark.plans.catalog import SIT_CATALOG
+from synthetic_data_pipeline_spark.plans.catalog import SIT_CATALOG, SIT_PATTERNS
 from synthetic_data_pipeline_spark.plans.generate import DEFAULT_CONFIG
 
 
@@ -68,7 +68,6 @@ def test_issue_list_positions_and_excerpts(spark, sf_dir):
         "duckdb",
     )
     texts = dict(duckdb.connect().execute(sql).fetchall())
-    pats = {sid: re.compile(rx) for sid, _n, rx, _t in SIT_CATALOG if rx}
     for r in rows:
         text = texts[r.doc_id]
         # start is the first occurrence of the match value, 0-based
@@ -82,7 +81,8 @@ def test_issue_list_positions_and_excerpts(spark, sf_dir):
         )
         assert r.excerpt == expected
         # the value is a real regex match of its SIT's pattern
-        assert pats[r.sit_id].fullmatch(r.match) or pats[r.sit_id].search(
+        pat = SIT_PATTERNS[r.sit_id]
+        assert pat.fullmatch(r.match) or pat.search(
             r.match
         ), f"{r.sit_id}: {r.match!r} not a pattern match"
 
