@@ -14,31 +14,24 @@ reference, whose committed run fails its own validation
 (output/validation_report.txt:51-52).
 
 The validator's regex scan is likewise written once per engine:
-Spark runs ``plans/catalog.py::real_matches`` (Python ``re`` over
-``SIT_PATTERNS``) as one Arrow pandas UDF over the assigned pairs;
-DuckDB runs one SQL CASE of ``regexp_extract_all`` calls (``_pairs_sql``),
-so the scan's oracle parity also compares two regex engines.
+on Spark the kernel scans its own text with
+``plans/catalog.py::real_matches`` (Python ``re`` over ``SIT_PATTERNS``)
+and returns each assigned slot's matches as ``ms``; DuckDB runs one SQL
+CASE of ``regexp_extract_all`` calls (``_pairs_sql``), so the scan's
+oracle parity also compares two regex engines over two generators.
 
 Scale shape: range() → the kernel, one narrow map per document (no
 exchange before the rendition UDF) → per-(doc, SIT) pairs exploded
-from the kernel's slots beside their text → the scan UDF, one narrow
-map per pair → groupBy(sit) for the report.
+from the kernel's slots beside their text, already scanned →
+groupBy(sit) for the report.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
 from .. import state
-from ..plans.catalog import (
-    RE2_SAFE_IDS,
-    SIT_PATTERNS,
-    is_placeholder_duckdb,
-    real_matches,
-)
+from ..plans.catalog import RE2_SAFE_IDS, SIT_PATTERNS, is_placeholder_duckdb
 from ..functions.rounding import apply_sql_eround
 from ..functions.xsql import expand_u16, hash_u16
 from ..plans.generate import (
@@ -292,8 +285,8 @@ def _rendered_sql(cfg: GenConfig) -> str:
 
 def _rendered_docs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
     """``_rendered_sql`` under a lazy localCheckpoint, memoised per
-    session and config: the report's scan and its slot table both read
-    it, so they cost one kernel run."""
+    session and config: the report's per-SIT aggregate and its scanned
+    pairs both read it, so they cost one kernel run."""
     return state.get_or_build(
         spark,
         "rendered_docs",
@@ -302,22 +295,11 @@ def _rendered_docs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
     )
 
 
-def _doc_sits(spark: SparkSession, cfg: GenConfig):
-    """(doc_id, sit_id, label, instances) for every assigned slot,
-    the TC family included — the mapping table, without values."""
-    return (
-        _rendered_docs(spark, cfg)
-        .selectExpr("doc_id", "inline(slots)")
-        .select("doc_id", "sit_id", "label", "instances")
-    )
-
-
-# Scanned-pairs table per session and GenConfig: q62, q91, q98 and
-# the report assembly all consume the SAME generate → explode → regex-
-# scan pipeline; within one session it is computed once in the session
-# state store (the localCheckpoint materializes it) — the in-session
-# form of "at 100 TB you'd persist the validation scan as a table"
-# (same reuse pattern as dedup.shingle_state). Results are identical
+# Scanned-pairs frame per session and GenConfig: q62, q91, q98 and
+# the report all consume the SAME generate → scan → explode pipeline;
+# the kernel's output is materialised once per session by
+# ``_rendered_docs``'s checkpoint — the in-session form of "at 100 TB
+# you'd persist the validation scan as a table". Results are identical
 # with or without a memo hit: the lineage is deterministic, consumers
 # only append further transformations.
 def _scanned_pairs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
@@ -328,38 +310,25 @@ def _scanned_pairs(spark: SparkSession, cfg: GenConfig = DEFAULT_CONFIG):
     ~4 assigned patterns, not all |catalog| of them — at 100 TB that is
     the difference between O(pairs) and O(docs × catalog) regex work.
 
-    ``_build_scanned`` under an eager localCheckpoint, so the scan runs
-    once per memo entry and ``count()`` on it cannot prune the UDF.
+    ``_build_scanned``, memoised per session and config.
     """
     return state.get_or_build(
-        spark,
-        "scanned_pairs",
-        repr(cfg),
-        lambda: _build_scanned(spark, cfg).localCheckpoint(),
+        spark, "scanned_pairs", repr(cfg), lambda: _build_scanned(spark, cfg)
     )
-
-
-@pandas_udf(ArrayType(StringType()))
-def _scan_udf(sit_id: pd.Series, text: pd.Series) -> pd.Series:
-    return pd.Series([real_matches(s, t) for s, t in zip(sit_id, text)])
 
 
 def _build_scanned(spark: SparkSession, cfg: GenConfig) -> DataFrame:
     """The scan's plan: the kernel's slots of the scanned SITs exploded
-    beside their document's text (``_rendered_docs``, so no join), and
-    one Arrow pandas UDF that returns ``ms``, the row's non-placeholder
-    matches in match order (``real_matches``). The patterns compile once
-    per Python worker, when it imports the catalog."""
+    beside their document's text (``_rendered_docs``, so no join). The
+    kernel already scanned them: ``ms`` is the row's non-placeholder
+    matches in match order (``real_matches``)."""
     from pyspark.sql import functions as F
 
     return (
         _rendered_docs(spark, cfg)
         .selectExpr("doc_id", "text", "inline(slots)")
         .filter(F.col("sit_id").isin(RE2_SAFE_IDS))
-        .select(
-            "doc_id", "sit_id", "label", "instances", "text",
-            _scan_udf("sit_id", "text").alias("ms"),
-        )
+        .select("doc_id", "sit_id", "label", "instances", "text", "ms")
     )
 
 
@@ -633,13 +602,12 @@ def write_validation_report(
 ) -> str:
     """S17 sink: the single-file validation report text artifact
     (modules/validator.py:332-357) for the corpus of ``cfg``. Every
-    section comes from that corpus's one scan (``_scanned_pairs``, over
-    the memoised sink plan) in two actions:
+    section comes from that corpus's one kernel run (``_rendered_docs``,
+    whose slots carry the scan) in two actions:
 
     - the per-SIT lines and the summary: q60's columns for ALL SITs
       (the unscanned TC family included, like the reference's mapping
-      loop) and q62's counts, one aggregate over the assignments
-      left-joined to the scan;
+      loop) and q62's counts, one aggregate over the kernel's slots;
     - the issue lines: both validator failure branches on the scan.
 
     The collect()s fetch ≤ |catalog| + 500 short rows — final result
@@ -655,13 +623,12 @@ def write_validation_report(
     from pyspark.sql import functions as F
 
     target = coverage_target if coverage_target is not None else cfg.per_sit_count
-    pairs = _scanned_pairs(spark, cfg)
     tp, fp = F.col("label") == "TP", F.col("label") == "FP"
     found = F.size("ms")
     per_sit = {
         r.sit_id: r
-        for r in _doc_sits(spark, cfg)
-        .join(pairs.select("doc_id", "sit_id", "ms"), ["doc_id", "sit_id"], "left")
+        for r in _rendered_docs(spark, cfg)
+        .selectExpr("inline(slots)")
         .groupBy("sit_id")
         .agg(
             F.count("*").alias("n_docs"),
@@ -674,6 +641,7 @@ def write_validation_report(
     # both validator failure branches (validator.py:303-330): TP docs
     # short of their quota and FP docs with any real-looking match, each
     # with a ≤5-value sample, capped at 500 lines like the reference
+    pairs = _scanned_pairs(spark, cfg)
     if inject:
         pairs = inject_faults(pairs)
     issues = (

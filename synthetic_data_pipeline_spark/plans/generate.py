@@ -27,7 +27,9 @@ One specification, two implementations:
 - Spark runs ``generate_doc``, a per-document kernel, as one Arrow
   pandas UDF (``sdp_gen_doc``, registered by ``register_kernel``) over
   ``range(0, n_docs)``: each document is a few dozen md5 draws and
-  string joins, one narrow map with no exchange.
+  string joins, one narrow map with no exchange. The kernel also scans
+  its own text: each slot of a scanned SIT carries the validator's
+  matches (``real_matches``), so the report needs no second pass.
 - DuckDB runs the SQL builders below (``docs_sql``, ``doc_sits_sql``,
   ``sit_value_sql``, ``sit_block_sql``, ``filler_word_sql``) as the
   oracle (operators/generation.py), so oracle parity compares two
@@ -59,7 +61,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.xsql import hash_int_range, hash_u16, hash_unit
-from ..plans.catalog import SIT_CATALOG
+from ..plans.catalog import SIT_CATALOG, SIT_PATTERNS, real_matches
 
 # 20-doc cycle of SIT counts: realizes 30% singles, 30% two-to-three,
 # 30% four-to-six, 10% seven-plus (config.json:13-18) exactly per cycle.
@@ -629,7 +631,9 @@ def filler_pad(doc: int, n: int) -> str:
 def generate_doc(doc_id: int, cfg: GenConfig = DEFAULT_CONFIG):
     """One document, as the generation SQL derives it: ``(format,
     word_count_target, text, slots)``, each slot ``(slot, sit_id,
-    label, instances, value)`` in slot order. The kernel Spark runs."""
+    label, instances, value, ms)`` in slot order, where ``ms`` is the
+    slot SIT's ``real_matches`` in ``text`` (None for the unscanned TC
+    SITs). The kernel Spark runs."""
     fmt = cfg.formats[_u16(doc_id, "fmt") % len(cfg.formats)]
     p, (lo1, hi1), (lo2, hi2) = WORD_TARGET
     if _u16(doc_id, "wsel") / 65536.0 < p:
@@ -659,6 +663,10 @@ def generate_doc(doc_id: int, cfg: GenConfig = DEFAULT_CONFIG):
     head, foot = (s.replace("{d}", str(doc_id)) for s in variant)
     pad = filler_pad(doc_id, max(target - len(body.split(" ")), 0))
     text = f"{head}{PARA_BREAK}{body}{PARA_BREAK}{foot} {pad}"
+    slots = [
+        (*s, real_matches(s[1], text) if s[1] in SIT_PATTERNS else None)
+        for s in slots
+    ]
     return fmt, target, text, slots
 
 
@@ -674,6 +682,7 @@ def _struct(**fields) -> StructType:
     slots=ArrayType(_struct(
         slot=LongType(), sit_id=StringType(), label=StringType(),
         instances=IntegerType(), value=StringType(),
+        ms=ArrayType(StringType()),
     )),
 ))
 def _gen_doc_udf(

@@ -4,7 +4,9 @@ The reference is a single-threaded pandas pipeline (SURVEY.md §4.1); the
 engine targets a multi-executor cluster. These defaults are chosen for
 local[N] testing but deliberately mirror what a 1000-executor job wants:
 AQE (runtime coalesce + skew-join), zstd parquet, Arrow for any
-pandas-UDF edges, UTC session time.
+pandas-UDF edges, UTC session time, and one preloading Python worker
+daemon (``worker_daemon``): every Python worker is forked with pandas,
+pyarrow and the package's UDF modules already imported.
 """
 
 from __future__ import annotations
@@ -31,6 +33,9 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.ui.enabled": "false",
+    # Python workers fork from a daemon that imported the UDF stack once
+    # (Spark ignores spark.python.worker.module unless it starts "pyspark").
+    "spark.python.daemon.module": f"{__package__}.worker_daemon",
 }
 
 

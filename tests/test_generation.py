@@ -582,30 +582,44 @@ def test_scanned_pairs_match_duckdb_pairs(spark, name):
 
 
 def test_scan_plan_shape(spark):
-    """The Spark scan runs no JVM regex: its executed plan has no
-    ``regexp_extract_all`` or ``RLike``, and exactly one Arrow UDF
-    (the scan; the kernel sits behind the rendered corpus's
-    checkpoint)."""
+    """The Spark scan is the kernel's: the scanned pairs' executed plan
+    has no Arrow UDF of its own (the kernel, which scans, sits behind
+    the rendered corpus's checkpoint) and no JVM regex
+    (``regexp_extract_all``, ``RLike``)."""
     from synthetic_data_pipeline_spark.operators.generation import _build_scanned
 
     plan = _build_scanned(spark, DEFAULT_CONFIG)._jdf.queryExecution()
     text = plan.executedPlan().toString()
     assert "regexp_extract_all" not in text.lower(), text
     assert "rlike" not in text.lower(), text
-    assert text.count("ArrowEvalPython") == 1, text
-    assert "_scan_udf" in text, text
+    assert "ArrowEvalPython" not in text, text
 
 
-def test_scan_udf_matches_duckdb_off_ascii(spark):
-    """The Spark scan UDF and DuckDB's ``_ms_sql`` agree where Unicode
-    ``re`` would not: non-ASCII letters and digits next to a match
-    (``\\b``, ``\\d``), beside placeholder values the filter drops."""
+def test_kernel_slot_matches_are_real_matches(spark):
+    """Each kernel slot's ``ms`` is ``real_matches`` of its SIT over the
+    document's text, and NULL for the unscanned TC SITs."""
+    from synthetic_data_pipeline_spark.operators.generation import _rendered_docs
+
+    n_scanned = n_tc = 0
+    for r in _rendered_docs(spark, DEFAULT_CONFIG).collect():
+        for s in r.slots:
+            if s.sit_id in SIT_PATTERNS:
+                assert list(s.ms) == real_matches(s.sit_id, r.text), (r.doc_id, s)
+                n_scanned += 1
+            else:
+                assert s.ms is None, (r.doc_id, s)
+                n_tc += 1
+    assert n_scanned > 0 and n_tc > 0
+
+
+def test_scan_udf_matches_duckdb_off_ascii():
+    """The Spark scan (``real_matches``) and DuckDB's ``_ms_sql`` agree
+    where Unicode ``re`` would not: non-ASCII letters and digits next to
+    a match (``\\b``, ``\\d``), beside placeholder values the filter
+    drops."""
     import duckdb
 
-    from synthetic_data_pipeline_spark.operators.generation import (
-        _ms_sql,
-        _scan_udf,
-    )
+    from synthetic_data_pipeline_spark.operators.generation import _ms_sql
 
     cases = [
         (0, "SIT_AUS_BANK", "ref é123456 and 654321é end"),
@@ -613,11 +627,7 @@ def test_scan_udf_matches_duckdb_off_ascii(spark):
         (2, "SIT_SSN", "SSN 000-00-0000 and 123-45-6789 then 234-56-7890"),
         (3, "SIT_DATE", "on 2024-01-0٢ and 2023-12-31ü, 2022-02-02"),
     ]
-    df = spark.createDataFrame(cases, "i long, sit_id string, text string")
-    got = {
-        r.i: list(r.ms)
-        for r in df.select("i", _scan_udf("sit_id", "text").alias("ms")).collect()
-    }
+    got = {i: real_matches(sit_id, text) for i, sit_id, text in cases}
     con = duckdb.connect()
     con.execute("CREATE TABLE t(i BIGINT, sit_id VARCHAR, text VARCHAR)")
     con.executemany("INSERT INTO t VALUES (?, ?, ?)", cases)
