@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.grams import tokens
+from ..functions.grams import normalized, normalized_md5_sql, tokens_sql, word_ngrams_sql
 from ..functions.ranking import global_cumsum
 from ..functions.rounding import eround
 from ..functions.xsql import expand_u16, hash_u16
@@ -879,7 +879,7 @@ _Q119_ORACLE = f"""
 # --- q122: the CAPSTONE — the whole training-data prep pipeline as
 # one lineage with per-stage funnel accounting. Stages, in order:
 #   a_raw            training corpus (benchmark source excluded)
-#   b_quality        q97's rules (≥25 tokens, distinct-ratio ≥ 0.32)
+#   b_quality        q97's quality rule (textops.quality_drop)
 #   c_exact_dedup    keep min-doc_id per normalized-text hash
 #   d_near_dedup     drop non-canonical members of the LSH clusters
 #                    (the shared near-dup cluster funnel, same state
@@ -901,19 +901,16 @@ def _funnel_base(train: DataFrame) -> DataFrame:
     (the batch capstone AND each streaming micro-batch build exactly
     this frame): token count, distinct-ratio, normalized-text hash,
     and the s1 quality flag."""
-    toks = tokens(F.col("text"))
-    n_tokens = F.size(toks)
-    dr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
-    norm_h = F.md5(
-        F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    )
+    from .textops import quality_drop, quality_signals
+
+    n_tokens, dr = quality_signals()
     return train.select(
         "doc_id",
         "source",
         n_tokens.alias("n_tokens"),
         dr.alias("dr"),
-        norm_h.alias("h"),
-    ).withColumn("s1", (F.col("n_tokens") >= 25) & (F.col("dr") >= 0.32))
+        F.md5(normalized("text")).alias("h"),
+    ).withColumn("s1", ~quality_drop(F.col("n_tokens"), F.col("dr")))
 
 
 def _funnel_near_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -948,12 +945,12 @@ def _funnel_split_cols(df: DataFrame, cnt: DataFrame, mn: DataFrame) -> DataFram
     (source, n_s) counts and the 1-row global min — identical whether
     they were just aggregated (batch) or read back from the persisted
     state (stream)."""
+    from .textops import split_case
+
     u16 = F.expr(
         expand_u16(hash_u16("CAST(doc_id AS STRING)", "funnel"), "spark")
     ).cast("long")
-    bucket = F.expr(
-        expand_u16(hash_u16("CAST(doc_id AS STRING)", "split"), "spark")
-    )
+    bucket = expand_u16(hash_u16("CAST(doc_id AS STRING)", "split"), "spark")
     return (
         df.join(F.broadcast(cnt), "source", "left")
         .crossJoin(F.broadcast(mn))
@@ -962,12 +959,7 @@ def _funnel_split_cols(df: DataFrame, cnt: DataFrame, mn: DataFrame) -> DataFram
             F.col("s4")
             & (u16 * u16 * F.col("n_s") < F.lit(65536 * 65536) * F.col("_mn")),
         )
-        .withColumn(
-            "split",
-            F.when(bucket % 10 < 8, "train")
-            .when(bucket % 10 == 8, "val")
-            .otherwise("test"),
-        )
+        .withColumn("split", F.expr(split_case(bucket)))
     )
 
 
@@ -1057,29 +1049,26 @@ def q122_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q122_oracle() -> str:
     from .sketches import _lp_with_body
-    from .textops import DECON_BENCH_SOURCE, DECON_N
+    from .textops import DECON_BENCH_SOURCE, DECON_N, quality_drop_sql, split_case
 
     lp_body, final_labels = _lp_with_body()
     u16 = expand_u16(hash_u16("CAST(s4.doc_id AS STRING)", "funnel"), "duckdb")
     bucket = expand_u16(hash_u16("CAST(doc_id AS STRING)", "split"), "duckdb")
-    gram_expr = ", ".join(
-        f"arr[i+{j}]" if j else "arr[i]" for j in range(DECON_N)
-    )
     return f"""
       WITH {lp_body},
       sig AS MATERIALIZED (
         SELECT doc_id, source,
-               md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS h,
+               {normalized_md5_sql()} AS h,
                len(arr) AS n_tokens,
-               CAST(len(list_distinct(arr)) AS DOUBLE) / len(arr) AS dr
+               {quality_drop_sql('arr')} AS qdrop
         FROM (
           SELECT doc_id, source, text,
-                 regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+                 {tokens_sql()} AS arr
           FROM documents WHERE source != '{DECON_BENCH_SOURCE}'
         )
       ),
       s1 AS MATERIALIZED (
-        SELECT * FROM sig WHERE n_tokens >= 25 AND dr >= 0.32
+        SELECT * FROM sig WHERE NOT qdrop
       ),
       keepers AS (SELECT h, min(doc_id) AS keep_id FROM s1 GROUP BY h),
       s2 AS MATERIALIZED (
@@ -1093,13 +1082,10 @@ def _q122_oracle() -> str:
       ),
       allgrams AS MATERIALIZED (
         SELECT doc_id, source,
-               unnest(list_distinct(list_transform(
-                 range(1, len(arr) - {DECON_N - 2}),
-                 i -> concat_ws(' ', {gram_expr})
-               ))) AS g
+               unnest(list_distinct({word_ngrams_sql('arr', DECON_N)})) AS g
         FROM (
           SELECT doc_id, source,
-                 regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+                 {tokens_sql()} AS arr
           FROM documents
         ) WHERE len(arr) >= {DECON_N}
       ),
@@ -1137,9 +1123,7 @@ def _q122_oracle() -> str:
                COALESCE(g.n_tokens, 0)
         FROM (VALUES ('test'), ('train'), ('val')) sp(split)
         LEFT JOIN (
-          SELECT (CASE WHEN {bucket} % 10 < 8 THEN 'train'
-                       WHEN {bucket} % 10 = 8 THEN 'val'
-                       ELSE 'test' END) AS split,
+          SELECT {split_case(bucket)} AS split,
                  count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS n_tokens
           FROM s5 GROUP BY 1
         ) g ON g.split = sp.split

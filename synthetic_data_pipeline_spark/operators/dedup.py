@@ -28,7 +28,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import state
-from ..functions.grams import tokens
+from ..functions.grams import (
+    normalized,
+    normalized_md5_sql,
+    tokens,
+    tokens_sql,
+    word_ngrams,
+    word_ngrams_sql,
+)
 from ..functions.rounding import eround
 from ..sources.tables import fan_out_scan, load_table
 
@@ -47,33 +54,19 @@ def distinct_tokens(docs: DataFrame) -> DataFrame:
 
 def distinct_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, token) — distinct n-word shingles per document, built
-    NARROWLY: transform over an index sequence on the token array (no
-    explode+window shuffle; 1-based element_at mirrors DuckDB's list
-    indexing so the oracle is expression-for-expression identical).
-    """
-    arr = tokens(F.col("text"))
-    docs = docs.select("doc_id", arr.alias("arr"))
-    shingles = F.when(
-        F.size("arr") >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size("arr") - (n - 1)),
-            lambda i: F.concat_ws(
-                " ",
-                *[F.element_at(F.col("arr"), (i + j).cast("int")) for j in range(n)],
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    NARROWLY from ``grams.word_ngrams`` over the token array (no
+    explode+window shuffle)."""
+    docs = docs.select("doc_id", tokens(F.col("text")).alias("arr"))
     return docs.select(
-        "doc_id", F.explode(F.array_distinct(shingles)).alias("token")
+        "doc_id", F.explode(F.array_distinct(word_ngrams("arr", n))).alias("token")
     )
 
 
 # --- q45: exact duplicate groups over normalized text.
 def q45_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), F.lit(r"\s+"), F.lit(" "))
     groups = (
-        docs.select("doc_id", F.md5(norm).alias("h"))
+        docs.select("doc_id", F.md5(normalized("text")).alias("h"))
         .groupBy("h")
         .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("keeper_doc_id"))
     )
@@ -1547,19 +1540,8 @@ def _span_grams(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     docs = fan_out_scan(docs.sparkSession, docs)
     arr = tokens(F.col("text"))
     base = docs.select("doc_id", "source", arr.alias("arr"))
-    grams = F.when(
-        F.size("arr") >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size("arr") - (n - 1)),
-            lambda i: F.concat_ws(
-                " ",
-                *[F.element_at(F.col("arr"), (i + j).cast("int"))
-                  for j in range(n)],
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return base.select(
-        "doc_id", "source", F.explode(grams).alias("g")
+        "doc_id", "source", F.explode(word_ngrams("arr", n)).alias("g")
     )
 
 
@@ -1627,15 +1609,12 @@ def q131_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q131_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     grams AS (
       SELECT doc_id, source,
-             md5(unnest(list_transform(
-               range(1, len(arr) - {SPAN_N - 2}),
-               i -> array_to_string(arr[i:i + {SPAN_N - 1}], ' ')
-             ))) AS g
+             md5(unnest({word_ngrams_sql('arr', SPAN_N)})) AS g
       FROM base WHERE len(arr) >= {SPAN_N}
     ),
     dup_grams AS (
@@ -1763,15 +1742,12 @@ def q180_memorization_risk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q180_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     grams AS MATERIALIZED (
       SELECT doc_id, source,
-             md5(unnest(list_transform(
-               range(1, len(arr) - {SPAN_N - 2}),
-               i -> array_to_string(arr[i:i + {SPAN_N - 1}], ' ')
-             ))) AS g
+             md5(unnest({word_ngrams_sql('arr', SPAN_N)})) AS g
       FROM base WHERE len(arr) >= {SPAN_N}
     ),
     ndocs AS MATERIALIZED (
@@ -1868,25 +1844,22 @@ def q132_incremental_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q132_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     grams AS (
       SELECT doc_id, source,
-             md5(unnest(list_transform(
-               range(1, len(arr) - {{SPAN}}),
-               i -> array_to_string(arr[i:i + {{SPAN1}}], ' ')
-             ))) AS g
-      FROM base WHERE len(arr) >= {{SPANN}}
+             md5(unnest({word_ngrams_sql('arr', SPAN_N)})) AS g
+      FROM base WHERE len(arr) >= {SPAN_N}
     ),
     idx AS (
-      SELECT DISTINCT g FROM grams WHERE doc_id % {{MOD}} != 0
+      SELECT DISTINCT g FROM grams WHERE doc_id % {INGEST_MOD} != 0
     ),
     flagged AS (
       SELECT n.doc_id, n.source,
              CASE WHEN i.g IS NOT NULL THEN 1 ELSE 0 END AS hit
       FROM grams n LEFT JOIN idx i ON i.g = n.g
-      WHERE n.doc_id % {{MOD}} = 0
+      WHERE n.doc_id % {INGEST_MOD} = 0
     ),
     per_doc AS (
       SELECT doc_id, source, count(*) AS n_pos, sum(hit) AS n_dup
@@ -1897,7 +1870,7 @@ _Q132_ORACLE = f"""
            CAST(n_dup AS BIGINT) AS n_dup,
            round(1e-9 + n_dup / CAST(n_pos AS DOUBLE), 4) AS dup_share
     FROM per_doc ORDER BY doc_id
-""".format(SPAN=SPAN_N - 2, SPAN1=SPAN_N - 1, SPANN=SPAN_N, MOD=INGEST_MOD)
+"""
 
 
 # Streaming-ingest support for the span gate (q132's twin): the
@@ -1978,29 +1951,11 @@ def _span_grams_pos(docs: DataFrame, n: int = SPAN_N) -> DataFrame:
     Fans out the scan first — see _span_grams."""
     docs = fan_out_scan(docs.sparkSession, docs)
     arr = tokens(F.col("text"))
-    base = docs.select("doc_id", "source", arr.alias("arr")).filter(
-        F.size("arr") >= n
-    )
+    base = docs.select("doc_id", "source", arr.alias("arr"))
     return base.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("arr") - (n - 1)),
-                lambda i: F.struct(
-                    i.alias("pos"),
-                    _gram_key(
-                        F.concat_ws(
-                            " ",
-                            *[F.element_at(F.col("arr"), (i + j).cast("int"))
-                              for j in range(n)],
-                        )
-                    ).alias("g"),
-                ),
-            )
-        ).alias("pg"),
-    ).select("doc_id", "source", F.col("pg.pos").alias("pos"),
-             F.col("pg.g").alias("g"))
+        "doc_id", "source", F.posexplode(word_ngrams("arr", n)).alias("pos0", "g")
+    ).select("doc_id", "source", (F.col("pos0") + 1).alias("pos"),
+             _gram_key("g").alias("g"))
 
 
 def q134_longest_dup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2040,16 +1995,13 @@ def q134_longest_dup_span(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q134_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     grams AS (
       SELECT doc_id, source,
              unnest(range(1, len(arr) - {SPAN_N - 2})) AS pos,
-             md5(unnest(list_transform(
-               range(1, len(arr) - {SPAN_N - 2}),
-               i -> array_to_string(arr[i:i + {SPAN_N - 1}], ' ')
-             ))) AS g
+             md5(unnest({word_ngrams_sql('arr', SPAN_N)})) AS g
       FROM base WHERE len(arr) >= {SPAN_N}
     ),
     dup_grams AS (
@@ -2142,16 +2094,13 @@ def q135_incremental_span_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q135_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     grams AS (
       SELECT doc_id, source,
              unnest(range(1, len(arr) - {SPAN_N - 2})) AS pos,
-             md5(unnest(list_transform(
-               range(1, len(arr) - {SPAN_N - 2}),
-               i -> array_to_string(arr[i:i + {SPAN_N - 1}], ' ')
-             ))) AS g
+             md5(unnest({word_ngrams_sql('arr', SPAN_N)})) AS g
       FROM base WHERE len(arr) >= {SPAN_N}
     ),
     idx AS (
@@ -2319,16 +2268,13 @@ def q158_dedup_span_strip_stats(
 _SPAN_STRIP_CTES = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     pgrams AS (
       SELECT doc_id, source,
              unnest(range(1, len(arr) - {SPAN_N - 2})) AS pos,
-             md5(unnest(list_transform(
-               range(1, len(arr) - {SPAN_N - 2}),
-               i -> array_to_string(arr[i:i + {SPAN_N - 1}], ' ')
-             ))) AS g
+             md5(unnest({word_ngrams_sql('arr', SPAN_N)})) AS g
       FROM base WHERE len(arr) >= {SPAN_N}
     ),
     owners AS (
@@ -2446,16 +2392,13 @@ def q159_incremental_span_strip(
 _Q159_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     pgrams AS (
       SELECT doc_id, source,
              unnest(range(1, len(arr) - {SPAN_N - 2})) AS pos,
-             md5(unnest(list_transform(
-               range(1, len(arr) - {SPAN_N - 2}),
-               i -> array_to_string(arr[i:i + {SPAN_N - 1}], ' ')
-             ))) AS g
+             md5(unnest({word_ngrams_sql('arr', SPAN_N)})) AS g
       FROM base WHERE len(arr) >= {SPAN_N}
     ),
     idx AS (
@@ -2543,16 +2486,13 @@ def q162_self_repetition_strip(
 _Q162_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     pgrams AS (
       SELECT doc_id, source,
              unnest(range(1, len(arr) - {REP_N - 2})) AS pos,
-             md5(unnest(list_transform(
-               range(1, len(arr) - {REP_N - 2}),
-               i -> array_to_string(arr[i:i + {REP_N - 1}], ' ')
-             ))) AS g
+             md5(unnest({word_ngrams_sql('arr', REP_N)})) AS g
       FROM base WHERE len(arr) >= {REP_N}
     ),
     firsts AS (
@@ -2613,18 +2553,12 @@ QUERIES = {
     "q162_self_repetition_strip": q162_self_repetition_strip,
 }
 
-_TOKENS_SQL = """
-  SELECT doc_id, unnest(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS token
-  FROM {src}
-"""
-
-# 3-word shingles, 1-based list indexing — mirrors distinct_shingles().
-_SHINGLES_SQL = """
+# 3-word shingles — the DuckDB twin of distinct_shingles().
+_SHINGLES_SQL = f"""
   SELECT doc_id, unnest(list_distinct(
-           list_transform(range(1, len(arr) - 1),
-                          i -> concat_ws(' ', arr[i], arr[i+1], arr[i+2]))
+           {word_ngrams_sql('arr', 3)}
          )) AS token
-  FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS arr FROM {src})
+  FROM (SELECT doc_id, {tokens_sql()} AS arr FROM {{src}})
 """
 
 _JACCARD_SQL = """
@@ -2686,9 +2620,9 @@ ORACLES = {
                round(avg(abs(n_match / {float(N_HASHES)} - jaccard)), 4) AS mae
         FROM matched GROUP BY n_match ORDER BY n_match
     """,
-    "q45_exact_dedup": """
+    "q45_exact_dedup": f"""
         WITH grp AS (
-          SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS h,
+          SELECT {normalized_md5_sql()} AS h,
                  count(*) AS n_docs
           FROM documents GROUP BY h
         )
@@ -2720,7 +2654,10 @@ ORACLES = {
         ORDER BY doc_a, doc_b
     """,
     "q47_pairwise_jaccard_sample": f"""
-        WITH tokens AS ({_TOKENS_SQL.format(src="documents WHERE doc_id < 40")}),
+        WITH tokens AS (
+          SELECT doc_id, unnest(list_distinct({tokens_sql()})) AS token
+          FROM documents WHERE doc_id < 40
+        ),
         pairs AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM (SELECT DISTINCT doc_id FROM tokens) a,
@@ -2834,9 +2771,9 @@ ORACLES = {
     "q158_dedup_span_strip_stats": _Q158_ORACLE,
     "q159_incremental_span_strip": _Q159_ORACLE,
     "q162_self_repetition_strip": _Q162_ORACLE,
-    "q48_simhash_buckets": """
+    "q48_simhash_buckets": f"""
         WITH tokens AS (
-          SELECT doc_id, unnest(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS token
+          SELECT doc_id, unnest(list_distinct({tokens_sql()})) AS token
           FROM documents
         ),
         h16 AS (
@@ -2849,11 +2786,11 @@ ORACLES = {
         ),
         votes AS (
           SELECT doc_id,
-                 {vote_cols}
+                 {{vote_cols}}
           FROM h16 GROUP BY doc_id
         ),
         sigs AS (
-          SELECT doc_id, CAST({sig_expr} AS BIGINT) AS simhash FROM votes
+          SELECT doc_id, CAST({{sig_expr}} AS BIGINT) AS simhash FROM votes
         ),
         buckets AS (
           SELECT simhash, count(*) AS n_docs FROM sigs GROUP BY simhash

@@ -15,16 +15,11 @@ per upstream partition.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.catalog import (
-    RE2_SAFE_IDS,
-    SIT_CATALOG,
-    is_placeholder,
-    is_placeholder_duckdb,
-)
-from ..functions.grams import tokens
+from ..plans.catalog import SIT_PATTERNS, is_placeholder, is_placeholder_duckdb
+from ..functions.grams import tokens, tokens_sql
 from ..sources.tables import load_table
 
 
@@ -65,6 +60,41 @@ def sit_match_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sit_matches() -> Column:
+    """``m``: one (sit_id, matches) struct per scanned pattern, its
+    ``regexp_extract_all`` behind the pattern's guard column, exploded
+    to one row per pattern. The frame must carry ``text`` and the
+    :func:`_guard_cols`."""
+    empty = F.array().cast("array<string>")
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(sit_id).alias("sit_id"),
+                    F.when(
+                        F.col(f"_g_{_GUARD_KIND.get(sit_id, 'digit')}"),
+                        F.regexp_extract_all("text", F.lit(p.pattern), 0),
+                    ).otherwise(empty).alias("matches"),
+                )
+                for sit_id, p in SIT_PATTERNS.items()
+            ]
+        )
+    ).alias("m")
+
+
+def _sit_matches_sql(cols: str) -> str:
+    """DuckDB twin of :func:`_sit_matches`: one ``UNION ALL`` branch per
+    scanned pattern, each row ``(sit_id, <cols>, matches)``."""
+    branches = []
+    for sit_id, p in SIT_PATTERNS.items():
+        pat = p.pattern.replace("'", "''")
+        branches.append(
+            f"SELECT '{sit_id}' AS sit_id, {cols}, "
+            f"regexp_extract_all(text, '{pat}') AS matches FROM documents"
+        )
+    return " UNION ALL ".join(branches)
+
+
 def sit_scan_frame(docs: DataFrame) -> DataFrame:
     """The flagship scan over any (doc_id, text) frame.
 
@@ -82,22 +112,8 @@ def sit_scan_frame(docs: DataFrame) -> DataFrame:
     and the predicate applied ONCE to the (sit_id, matches) rows.
     """
     docs = docs.select("doc_id", "text", *_guard_cols().values())
-    empty = F.array().cast("array<string>")
-    entries = []
-    for sit_id, _name, regex, _tcs in SIT_CATALOG:
-        if sit_id not in RE2_SAFE_IDS:
-            continue
-        guard = F.col(f"_g_{_GUARD_KIND.get(sit_id, 'digit')}")
-        entries.append(
-            F.struct(
-                F.lit(sit_id).alias("sit_id"),
-                F.when(
-                    guard, F.regexp_extract_all("text", F.lit(regex), 0)
-                ).otherwise(empty).alias("matches"),
-            )
-        )
     return (
-        docs.select("doc_id", F.explode(F.array(*entries)).alias("m"))
+        docs.select("doc_id", _sit_matches())
         .select(
             "doc_id",
             "m.sit_id",
@@ -119,19 +135,9 @@ def sit_scan_frame(docs: DataFrame) -> DataFrame:
 
 def _sit_scan_oracle() -> str:
     """DuckDB oracle generated from the same catalog constant."""
-    unions = []
-    for sit_id, _name, regex, _tcs in SIT_CATALOG:
-        if sit_id not in RE2_SAFE_IDS:
-            continue
-        pat = regex.replace("'", "''")
-        unions.append(
-            f"SELECT '{sit_id}' AS sit_id, doc_id, "
-            f"regexp_extract_all(text, '{pat}') AS matches FROM documents"
-        )
-    union_sql = " UNION ALL ".join(unions)
     ph = is_placeholder_duckdb("x")
     return f"""
-        WITH m AS ({union_sql}),
+        WITH m AS ({_sit_matches_sql("doc_id")}),
         f AS (
           SELECT sit_id, doc_id,
                  len(matches) AS n_all,
@@ -189,11 +195,7 @@ def _combined_sit_pattern() -> str:
     Both Java regex and RE2 resolve alternation leftmost-first, so the
     catalog-order priority of the sequential chain is preserved for
     matches starting at the same position."""
-    return "|".join(
-        f"(?:{rx})"
-        for sid, _n, rx, _t in SIT_CATALOG
-        if sid in RE2_SAFE_IDS
-    )
+    return "|".join(f"(?:{p.pattern})" for p in SIT_PATTERNS.values())
 
 
 def _classify_token(m):
@@ -201,10 +203,8 @@ def _classify_token(m):
     catalog order over the SHORT extracted token — same winner as the
     sequential chain when a token is in two SITs' languages."""
     expr = None
-    for sit_id, _name, rx, _tcs in SIT_CATALOG:
-        if sit_id not in RE2_SAFE_IDS:
-            continue
-        cond = m.rlike(f"^(?:{rx})$")
+    for sit_id, p in SIT_PATTERNS.items():
+        cond = m.rlike(f"^(?:{p.pattern})$")
         tag = F.lit(f"[{sit_id}]")
         expr = F.when(cond, tag) if expr is None else expr.when(cond, tag)
     return expr.otherwise(m)
@@ -271,12 +271,10 @@ def redacted_frame(docs: DataFrame) -> DataFrame:
 
     def chain(frame: DataFrame, only_non_digit: bool) -> DataFrame:
         col = F.col("text")
-        for sit_id, _name, regex, _tcs in SIT_CATALOG:
-            if sit_id not in RE2_SAFE_IDS:
-                continue
+        for sit_id, p in SIT_PATTERNS.items():
             if only_non_digit and _GUARD_KIND.get(sit_id, "digit") == "digit":
                 continue
-            col = F.regexp_replace(col, F.lit(regex), F.lit(f"[{sit_id}]"))
+            col = F.regexp_replace(col, F.lit(p.pattern), F.lit(f"[{sit_id}]"))
         return frame.withColumn("_red", col)
 
     has_digit = (
@@ -331,10 +329,8 @@ def _redact_oracle() -> str:
     DuckDB's regexp_replace is first-match-only by default, Spark's is
     global)."""
     col = "text"
-    for sit_id, _name, regex, _tcs in SIT_CATALOG:
-        if sit_id not in RE2_SAFE_IDS:
-            continue
-        pat = regex.replace("'", "''")
+    for sit_id, p in SIT_PATTERNS.items():
+        pat = p.pattern.replace("'", "''")
         col = f"regexp_replace({col}, '{pat}', '[{sit_id}]', 'g')"
     return f"""
         SELECT doc_id,
@@ -361,24 +357,8 @@ def q167_pii_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source", *_guard_cols().values()
     )
-    empty = F.array().cast("array<string>")
-    entries = []
-    for sit_id, _name, regex, _tcs in SIT_CATALOG:
-        if sit_id not in RE2_SAFE_IDS:
-            continue
-        guard = F.col(f"_g_{_GUARD_KIND.get(sit_id, 'digit')}")
-        entries.append(
-            F.struct(
-                F.lit(sit_id).alias("sit_id"),
-                F.when(
-                    guard, F.regexp_extract_all("text", F.lit(regex), 0)
-                ).otherwise(empty).alias("matches"),
-            )
-        )
     per_doc = (
-        docs.select(
-            "doc_id", "source", F.explode(F.array(*entries)).alias("m")
-        )
+        docs.select("doc_id", "source", _sit_matches())
         .select(
             "doc_id",
             "source",
@@ -422,19 +402,9 @@ def q167_pii_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pii_density_oracle() -> str:
-    unions = []
-    for sit_id, _name, regex, _tcs in SIT_CATALOG:
-        if sit_id not in RE2_SAFE_IDS:
-            continue
-        pat = regex.replace("'", "''")
-        unions.append(
-            f"SELECT doc_id, source, "
-            f"regexp_extract_all(text, '{pat}') AS matches FROM documents"
-        )
-    union_sql = " UNION ALL ".join(unions)
     ph = is_placeholder_duckdb("x")
     return f"""
-        WITH m AS ({union_sql}),
+        WITH m AS ({_sit_matches_sql("doc_id, source")}),
         per_doc AS (
           SELECT source, doc_id,
                  sum(len(list_filter(matches, x -> NOT {ph}))) AS n_real
@@ -449,8 +419,7 @@ def _pii_density_oracle() -> str:
         ),
         toks AS (
           SELECT source, count(*) AS n_docs,
-                 CAST(sum(len(regexp_split_to_array(
-                   lower(trim(text)), '\\s+'))) AS BIGINT) AS n_tokens
+                 CAST(sum(len({tokens_sql()})) AS BIGINT) AS n_tokens
           FROM documents GROUP BY source
         )
         SELECT t.source, t.n_docs, t.n_tokens, p.docs_with_pii,

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import state
-from ..functions.grams import tokens
+from ..functions.grams import tokens, tokens_sql, word_ngrams_sql
 from ..functions.xsql import hash_u16
 from ..functions.rounding import eround
 from ..sources.tables import fan_out_scan, load_table
@@ -415,7 +415,7 @@ def q192_stage_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stage_overlap_oracle() -> str:
-    from .textops import QF_MIN_DISTINCT, QF_MIN_TOKENS
+    from .textops import quality_drop_sql
 
     body, final = _lp_with_body()
     return f"""
@@ -426,11 +426,7 @@ def _stage_overlap_oracle() -> str:
       ),
       q AS (
         SELECT doc_id, source,
-               (len(regexp_split_to_array(lower(trim(text)), '\\s+'))
-                  < {QF_MIN_TOKENS}
-                OR CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS DOUBLE)
-                   / len(regexp_split_to_array(lower(trim(text)), '\\s+'))
-                  < {QF_MIN_DISTINCT}) AS qdrop
+               {quality_drop_sql(tokens_sql())} AS qdrop
         FROM documents
       ),
       flags AS (
@@ -636,7 +632,7 @@ def _cluster_representatives_oracle() -> str:
       qual AS (
         SELECT doc_id, source,
                len(list_distinct(
-                 regexp_split_to_array(lower(trim(text)), '\\s+'))) AS q
+                 {tokens_sql()})) AS q
         FROM documents
       ),
       m AS (
@@ -706,6 +702,7 @@ def cluster_split_assignments(
     cluster_aware_split aggregates; exposed so tests can pin the
     leakage-freedom invariant (one split per gkey) at doc level."""
     from ..functions.xsql import expand_u16, hash_u16
+    from .textops import split_case
 
     g = docs.join(labels.withColumnRenamed("node", "doc_id"), "doc_id", "left")
     keyed = g.select(
@@ -714,12 +711,8 @@ def cluster_split_assignments(
         F.coalesce(F.col("label"), F.col("doc_id")).alias("gkey"),
     )
     bucket = expand_u16(hash_u16("CAST(gkey AS STRING)", "csplit"), "spark")
-    split = (
-        f"(CASE WHEN {bucket} % 10 < 8 THEN 'train' "
-        f"WHEN {bucket} % 10 = 8 THEN 'val' ELSE 'test' END)"
-    )
     return keyed.selectExpr(
-        "doc_id", "clustered", "gkey", f"{split} AS split"
+        "doc_id", "clustered", "gkey", f"{split_case(bucket)} AS split"
     )
 
 
@@ -731,6 +724,7 @@ def q145_cluster_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cluster_aware_split_oracle() -> str:
     from ..functions.xsql import expand_u16, hash_u16
+    from .textops import split_case
 
     body, final = _lp_with_body()
     bucket = expand_u16(hash_u16("CAST(gkey AS STRING)", "csplit"), "duckdb")
@@ -741,9 +735,7 @@ def _cluster_aware_split_oracle() -> str:
                coalesce(lb.label, d.doc_id) AS gkey
         FROM documents d LEFT JOIN {final} lb ON lb.node = d.doc_id
       )
-      SELECT (CASE WHEN {bucket} % 10 < 8 THEN 'train'
-                   WHEN {bucket} % 10 = 8 THEN 'val' ELSE 'test' END)
-               AS split,
+      SELECT {split_case(bucket)} AS split,
              count(*) AS n_docs,
              CAST(sum(CASE WHEN clustered THEN 1 ELSE 0 END) AS BIGINT)
                AS n_clustered_docs,
@@ -1301,7 +1293,7 @@ def _cms_oracle() -> str:
     return expand_u16(
         f"""
         WITH toks AS (
-          SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+          SELECT unnest({tokens_sql()}) AS token
           FROM documents
         ),
         counts AS (
@@ -1379,14 +1371,9 @@ def q202_release_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _release_accounting_oracle() -> str:
-    from .textops import (
-        DECON_BENCH_SOURCE,
-        QF_MIN_DISTINCT,
-        QF_MIN_TOKENS,
-    )
+    from .textops import DECON_BENCH_SOURCE, quality_drop_sql
 
     body, final = _lp_with_body()
-    toks = "regexp_split_to_array(lower(trim(text)), '\\s+')"
     return f"""
       WITH {body},
       dropped AS MATERIALIZED (
@@ -1394,9 +1381,7 @@ def _release_accounting_oracle() -> str:
       ),
       flags AS (
         SELECT source,
-               (len({toks}) < {QF_MIN_TOKENS}
-                OR CAST(len(list_distinct({toks})) AS DOUBLE)
-                   / len({toks}) < {QF_MIN_DISTINCT}) AS qdrop
+               {quality_drop_sql(tokens_sql())} AS qdrop
         FROM documents
         WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
       )
@@ -1611,12 +1596,7 @@ def q203_delta_release_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _delta_release_oracle() -> str:
-    from .textops import (
-        DECON_BENCH_SOURCE,
-        DECON_N,
-        QF_MIN_DISTINCT,
-        QF_MIN_TOKENS,
-    )
+    from .textops import DECON_BENCH_SOURCE, DECON_N, quality_drop_sql
 
     mod = DELTA_MOD
     body_old, final_old = _lp_with_body(
@@ -1624,7 +1604,6 @@ def _delta_release_oracle() -> str:
         prefix="o_",
     )
     body_new, final_new = _lp_with_body(prefix="f_")
-    toks = "regexp_split_to_array(lower(trim(text)), '\\s+')"
     thr = "greatest(2, CAST(floor((n.n_docs + 19) / 20.0) AS BIGINT))"
     return f"""
       WITH {body_old},
@@ -1636,14 +1615,11 @@ def _delta_release_oracle() -> str:
         SELECT node AS doc_id FROM {final_new} WHERE node != label
       ),
       base AS MATERIALIZED (
-        SELECT doc_id, source, {toks} AS arr FROM documents
+        SELECT doc_id, source, {tokens_sql()} AS arr FROM documents
       ),
       grams AS MATERIALIZED (
         SELECT DISTINCT doc_id, source,
-               unnest(list_transform(
-                 range(1, len(arr) - {DECON_N - 2}),
-                 i -> array_to_string(arr[i:i + {DECON_N - 1}], ' ')
-               )) AS g
+               unnest({word_ngrams_sql('arr', DECON_N)}) AS g
         FROM base WHERE len(arr) >= {DECON_N}
       ),
       nd_new AS (SELECT source, count(*) AS n_docs FROM documents
@@ -1689,9 +1665,7 @@ def _delta_release_oracle() -> str:
       ),
       qkeep AS (
         SELECT doc_id FROM base
-        WHERE NOT (len(arr) < {QF_MIN_TOKENS}
-                   OR CAST(len(list_distinct(arr)) AS DOUBLE) / len(arr)
-                      < {QF_MIN_DISTINCT})
+        WHERE NOT {quality_drop_sql('arr')}
       ),
       ship_new AS MATERIALIZED (
         SELECT d.doc_id, (d.doc_id % {mod} = 0) AS is_new
@@ -2067,7 +2041,7 @@ def _q204_oracle() -> str:
         SELECT x, x AS w,
                CAST(ceil(round(ln(x) / {lng}, 9)) AS BIGINT) AS bucket
         FROM (
-          SELECT len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS x
+          SELECT len({tokens_sql()}) AS x
           FROM documents
         ) WHERE x > 0
       ),
@@ -2456,10 +2430,10 @@ def _oracles() -> dict[str, str]:
         "q144_cluster_representatives": _cluster_representatives_oracle(),
         "q145_cluster_aware_split": _cluster_aware_split_oracle(),
         "q103_lp_convergence": _lp_convergence_oracle(),
-        "q59_token_entropy": """
+        "q59_token_entropy": f"""
             WITH toks AS (
               SELECT doc_id, lang,
-                     unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+                     unnest({tokens_sql()}) AS token
               FROM documents
             ),
             freqs AS (

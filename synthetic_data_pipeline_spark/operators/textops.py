@@ -2,8 +2,10 @@
 extensions: BASELINE.json's LLM-data-pipeline requirements).
 
 All operators are pure column expressions (no Python UDFs — SURVEY.md
-§2.9 policy): tokenization via regexp split, counts via higher-order
-array functions, n-grams via window ``lead`` over exploded tokens.
+§2.9 policy): tokens, normalized text and word n-grams come from
+``functions/grams.py`` (its DuckDB fragments build the oracles), counts
+via higher-order array functions; q44/q66 keep the window ``lead`` form
+over exploded tokens.
 Everything stays inside whole-stage codegen; the only shuffles are the
 final small-key aggregations (and posexplode fan-out for n-grams, which
 is a narrow op).
@@ -11,11 +13,18 @@ is a narrow op).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import state
-from ..functions.grams import tokens
+from ..functions.grams import (
+    normalized,
+    normalized_md5_sql,
+    tokens,
+    tokens_sql,
+    word_ngrams,
+    word_ngrams_sql,
+)
 from ..functions.rounding import eround
 from ..sources.tables import load_table
 
@@ -29,23 +38,6 @@ _LANG_MARKERS: dict[str, list[str]] = {
     "fr": ["le", "la", "les"],
     "zh": ["的", "了", "是"],
 }
-
-
-def _bigram_array(arr_col: str = "arr"):
-    """Positional (non-distinct) word bigrams of a token-array column —
-    shared by the repetition signals (q106) and the LM perplexity proxy
-    (q109); mirrors DuckDB's list_transform(range(1, len(arr)), ...)."""
-    return F.when(
-        F.size(arr_col) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr_col) - 1),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(F.col(arr_col), i.cast("int")),
-                F.element_at(F.col(arr_col), (i + 1).cast("int")),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 # --- q40: token counting (north star "token counting").
@@ -137,9 +129,8 @@ def q42_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash on the map side, one shuffle on the 128-bit key.
 def q43_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), F.lit(r"\s+"), F.lit(" "))
     return (
-        docs.select(F.md5(norm).alias("fingerprint"))
+        docs.select(F.md5(normalized("text")).alias("fingerprint"))
         .groupBy("fingerprint")
         .agg(F.count("*").alias("n_docs"))
         .agg(
@@ -320,28 +311,42 @@ def q94_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Thresholds compare per-row double divisions, which are bit-identical
 # across engines (single IEEE op on the same ints — no summation-order
 # knife edge).
-QF_MIN_TOKENS = 25  # shared with q192's stage-overlap accounting
+QF_MIN_TOKENS = 25
 QF_MIN_DISTINCT = 0.32
+
+
+def quality_signals() -> tuple[Column, Column]:
+    """(n_tokens, distinct-token ratio) of the ``text`` column — the
+    two signals the quality rule reads."""
+    toks = tokens(F.col("text"))
+    n_tokens = F.size(toks)
+    return n_tokens, F.size(F.array_distinct(toks)).cast("double") / n_tokens
+
+
+def quality_drop(n_tokens: Column, dr: Column) -> Column:
+    """The quality rule: too few tokens, or too few distinct ones."""
+    return (n_tokens < QF_MIN_TOKENS) | (dr < QF_MIN_DISTINCT)
+
+
+def quality_drop_sql(arr: str) -> str:
+    """DuckDB form of :func:`quality_drop` over the token list ``arr``."""
+    return (
+        f"(len({arr}) < {QF_MIN_TOKENS} OR CAST(len(list_distinct({arr})) "
+        f"AS DOUBLE) / len({arr}) < {QF_MIN_DISTINCT})"
+    )
 
 
 def quality_drop_expr(docs: DataFrame) -> DataFrame:
     """(doc_id, source, qdrop) — q97's drop decision as a flag frame,
     shared by q192's stage-overlap audit so the two can't drift."""
-    toks = tokens(F.col("text"))
-    n_tokens = F.size(toks)
-    dr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
     return docs.select(
-        "doc_id",
-        "source",
-        ((n_tokens < QF_MIN_TOKENS) | (dr < QF_MIN_DISTINCT)).alias("qdrop"),
+        "doc_id", "source", quality_drop(*quality_signals()).alias("qdrop")
     )
 
 
 def q97_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    n_tokens = F.size(toks)
-    dr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
+    n_tokens, dr = quality_signals()
     per_doc = docs.select("doc_id", n_tokens.alias("n_tokens"), dr.alias("dr"))
     reason = (
         F.when(F.col("n_tokens") < QF_MIN_TOKENS, "too_short")
@@ -354,25 +359,28 @@ def q97_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q97_ORACLE = """
-    WITH t AS (
-      SELECT doc_id,
-             len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens,
-             CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS DOUBLE)
-               / len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS dr
-      FROM documents
-    )
+_Q97_ORACLE = f"""
+    WITH t AS (SELECT doc_id, {tokens_sql()} AS arr FROM documents)
     SELECT doc_id,
-           (CASE WHEN n_tokens < 25 THEN 'too_short'
-                 WHEN dr < 0.32 THEN 'low_diversity' END) AS reason
+           (CASE WHEN len(arr) < {QF_MIN_TOKENS} THEN 'too_short'
+                 ELSE 'low_diversity' END) AS reason
     FROM t
-    WHERE n_tokens < 25 OR dr < 0.32
+    WHERE {quality_drop_sql('arr')}
     ORDER BY doc_id
 """
 
 
 # --- q96: deterministic train/val/test split — hash-of-key bucketing,
 # the reproducible alternative to random sampling for dataset assembly.
+def split_case(bucket: str) -> str:
+    """The 80/10/10 train/val/test split of a u16 ``bucket`` SQL
+    expression; Spark and DuckDB run this text verbatim."""
+    return (
+        f"(CASE WHEN {bucket} % 10 < 8 THEN 'train' "
+        f"WHEN {bucket} % 10 = 8 THEN 'val' ELSE 'test' END)"
+    )
+
+
 def q96_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """80/10/10 split assigned by counter-mode md5 over doc_id — stable
     under any partitioning, re-runs, engine, or data order (a random()
@@ -383,12 +391,8 @@ def q96_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bucket = expand_u16(hash_u16("CAST(doc_id AS STRING)", "split"), "spark")
     docs = load_table(spark, sf_dir, "documents")
-    split = (
-        f"(CASE WHEN {bucket} % 10 < 8 THEN 'train' "
-        f"WHEN {bucket} % 10 = 8 THEN 'val' ELSE 'test' END)"
-    )
     return (
-        docs.selectExpr(f"{split} AS split", "lang")
+        docs.selectExpr(f"{split_case(bucket)} AS split", "lang")
         .groupBy("split", "lang")
         .agg(F.count("*").alias("n_docs"))
         .orderBy("split", "lang")
@@ -400,9 +404,7 @@ def _q96_oracle() -> str:
 
     bucket = expand_u16(hash_u16("CAST(doc_id AS STRING)", "split"), "duckdb")
     return f"""
-        SELECT (CASE WHEN {bucket} % 10 < 8 THEN 'train'
-                     WHEN {bucket} % 10 = 8 THEN 'val' ELSE 'test' END) AS split,
-               lang, count(*) AS n_docs
+        SELECT {split_case(bucket)} AS split, lang, count(*) AS n_docs
         FROM documents GROUP BY 1, 2 ORDER BY split, lang
     """
 
@@ -419,26 +421,19 @@ def q102_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.xsql import expand_u16, hash_u16
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    n_tokens = F.size(toks)
-    dr = F.size(F.array_distinct(toks)).cast("double") / n_tokens
+    n_tokens, dr = quality_signals()
     kept = docs.select("doc_id", "lang", "n_chars", "text",
                        n_tokens.alias("n_tokens"), dr.alias("dr")).filter(
-        ~((F.col("n_tokens") < 25) | (F.col("dr") < 0.32))
+        ~quality_drop(F.col("n_tokens"), F.col("dr"))
     )
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    w = Window.partitionBy(F.md5(norm)).orderBy("doc_id")
+    w = Window.partitionBy(F.md5(normalized("text"))).orderBy("doc_id")
     uniq = (
         kept.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
     )
     bucket = expand_u16(hash_u16("CAST(doc_id AS STRING)", "split"), "spark")
-    split = (
-        f"(CASE WHEN {bucket} % 10 < 8 THEN 'train' "
-        f"WHEN {bucket} % 10 = 8 THEN 'val' ELSE 'test' END)"
-    )
     return (
-        uniq.selectExpr(f"{split} AS split", "n_chars")
+        uniq.selectExpr(f"{split_case(bucket)} AS split", "n_chars")
         .groupBy("split")
         .agg(
             F.count("*").alias("n_docs"),
@@ -455,24 +450,18 @@ def _q102_oracle() -> str:
     bucket = expand_u16(hash_u16("CAST(doc_id AS STRING)", "split"), "duckdb")
     return f"""
         WITH sig AS (
-          SELECT doc_id, lang, n_chars,
-                 md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS h,
-                 len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens,
-                 CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS DOUBLE)
-                   / len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS dr
+          SELECT doc_id, lang, n_chars, {normalized_md5_sql()} AS h,
+                 {tokens_sql()} AS arr
           FROM documents
         ),
-        kept AS (
-          SELECT * FROM sig WHERE NOT (n_tokens < 25 OR dr < 0.32)
-        ),
+        kept AS (SELECT * FROM sig WHERE NOT {quality_drop_sql('arr')}),
         uniq AS (
           SELECT * FROM (
             SELECT *, row_number() OVER (PARTITION BY h ORDER BY doc_id) AS rn
             FROM kept
           ) WHERE rn = 1
         )
-        SELECT (CASE WHEN {bucket} % 10 < 8 THEN 'train'
-                     WHEN {bucket} % 10 = 8 THEN 'val' ELSE 'test' END) AS split,
+        SELECT {split_case(bucket)} AS split,
                count(*) AS n_docs,
                CAST(sum(n_chars) AS BIGINT) AS total_chars,
                round(1e-9 + avg(n_chars), 4) AS avg_chars
@@ -504,21 +493,10 @@ def distinct_ngrams(docs: DataFrame, n: int = DECON_N) -> DataFrame:
 
     docs = fan_out_scan(docs.sparkSession, docs)
     arr = tokens(F.col("text"))
-    grams_arr = F.when(
-        F.size("arr") >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size("arr") - (n - 1)),
-            lambda i: F.concat_ws(
-                " ",
-                *[
-                    F.element_at(F.col("arr"), (i + j).cast("int"))
-                    for j in range(n)
-                ],
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return docs.select("doc_id", "source", arr.alias("arr")).select(
-        "doc_id", "source", F.explode(F.array_distinct(grams_arr)).alias("g")
+        "doc_id",
+        "source",
+        F.explode(F.array_distinct(word_ngrams("arr", n))).alias("g"),
     )
 
 
@@ -572,15 +550,12 @@ def q105_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q105_ORACLE = f"""
     WITH toks AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     grams AS (
       SELECT doc_id, source,
-             unnest(list_distinct(list_transform(
-               range(1, len(arr) - {DECON_N - 2}),
-               i -> concat_ws(' ', {", ".join(f"arr[i+{j}]" if j else "arr[i]" for j in range(DECON_N))})
-             ))) AS g
+             unnest(list_distinct({word_ngrams_sql('arr', DECON_N)})) AS g
       FROM toks WHERE len(arr) >= {DECON_N}
     ),
     bench AS (
@@ -642,7 +617,7 @@ def repetition_doc_signals(docs: DataFrame) -> DataFrame:
     )
     top_tok = tokc.groupBy("doc_id").agg(F.max("c").alias("top_tok"))
     bgc = (
-        base.select("doc_id", F.explode(_bigram_array()).alias("bg"))
+        base.select("doc_id", F.explode(word_ngrams("arr", 2)).alias("bg"))
         .groupBy("doc_id", "bg")
         .agg(F.count("*").alias("c"))
     )
@@ -688,7 +663,7 @@ def q106_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q106_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     st AS (
@@ -703,8 +678,7 @@ _Q106_ORACLE = f"""
     top_tok AS (SELECT doc_id, max(c) AS top_tok FROM tokc GROUP BY 1),
     bg AS (
       SELECT doc_id,
-             unnest(list_transform(range(1, len(arr)),
-                                   i -> concat_ws(' ', arr[i], arr[i+1]))) AS b
+             unnest({word_ngrams_sql('arr', 2)}) AS b
       FROM base WHERE len(arr) >= 2
     ),
     bgc AS (SELECT doc_id, b, count(*) AS c FROM bg GROUP BY 1, 2),
@@ -755,7 +729,7 @@ def doc_perplexity(docs: DataFrame) -> DataFrame:
         "doc_id", "source", tokens(F.col("text")).alias("arr")
     )
     bg = base.select(
-        "doc_id", "source", F.explode(_bigram_array()).alias("bg")
+        "doc_id", "source", F.explode(word_ngrams("arr", 2)).alias("bg")
     )
     c12 = bg.groupBy("bg").agg(F.count("*").alias("c12"))
     c1 = (
@@ -796,13 +770,12 @@ def q109_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PPL_PER_DOC_SQL = f"""base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     bg AS (
       SELECT doc_id, source,
-             unnest(list_transform(range(1, len(arr)),
-                                   i -> concat_ws(' ', arr[i], arr[i+1]))) AS bg
+             unnest({word_ngrams_sql('arr', 2)}) AS bg
       FROM base WHERE len(arr) >= 2
     ),
     c12 AS (SELECT bg, count(*) AS c12 FROM bg GROUP BY bg),
@@ -856,7 +829,7 @@ def bigram_lm_export(docs: DataFrame, k: int = LM_TOP_K) -> DataFrame:
     from .relational import ranked_topk
 
     base = docs.select(tokens(F.col("text")).alias("arr"))
-    bg = base.select(F.explode(_bigram_array()).alias("bg"))
+    bg = base.select(F.explode(word_ngrams("arr", 2)).alias("bg"))
     c12 = bg.groupBy("bg").agg(F.count("*").alias("c12"))
     c1 = (
         bg.select(F.split("bg", " ").getItem(0).alias("w1"))
@@ -892,12 +865,11 @@ def q149_bigram_lm_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q149_ORACLE = f"""
     WITH base AS (
-      SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+      SELECT {tokens_sql()} AS arr
       FROM documents
     ),
     bg AS (
-      SELECT unnest(list_transform(range(1, len(arr)),
-                                   i -> concat_ws(' ', arr[i], arr[i+1])))
+      SELECT unnest({word_ngrams_sql('arr', 2)})
                AS bg
       FROM base WHERE len(arr) >= 2
     ),
@@ -1036,10 +1008,10 @@ def q121_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-_Q121_ORACLE = """
+_Q121_ORACLE = f"""
     WITH toks AS (
       SELECT source,
-             unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+             unnest({tokens_sql()}) AS token
       FROM documents
     ),
     st AS (
@@ -1092,21 +1064,10 @@ def _dsir_grams(docs: DataFrame) -> DataFrame:
 
     docs = fan_out_scan(docs.sparkSession, docs)
     arr = tokens(F.col("text"))
-    bi = F.when(
-        F.size("arr") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("arr") - 1),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(F.col("arr"), i.cast("int")),
-                F.element_at(F.col("arr"), (i + 1).cast("int")),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return docs.select("doc_id", "source", arr.alias("arr")).select(
         "doc_id",
         "source",
-        F.explode(F.concat(F.col("arr"), bi)).alias("g"),
+        F.explode(F.concat(F.col("arr"), word_ngrams("arr", 2))).alias("g"),
     )
 
 
@@ -1172,26 +1133,24 @@ def q126_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_weights(load_table(spark, sf_dir, "documents"))
 
 
-_Q126_ORACLE_TEMPLATE = """
+def _q126_oracle() -> str:
+    from ..functions.xsql import expand_u16, hash_u16
+
+    u16 = expand_u16(hash_u16("g", "dsir"), "duckdb")
+    return f"""
     WITH toks AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     grams AS (
       SELECT doc_id, source,
-             unnest(list_concat(
-               arr,
-               CASE WHEN len(arr) >= 2 THEN list_transform(
-                 range(1, len(arr)),
-                 i -> arr[i] || ' ' || arr[i + 1]
-               ) ELSE [] END
-             )) AS g
+             unnest(list_concat(arr, {word_ngrams_sql('arr', 2)})) AS g
       FROM toks
     ),
     hashed AS (
-      SELECT doc_id, source, ({U16}) % {B} AS b,
-             source = '{BENCH}' AS is_t
+      SELECT doc_id, source, ({u16}) % {DSIR_BUCKETS} AS b,
+             source = '{DECON_BENCH_SOURCE}' AS is_t
       FROM grams
     ),
     counts AS (
@@ -1203,8 +1162,8 @@ _Q126_ORACLE_TEMPLATE = """
     tot AS (SELECT sum(n_t) AS tot_t, sum(n_r) AS tot_r FROM counts),
     llr AS (
       SELECT b,
-             ln(CAST(n_t + 1 AS DOUBLE)) - ln(CAST(tot_t + {B} AS DOUBLE))
-             - ln(CAST(n_r + 1 AS DOUBLE)) + ln(CAST(tot_r + {B} AS DOUBLE))
+             ln(CAST(n_t + 1 AS DOUBLE)) - ln(CAST(tot_t + {DSIR_BUCKETS} AS DOUBLE))
+             - ln(CAST(n_r + 1 AS DOUBLE)) + ln(CAST(tot_r + {DSIR_BUCKETS} AS DOUBLE))
                AS llr
       FROM counts CROSS JOIN tot
     ),
@@ -1218,7 +1177,7 @@ _Q126_ORACLE_TEMPLATE = """
     SELECT doc_id, source, n_grams, log_weight
     FROM scored
     ORDER BY log_weight DESC, doc_id ASC
-    LIMIT {K}
+    LIMIT {DSIR_TOP_K}
 """
 
 
@@ -1235,22 +1194,6 @@ _Q126_ORACLE_TEMPLATE = """
 # not a corpus-sized one — at 100 TB the distinct-word table is the
 # classic Zipf-bounded skeleton that BPE training actually runs on.
 BPE_MERGES = 3
-
-
-def _sym_pairs(ws_col):
-    """Adjacent symbol pairs of a space-joined symbol string."""
-    arr = F.split(ws_col, " ")
-    return F.when(
-        F.size(arr) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr) - 1),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(arr, i.cast("int")),
-                F.element_at(arr, (i + 1).cast("int")),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def _bpe_stages(
@@ -1280,7 +1223,9 @@ def _bpe_stages(
     rules = []
     for rank in range(1, n_merges + 1):
         counts = (
-            words.select(F.explode(_sym_pairs(F.col("ws"))).alias("p"), "n")
+            words.select(
+                F.explode(word_ngrams(F.split(F.col("ws"), " "), 2)).alias("p"), "n"
+            )
             .groupBy("p")
             .agg(F.sum("n").alias("cnt"))
         )
@@ -1612,12 +1557,12 @@ def q141_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bpe_oracle_ctes() -> str:
     """The words0..wordsN + top1..topN CTE chain shared by the q128
     (rules) and q129 (compression curve) oracles."""
-    body = """
+    body = f"""
     WITH words0 AS MATERIALIZED (
       SELECT trim(regexp_replace(w, '(.)', '\\1 ', 'g')) AS ws,
              count(*) AS n
       FROM (
-        SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
+        SELECT unnest({tokens_sql()}) AS w
         FROM documents
       ) WHERE len(w) > 0
       GROUP BY 1
@@ -1626,10 +1571,9 @@ def _bpe_oracle_ctes() -> str:
         prev = f"words{rank - 1}"
         body += f""",
     pairs{rank} AS MATERIALIZED (
-      SELECT concat_ws(' ', arr[i], arr[i + 1]) AS p, sum(n) AS cnt
+      SELECT p, sum(n) AS cnt
       FROM (
-        SELECT string_split(ws, ' ') AS arr, n,
-               unnest(range(1, len(string_split(ws, ' ')))) AS i
+        SELECT unnest({word_ngrams_sql("string_split(ws, ' ')", 2)}) AS p, n
         FROM {prev}
       )
       GROUP BY 1
@@ -1717,9 +1661,9 @@ def _q137_oracle() -> str:
       SELECT doc_id, i AS wpos, arr[i] AS w
       FROM (
         SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS arr,
+               {tokens_sql()} AS arr,
                unnest(range(1,
-                 len(regexp_split_to_array(lower(trim(text)), '\\s+')) + 1))
+                 len({tokens_sql()}) + 1))
                  AS i
         FROM documents WHERE doc_id % {ENC_DOC_MOD} = 0
       ) WHERE len(arr[i]) > 0
@@ -1766,7 +1710,7 @@ def corpus_diversity(docs: DataFrame) -> DataFrame:
         F.sum("cnt").alias("n_unigrams"),
     )
     bi = (
-        base.select("source", F.explode(_bigram_array("arr")).alias("g"))
+        base.select("source", F.explode(word_ngrams("arr", 2)).alias("g"))
         .groupBy("source", "g")
         .agg(F.count("*").alias("cnt"))
     )
@@ -1927,23 +1871,7 @@ def _pos_ngrams(docs: DataFrame, n: int = DECON_N) -> DataFrame:
     arr = tokens(F.col("text"))
     base = docs.select("doc_id", "source", arr.alias("arr"))
     return base.select(
-        "doc_id",
-        "source",
-        F.posexplode(
-            F.when(
-                F.size("arr") >= n,
-                F.transform(
-                    F.sequence(F.lit(1), F.size("arr") - (n - 1)),
-                    lambda i: F.concat_ws(
-                        " ",
-                        *[
-                            F.element_at(F.col("arr"), (i + j).cast("int"))
-                            for j in range(n)
-                        ],
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("pos0", "g"),
+        "doc_id", "source", F.posexplode(word_ngrams("arr", n)).alias("pos0", "g")
     ).select(
         "doc_id", "source", (F.col("pos0") + 1).alias("pos"), "g"
     )
@@ -2106,16 +2034,13 @@ def decon_strip_batch(
 _Q160_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     pgrams AS (
       SELECT doc_id, source,
              unnest(range(1, len(arr) - {DECON_N - 2})) AS pos,
-             unnest(list_transform(
-               range(1, len(arr) - {DECON_N - 2}),
-               i -> array_to_string(arr[i:i + {DECON_N - 1}], ' ')
-             )) AS g
+             unnest({word_ngrams_sql('arr', DECON_N)}) AS g
       FROM base WHERE len(arr) >= {DECON_N}
     ),
     bench AS (
@@ -2153,15 +2078,12 @@ _Q160_ORACLE = f"""
 _BP_CLEAN_CTES = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     grams AS (
       SELECT DISTINCT doc_id, source,
-             unnest(list_transform(
-               range(1, len(arr) - {DECON_N - 2}),
-               i -> array_to_string(arr[i:i + {DECON_N - 1}], ' ')
-             )) AS g
+             unnest({word_ngrams_sql('arr', DECON_N)}) AS g
       FROM base WHERE len(arr) >= {DECON_N}
     ),
     nd AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
@@ -2174,10 +2096,7 @@ _BP_CLEAN_CTES = f"""
     pgrams AS (
       SELECT doc_id, source,
              unnest(range(1, len(arr) - {DECON_N - 2})) AS pos,
-             unnest(list_transform(
-               range(1, len(arr) - {DECON_N - 2}),
-               i -> array_to_string(arr[i:i + {DECON_N - 1}], ' ')
-             )) AS g
+             unnest({word_ngrams_sql('arr', DECON_N)}) AS g
       FROM base WHERE len(arr) >= {DECON_N}
     ),
     covered AS (
@@ -2242,15 +2161,12 @@ _Q156_ORACLE = (
 _Q147_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     grams AS (
       SELECT DISTINCT doc_id, source,
-             unnest(list_transform(
-               range(1, len(arr) - {DECON_N - 2}),
-               i -> array_to_string(arr[i:i + {DECON_N - 1}], ' ')
-             )) AS g
+             unnest({word_ngrams_sql('arr', DECON_N)}) AS g
       FROM base WHERE len(arr) >= {DECON_N}
     ),
     nd AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY 1),
@@ -2288,10 +2204,10 @@ _Q147_ORACLE = f"""
 """
 
 
-_Q143_ORACLE = """
+_Q143_ORACLE = f"""
     WITH base AS (
       SELECT source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     uni AS (
@@ -2308,8 +2224,7 @@ _Q143_ORACLE = """
       SELECT source, g, count(*) AS cnt
       FROM (
         SELECT source,
-               unnest(list_transform(range(1, len(arr)),
-                      i -> concat_ws(' ', arr[i], arr[i+1]))) AS g
+               unnest({word_ngrams_sql('arr', 2)}) AS g
         FROM base WHERE len(arr) >= 2
       ) GROUP BY 1, 2
     ),
@@ -2341,7 +2256,7 @@ def _q141_oracle() -> str:
       SELECT lang, w, count(*) AS cnt
       FROM (
         SELECT lang,
-               unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS w
+               unnest({tokens_sql()}) AS w
         FROM documents
       ) WHERE len(w) > 0
       GROUP BY 1, 2
@@ -2356,17 +2271,6 @@ def _q141_oracle() -> str:
              AS chars_per_token
     FROM lwc JOIN wordmap USING (w)
     GROUP BY lang ORDER BY lang"""
-    )
-
-
-def _q126_oracle() -> str:
-    from ..functions.xsql import expand_u16, hash_u16
-
-    return _Q126_ORACLE_TEMPLATE.format(
-        U16=expand_u16(hash_u16("g", "dsir"), "duckdb"),
-        B=DSIR_BUCKETS,
-        BENCH=DECON_BENCH_SOURCE,
-        K=DSIR_TOP_K,
     )
 
 
@@ -2416,7 +2320,7 @@ def bm25_stats(docs: DataFrame):
     (q172's cross-source decontamination) without a join-back."""
     toks = docs.select(
         "doc_id", "source", tokens(F.col("text")).alias("arr")
-    ).select("doc_id", "source", F.explode(_bigram_array()).alias("token"))
+    ).select("doc_id", "source", F.explode(word_ngrams("arr", 2)).alias("token"))
     tf = toks.groupBy("doc_id", "source", "token").agg(
         F.count("*").alias("cnt")
     )
@@ -2684,7 +2588,7 @@ def bm25_from_index(
     dfreq = spark.read.parquet(f"{index_dir}/dfreq")
     qtoks = new_docs.select(
         F.col("doc_id").alias("query_id"), tokens(F.col("text")).alias("arr")
-    ).select("query_id", F.explode(_bigram_array()).alias("token"))
+    ).select("query_id", F.explode(word_ngrams("arr", 2)).alias("token"))
     qtf = qtoks.groupBy("query_id", "token").agg(F.count("*").alias("cnt"))
     return bm25_topk(bm25_query_terms(qtf, dfreq, stats), tf, dlen)
 
@@ -2744,13 +2648,12 @@ def q172_retrieval_decon(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q164_ORACLE = f"""
     WITH arrs AS (
       SELECT doc_id,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     toks AS MATERIALIZED (
       SELECT doc_id,
-             unnest(list_transform(range(1, len(arr)),
-                                   i -> concat_ws(' ', arr[i], arr[i+1])))
+             unnest({word_ngrams_sql('arr', 2)})
                AS token
       FROM arrs
     ),
@@ -2823,15 +2726,12 @@ _Q164_ORACLE = f"""
 def q169_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
-    norm = F.regexp_replace(
-        F.lower(F.trim(F.col("text"))), F.lit(r"\s+"), F.lit(" ")
-    )
     base = docs.select(
         "source",
         "lang",
         F.size(toks).alias("n_tok"),
         (F.size(F.array_distinct(toks)) / F.size(toks)).alias("ttr"),
-        F.md5(norm).alias("h"),
+        F.md5(normalized("text")).alias("h"),
     )
     per_src = base.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -2885,16 +2785,14 @@ def q169_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_Q169_ORACLE = """
+_Q169_ORACLE = f"""
     WITH base AS (
       SELECT source, lang,
-             len(regexp_split_to_array(lower(trim(text)), '\\s+'))
+             len({tokens_sql()})
                AS n_tok,
-             len(list_distinct(regexp_split_to_array(
-               lower(trim(text)), '\\s+')))
-               / CAST(len(regexp_split_to_array(
-                   lower(trim(text)), '\\s+')) AS DOUBLE) AS ttr,
-             md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS h
+             len(list_distinct({tokens_sql()}))
+               / CAST(len({tokens_sql()}) AS DOUBLE) AS ttr,
+             {normalized_md5_sql()} AS h
       FROM documents
     ),
     per_src AS (
@@ -2935,13 +2833,12 @@ _Q169_ORACLE = """
 _Q172_ORACLE = f"""
     WITH arrs AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     toks AS MATERIALIZED (
       SELECT doc_id, source,
-             unnest(list_transform(range(1, len(arr)),
-                                   i -> concat_ws(' ', arr[i], arr[i+1])))
+             unnest({word_ngrams_sql('arr', 2)})
                AS token
       FROM arrs
     ),
@@ -3107,13 +3004,12 @@ def _q178_oracle() -> str:
     ),
     arrs AS (
       SELECT doc_id,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     toks AS MATERIALIZED (
       SELECT doc_id,
-             unnest(list_transform(range(1, len(arr)),
-                                   i -> concat_ws(' ', arr[i], arr[i+1])))
+             unnest({word_ngrams_sql('arr', 2)})
                AS token
       FROM arrs
     ),
@@ -3377,7 +3273,7 @@ def _q179_oracle() -> str:
     return f"""
     WITH t AS (
       SELECT doc_id, source, lang,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr,
+             {tokens_sql()} AS arr,
              length(replace(lower(trim(text)), ' ', '')) AS nsl
       FROM documents
     ),
@@ -3540,8 +3436,8 @@ def q190_calibrated_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q190_ORACLE = f"""
     WITH per_doc AS (
       SELECT source,
-             CAST(len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS DOUBLE)
-               / len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS score
+             CAST(len(list_distinct({tokens_sql()})) AS DOUBLE)
+               / len({tokens_sql()}) AS score
       FROM documents
     ),
     loc AS (
@@ -3812,7 +3708,7 @@ def q186_source_keyness(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q186_ORACLE = f"""
     WITH toks AS (
       SELECT source,
-             unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+             unnest({tokens_sql()}) AS token
       FROM documents
     ),
     st AS (SELECT source, token, count(*) AS a FROM toks GROUP BY 1, 2),
@@ -3926,7 +3822,7 @@ def q206_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q206_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     counts AS (
@@ -3987,20 +3883,7 @@ def q207_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         ntile_k=HEAPS_TILES,
         ntile_name="tile",
     ).select("doc_id", "n_toks", F.col("tile").cast("long").alias("tile"))
-    tg = base.filter(F.size("arr") >= 3).select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("arr") - 2),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.element_at("arr", i),
-                    F.element_at("arr", i + 1),
-                    F.element_at("arr", i + 2),
-                ),
-            )
-        ).alias("g"),
-    )
+    tg = base.select("doc_id", F.explode(word_ngrams("arr", 3)).alias("g"))
     first = tg.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     newv = (
         first.join(
@@ -4047,7 +3930,7 @@ def q207_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q207_ORACLE = f"""
     WITH base AS (
       SELECT doc_id,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     docs AS (
@@ -4058,8 +3941,7 @@ _Q207_ORACLE = f"""
     ),
     tg AS (
       SELECT doc_id,
-             unnest(list_transform(range(1, len(arr) - 1),
-               i -> concat_ws(' ', arr[i], arr[i+1], arr[i+2]))) AS g
+             unnest({word_ngrams_sql('arr', 3)}) AS g
       FROM base WHERE len(arr) >= 3
     ),
     tok_first AS (SELECT g, min(doc_id) AS first_doc FROM tg GROUP BY g),
@@ -4115,7 +3997,7 @@ def q209_span_lm_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", tokens(F.col("text")).alias("arr")
     )
     bgp = base.filter(F.size("arr") >= 2).select(
-        "doc_id", "source", F.posexplode(_bigram_array()).alias("pos", "bg")
+        "doc_id", "source", F.posexplode(word_ngrams("arr", 2)).alias("pos", "bg")
     )
     c12 = bgp.groupBy("bg").agg(F.count("*").alias("c12"))
     c1 = (
@@ -4170,13 +4052,12 @@ def q209_span_lm_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q209_ORACLE = f"""
     WITH base AS (
       SELECT doc_id, source,
-             regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+             {tokens_sql()} AS arr
       FROM documents
     ),
     bgl AS (
       SELECT doc_id, source,
-             list_transform(range(1, len(arr)),
-                            i -> concat_ws(' ', arr[i], arr[i+1])) AS bgs
+             {word_ngrams_sql('arr', 2)} AS bgs
       FROM base WHERE len(arr) >= 2
     ),
     bgp0 AS (
@@ -4255,7 +4136,7 @@ def q210_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = base.select(F.explode("arr").alias("t"))
     c1 = tok.groupBy("t").agg(F.count("*").alias("c"))
     n_tok = tok.agg(F.count("*").alias("n"))
-    bg = base.select(F.explode(_bigram_array()).alias("bg"))
+    bg = base.select(F.explode(word_ngrams("arr", 2)).alias("bg"))
     c12 = bg.groupBy("bg").agg(F.count("*").alias("c12"))
     m_bg = bg.agg(F.count("*").alias("m"))
     cand = (
@@ -4294,15 +4175,14 @@ def q210_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q210_ORACLE = f"""
     WITH base AS (
-      SELECT regexp_split_to_array(lower(trim(text)), '\\s+') AS arr
+      SELECT {tokens_sql()} AS arr
       FROM documents
     ),
     tok AS (SELECT unnest(arr) AS t FROM base),
     c1 AS (SELECT t, count(*) AS c FROM tok GROUP BY 1),
     ntok AS (SELECT count(*) AS n FROM tok),
     bg AS (
-      SELECT unnest(list_transform(range(1, len(arr)),
-               i -> concat_ws(' ', arr[i], arr[i+1]))) AS bg
+      SELECT unnest({word_ngrams_sql('arr', 2)}) AS bg
       FROM base WHERE len(arr) >= 2
     ),
     c12 AS (SELECT bg, count(*) AS c12 FROM bg GROUP BY 1),
@@ -4453,10 +4333,10 @@ ORACLES = {
     "q155_boilerplate_clean": _Q155_ORACLE,
     "q156_boilerplate_clean_stats": _Q156_ORACLE,
     "q160_decontaminate_strip": _Q160_ORACLE,
-    "q67_tfidf_top_terms": """
+    "q67_tfidf_top_terms": f"""
         WITH toks AS (
           SELECT doc_id,
-                 unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token
+                 unnest({tokens_sql()}) AS token
           FROM documents
         ),
         tf AS (SELECT doc_id, token, count(*) AS cnt FROM toks GROUP BY doc_id, token),
@@ -4485,7 +4365,7 @@ ORACLES = {
         WITH t AS (
           SELECT lang,
                  len(regexp_extract_all(lower(text), '{BPE_PATTERN.replace("'", "''")}')) AS bpe_tokens,
-                 len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS ws_tokens
+                 len({tokens_sql()}) AS ws_tokens
           FROM documents
         )
         SELECT lang, count(*) AS n_docs,
@@ -4494,13 +4374,13 @@ ORACLES = {
                round(1e-9 + avg(CAST(bpe_tokens AS DOUBLE) / ws_tokens), 4) AS avg_bpe_per_word
         FROM t GROUP BY lang ORDER BY lang
     """,
-    "q66_winnowing_fingerprints": """
+    "q66_winnowing_fingerprints": f"""
         WITH toks AS (
           SELECT doc_id, lang, u.token, u.pos
           FROM documents,
                LATERAL (
-                 SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token,
-                        generate_subscripts(regexp_split_to_array(lower(trim(text)), '\\s+'), 1) AS pos
+                 SELECT unnest({tokens_sql()}) AS token,
+                        generate_subscripts({tokens_sql()}, 1) AS pos
                ) u
         ), tri AS (
           SELECT doc_id, lang, pos,
@@ -4524,9 +4404,9 @@ ORACLES = {
                round(1e-9 + avg(n_fps), 4) AS avg_fps
         FROM per_doc GROUP BY lang ORDER BY lang
     """,
-    "q40_token_stats": """
+    "q40_token_stats": f"""
         WITH t AS (
-          SELECT lang, len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens,
+          SELECT lang, len({tokens_sql()}) AS n_tokens,
                  n_chars
           FROM documents
         )
@@ -4539,11 +4419,11 @@ ORACLES = {
         FROM t GROUP BY lang ORDER BY lang
     """,
     "q41_lang_id": _lang_id_oracle(),
-    "q42_quality_by_source": """
+    "q42_quality_by_source": f"""
         WITH t AS (
           SELECT source,
-                 len(regexp_split_to_array(lower(trim(text)), '\\s+')) AS n_tokens,
-                 len(list_distinct(regexp_split_to_array(lower(trim(text)), '\\s+'))) AS n_distinct,
+                 len({tokens_sql()}) AS n_tokens,
+                 len(list_distinct({tokens_sql()})) AS n_distinct,
                  length(replace(lower(trim(text)), ' ', '')) AS nospace_len
           FROM documents
         )
@@ -4553,9 +4433,9 @@ ORACLES = {
                round(1e-9 + avg(CAST(nospace_len AS DOUBLE) / n_tokens), 4) AS avg_token_len
         FROM t GROUP BY source ORDER BY source
     """,
-    "q43_fingerprints": """
+    "q43_fingerprints": f"""
         WITH fp AS (
-          SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint
+          SELECT {normalized_md5_sql()} AS fingerprint
           FROM documents
         ), grp AS (
           SELECT fingerprint, count(*) AS n_docs FROM fp GROUP BY fingerprint
@@ -4565,13 +4445,13 @@ ORACLES = {
                max(n_docs) AS largest_group
         FROM grp
     """,
-    "q44_trigram_stats": """
+    "q44_trigram_stats": f"""
         WITH toks AS (
           SELECT doc_id, lang, u.token, u.pos
           FROM documents,
                LATERAL (
-                 SELECT unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS token,
-                        generate_subscripts(regexp_split_to_array(lower(trim(text)), '\\s+'), 1) AS pos
+                 SELECT unnest({tokens_sql()}) AS token,
+                        generate_subscripts({tokens_sql()}, 1) AS pos
                ) u
         ), tri AS (
           SELECT doc_id, lang,

@@ -90,18 +90,26 @@ def test_is_placeholder_dialects_agree(spark):
     assert got["xxx"] and got["REDACTED_7"] and got["a sample value"]
     assert not got["4111 1111 1111 1111"] and not got["123-45-6789"]
 
-def test_text_audit_ops_match_duckdb_on_random_corpora(spark):
+def test_text_audit_ops_match_duckdb_on_random_corpora(spark, tmp_path):
     """Randomized-corpus parity for the round-9 text audits (fertility
-    q141, corpus diversity q143, boilerplate q147): seeded random docs
-    with duplicate texts, shared footers, messy whitespace, mixed case
-    and empty strings must hash-match the DuckDB oracles — the same
-    comparison the driver gate runs, on corpora it never generates."""
+    q141, corpus diversity q143, boilerplate q147) and for the shared
+    word features (functions/grams.py) behind the quality rule (q97),
+    training prep (q102), distinct n-grams and decontamination (q105)
+    and positional span grams (q134): seeded random docs with duplicate
+    texts, shared footers, messy whitespace, mixed case, docs shorter
+    than n and empty strings must hash-match the DuckDB oracles — the
+    same comparison the driver gate runs, on corpora it never
+    generates. One source is the held-out benchmark source."""
     import pandas as pd
 
+    from synthetic_data_pipeline_spark.functions.grams import (
+        tokens_sql,
+        word_ngrams_sql,
+    )
     from synthetic_data_pipeline_spark.functions.rounding import (
         apply_sql_eround,
     )
-    from synthetic_data_pipeline_spark.operators import textops
+    from synthetic_data_pipeline_spark.operators import dedup, textops
 
     rng = random.Random(20260815)
     vocab = ["aa", "bb", "cc", "dd", "ee", "zz", "Yy", "q1"]
@@ -120,7 +128,7 @@ def test_text_audit_ops_match_duckdb_on_random_corpora(spark):
                 text = ""  # empty doc
             rows.append(
                 (i, text, rng.choice(["en", "de"]),
-                 rng.choice(["s1", "s2", "s3"]),
+                 rng.choice([textops.DECON_BENCH_SOURCE, "s2", "s3"]),
                  len(text))
             )
         return pd.DataFrame(
@@ -129,23 +137,45 @@ def test_text_audit_ops_match_duckdb_on_random_corpora(spark):
 
     from scripts.driver_sim import canon
 
+    def on_docs(fn):
+        return lambda docs, sf_dir: fn(docs)
+
+    def on_dir(query):
+        return lambda docs, sf_dir: query(spark, sf_dir)
+
+    def ngrams_sql(n):
+        return (
+            f"SELECT doc_id, source, unnest(list_distinct("
+            f"{word_ngrams_sql(tokens_sql(), n)})) AS g FROM documents"
+        )
+
     cases = [
-        (textops.tokenizer_fertility, textops._q141_oracle()),
-        (textops.corpus_diversity, textops._Q143_ORACLE),
-        (textops.boilerplate_grams, textops._Q147_ORACLE),
-        (textops.boilerplate_clean, textops._Q155_ORACLE),
-        (textops.boilerplate_clean_stats, textops._Q156_ORACLE),
+        ("q141", on_docs(textops.tokenizer_fertility), textops._q141_oracle()),
+        ("q143", on_docs(textops.corpus_diversity), textops._Q143_ORACLE),
+        ("q147", on_docs(textops.boilerplate_grams), textops._Q147_ORACLE),
+        ("q155", on_docs(textops.boilerplate_clean), textops._Q155_ORACLE),
+        ("q156", on_docs(textops.boilerplate_clean_stats), textops._Q156_ORACLE),
+        ("q97", on_dir(textops.q97_quality_filter), textops._Q97_ORACLE),
+        ("q102", on_dir(textops.q102_training_prep), textops._q102_oracle()),
+        ("q105", on_dir(textops.q105_decontaminate), textops._Q105_ORACLE),
+        ("q134", on_dir(dedup.q134_longest_dup_span), dedup._Q134_ORACLE),
+    ] + [
+        (f"ngrams{n}", on_docs(lambda d, n=n: textops.distinct_ngrams(d, n)),
+         ngrams_sql(n))
+        for n in (2, 3)
     ]
     for trial in range(3):
         pdf = make_corpus(12 + 10 * trial)
         con = duckdb.connect()
         con.register("documents", pdf)
-        docs = spark.createDataFrame(pdf)
-        for fn, oracle in cases:
-            got = fn(docs).toPandas()
+        sf_dir = str(tmp_path / f"trial{trial}")
+        spark.createDataFrame(pdf).write.parquet(f"{sf_dir}/documents.parquet")
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        for name, run, oracle in cases:
+            got = run(docs, sf_dir).toPandas()
             want = con.execute(apply_sql_eround(oracle)).df()
-            assert sorted(got.columns) == sorted(want.columns), fn.__name__
-            assert canon(got) == canon(want), (fn.__name__, trial)
+            assert sorted(got.columns) == sorted(want.columns), name
+            assert canon(got) == canon(want), (name, trial)
 
 
 def test_strip_actions_match_duckdb_on_random_corpora(spark):

@@ -86,3 +86,35 @@ def test_benchmark_query_list_references_registry_names():
     names = [n for n, _ in ANALYTICS_QUERIES]
     dups = sorted({n for n in names if names.count(n) > 1})
     assert not dups, f"ANALYTICS_QUERIES duplicate entries: {dups}"
+
+
+def test_text_features_written_once():
+    """How text becomes tokens, normalized text and word n-grams is
+    decided in functions/grams.py alone (one Spark and one DuckDB form
+    of each): any other package module spelling the tokenizer, the
+    normalization or an n-gram builder is a copy that can drift.
+    Whitespace is ignored, so a copy split over lines still counts."""
+    spellings = [
+        "regexp_split_to_array(lower(trim(",  # DuckDB tokens
+        "F.split(F.lower(F.trim(",  # Spark tokens
+        "regexp_replace(lower(trim(",  # DuckDB normalized text
+        "F.regexp_replace(F.lower(F.trim(",  # Spark normalized text
+        "i -> concat_ws(",  # DuckDB n-gram lambdas
+        "i -> array_to_string(",
+        "i -> arr[i] ||",
+        "F.sequence(F.lit(1), F.size(",  # Spark n-gram index
+    ]
+    pkg = os.path.join(REPO, "synthetic_data_pipeline_spark")
+    copies = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            path = os.path.join(root, f)
+            rel = os.path.relpath(path, pkg)
+            if not f.endswith(".py") or rel == os.path.join("functions", "grams.py"):
+                continue
+            with open(path, encoding="utf-8") as fh:
+                src = re.sub(r"\s+", "", fh.read())
+            copies += [
+                (rel, s) for s in spellings if re.sub(r"\s+", "", s) in src
+            ]
+    assert not copies, f"text features spelled outside functions/grams.py: {copies}"
