@@ -16,7 +16,9 @@ reference, whose committed run fails its own validation
 The validator's regex scan is likewise written once per engine:
 on Spark the kernel scans its own text with
 ``plans/catalog.py::real_matches`` (Python ``re`` over ``SIT_PATTERNS``)
-and returns each assigned slot's matches as ``ms``; DuckDB runs one SQL
+and returns each assigned slot's matches as ``ms`` (only in
+``_rendered_sql``, the memoised frame the report, q62, q91, q98 and
+q99 read; the ``gen`` CTE leaves ``ms`` NULL); DuckDB runs one SQL
 CASE of ``regexp_extract_all`` calls (``_pairs_sql``), so the scan's
 oracle parity also compares two regex engines over two generators.
 
@@ -54,14 +56,16 @@ from ..plans.generate import (
 )
 
 
-def _kernel_ctes(cfg: GenConfig, d: dict) -> str:
+def _kernel_ctes(cfg: GenConfig, d: dict, scan: bool = False) -> str:
     """Spark's generation CTEs: ``gen`` is the kernel's output per
     document; ``docs``, ``doc_sits`` and ``vals`` read it, with the
-    shared SQL's names and columns."""
+    shared SQL's names and columns. Only ``_rendered_sql`` reads the
+    slots' ``ms``, so only it asks the kernel to ``scan``."""
     return f"""
       gen AS (
         SELECT id AS doc_id, k.format, k.word_count_target, k.text, k.slots
-        FROM (SELECT id, {kernel_call_sql(cfg)} AS k FROM range(0, {cfg.n_docs}))
+        FROM (SELECT id, {kernel_call_sql(cfg, scan)} AS k
+              FROM range(0, {cfg.n_docs}))
       ),
       docs AS (
         SELECT doc_id, format, word_count_target, size(slots) AS sit_count,
@@ -275,10 +279,11 @@ def clear_scanned_pairs_cache() -> None:
 
 
 def _rendered_sql(cfg: GenConfig) -> str:
-    """The kernel's output per document, (doc_id, format, text, slots):
-    the Spark generation query every memoised consumer reads."""
+    """The kernel's output per document, (doc_id, format, text, slots),
+    each scanned slot carrying ``ms``: the Spark generation query every
+    memoised consumer reads."""
     return (
-        f"WITH {_gen_ctes(cfg, _DIALECTS['spark'])} "
+        f"WITH {_kernel_ctes(cfg, _DIALECTS['spark'], scan=True)} "
         "SELECT doc_id, format, text, slots FROM gen"
     )
 

@@ -27,9 +27,10 @@ One specification, two implementations:
 - Spark runs ``generate_doc``, a per-document kernel, as one Arrow
   pandas UDF (``sdp_gen_doc``, registered by ``register_kernel``) over
   ``range(0, n_docs)``: each document is a few dozen md5 draws and
-  string joins, one narrow map with no exchange. The kernel also scans
-  its own text: each slot of a scanned SIT carries the validator's
-  matches (``real_matches``), so the report needs no second pass.
+  string joins, one narrow map with no exchange. Asked to (``scan``),
+  the kernel also scans its own text: each slot of a scanned SIT
+  carries the validator's matches (``real_matches``), so the report
+  needs no second pass. Consumers that drop the matches do not ask.
 - DuckDB runs the SQL builders below (``docs_sql``, ``doc_sits_sql``,
   ``sit_value_sql``, ``sit_block_sql``, ``filler_word_sql``) as the
   oracle (operators/generation.py), so oracle parity compares two
@@ -628,12 +629,13 @@ def filler_pad(doc: int, n: int) -> str:
     return " ".join(period[i % len(period)] for i in range(n))
 
 
-def generate_doc(doc_id: int, cfg: GenConfig = DEFAULT_CONFIG):
+def generate_doc(doc_id: int, cfg: GenConfig = DEFAULT_CONFIG, scan: bool = True):
     """One document, as the generation SQL derives it: ``(format,
     word_count_target, text, slots)``, each slot ``(slot, sit_id,
     label, instances, value, ms)`` in slot order, where ``ms`` is the
     slot SIT's ``real_matches`` in ``text`` (None for the unscanned TC
-    SITs). The kernel Spark runs."""
+    SITs, and for every slot when ``scan`` is false: a consumer that
+    drops ``ms`` need not pay for the scan). The kernel Spark runs."""
     fmt = cfg.formats[_u16(doc_id, "fmt") % len(cfg.formats)]
     p, (lo1, hi1), (lo2, hi2) = WORD_TARGET
     if _u16(doc_id, "wsel") / 65536.0 < p:
@@ -664,7 +666,7 @@ def generate_doc(doc_id: int, cfg: GenConfig = DEFAULT_CONFIG):
     pad = filler_pad(doc_id, max(target - len(body.split(" ")), 0))
     text = f"{head}{PARA_BREAK}{body}{PARA_BREAK}{foot} {pad}"
     slots = [
-        (*s, real_matches(s[1], text) if s[1] in SIT_PATTERNS else None)
+        (*s, real_matches(s[1], text) if scan and s[1] in SIT_PATTERNS else None)
         for s in slots
     ]
     return fmt, target, text, slots
@@ -686,24 +688,26 @@ def _struct(**fields) -> StructType:
     )),
 ))
 def _gen_doc_udf(
-    doc_id: pd.Series, tp_ratio: pd.Series, n_sits: pd.Series, formats: pd.Series
+    doc_id: pd.Series, tp_ratio: pd.Series, n_sits: pd.Series, formats: pd.Series,
+    scan: pd.Series,
 ) -> pd.DataFrame:
     return pd.DataFrame(
         [
             generate_doc(int(d), GenConfig(
                 tp_ratio=float(t), n_sits=int(n), formats=tuple(f.split(","))
-            ))
-            for d, t, n, f in zip(doc_id, tp_ratio, n_sits, formats)
+            ), bool(s))
+            for d, t, n, f, s in zip(doc_id, tp_ratio, n_sits, formats, scan)
         ],
         columns=["format", "word_count_target", "text", "slots"],
     )
 
 
-def kernel_call_sql(cfg: GenConfig, doc_id: str = "id") -> str:
-    """The SQL call of the kernel for ``cfg`` on column ``doc_id``."""
+def kernel_call_sql(cfg: GenConfig, scan: bool, doc_id: str = "id") -> str:
+    """The SQL call of the kernel for ``cfg`` on column ``doc_id``;
+    ``scan`` (a literal) says whether the slots carry ``ms``."""
     return (
         f"{KERNEL}({doc_id}, {cfg.tp_ratio!r}D, {cfg.n_sits}, "
-        f"'{','.join(cfg.formats)}')"
+        f"'{','.join(cfg.formats)}', {str(scan).lower()})"
     )
 
 

@@ -7,6 +7,13 @@ AQE (runtime coalesce + skew-join), zstd parquet, Arrow for any
 pandas-UDF edges, UTC session time, and one preloading Python worker
 daemon (``worker_daemon``): every Python worker is forked with pandas,
 pyarrow and the package's UDF modules already imported.
+
+The driver JVM also gets one JIT policy (``JIT_POLICY``): on the
+benchmark's inputs the JVM compiling its own code was most of the CPU
+(the C1/C2 compiler threads took 34 of ``analytics_mix``'s 56 set-up
+CPU s and 2.1-2.5 of a warm ``sit_pipeline`` pass's 4.4-5.3), mostly C2
+compiling methods that never grow hot. The policy raises C2's
+thresholds, so C2 compiles only the code that stays hot.
 """
 
 from __future__ import annotations
@@ -16,6 +23,20 @@ import os
 from pyspark.sql import SparkSession
 
 from .plans.generate import register_kernel
+
+# The driver JVM's JIT policy. C2 (tier 4) compiles a method once its
+# invocations, invocations + loop back-edges, or back-edges pass these
+# thresholds: 4x JDK 17's defaults of 5,000 / 15,000 / 40,000. In a
+# session that lasts seconds to minutes C2 then skips the lukewarm
+# methods, while the hot loops still reach it. The price is code that
+# stays in C1 longer: analytics_mix's set-up wall rose about 5 %
+# (pair median) while its CPU fell. 8x cut more CPU but made each
+# analytics_mix query 6-15 % slower; C1 alone (-XX:TieredStopAtLevel=1)
+# made each sit_pipeline pass 36 % slower. ROADMAP item 4 has the screen.
+JIT_POLICY = (
+    "-XX:Tier4InvocationThreshold=20000 -XX:Tier4CompileThreshold=60000 "
+    "-XX:Tier4BackEdgeThreshold=160000"
+)
 
 _DEFAULT_CONF: dict[str, str] = {
     # Adaptive execution: runtime shuffle-partition coalescing, skew-join
@@ -36,6 +57,8 @@ _DEFAULT_CONF: dict[str, str] = {
     # Python workers fork from a daemon that imported the UDF stack once
     # (Spark ignores spark.python.worker.module unless it starts "pyspark").
     "spark.python.daemon.module": f"{__package__}.worker_daemon",
+    # JVM options apply only when get_spark launches the JVM
+    "spark.driver.extraJavaOptions": JIT_POLICY,
 }
 
 
@@ -62,6 +85,13 @@ def get_spark(
     capped at 8 GB.
     ``shuffle_partitions`` defaults to the core count — on a real cluster
     you would size this to ~2-3x total cores and let AQE coalesce.
+
+    The JVM runs with ``JIT_POLICY`` (``spark.driver.extraJavaOptions``),
+    which cut the measured CPU that JIT compiling takes. Like the heap
+    size, it takes effect only when this call launches the JVM, and an
+    ``extra_conf`` that sets ``spark.driver.extraJavaOptions`` replaces
+    it. On a real cluster only the driver gets it; no workload here
+    measures executors.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"

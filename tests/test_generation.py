@@ -612,6 +612,36 @@ def test_kernel_slot_matches_are_real_matches(spark):
     assert n_scanned > 0 and n_tc > 0
 
 
+def test_gen_cte_skips_the_scan(spark):
+    """Only ``_rendered_sql`` asks the kernel to scan: ``ms`` is NULL in
+    every slot of the ``gen`` CTE (read by the sink, q60, q61 and
+    q63-q65), and no Spark generation query runs the kernel twice."""
+    from synthetic_data_pipeline_spark.operators import mapping
+    from synthetic_data_pipeline_spark.operators.generation import (
+        _corpus_stats_sql,
+        _meta_summary_sql,
+        _rendered_sql,
+    )
+    from synthetic_data_pipeline_spark.plans.generate import KERNEL
+
+    d = _DIALECTS["spark"]
+    gen = f"WITH {_gen_ctes(DEFAULT_CONFIG, d)} SELECT slots FROM gen"
+    slots = [s for r in spark.sql(gen).collect() for s in r.slots]
+    assert slots and all(s.ms is None for s in slots)
+    texts = [
+        _rendered_sql(DEFAULT_CONFIG),
+        f"WITH {_gen_ctes(DEFAULT_CONFIG, d)}, {_rendered_cte(d)} "
+        "SELECT doc_id, format, text FROM rendered",
+        _meta_summary_sql(DEFAULT_CONFIG, "spark"),
+        _corpus_stats_sql(DEFAULT_CONFIG, "spark"),
+        mapping._unpack_sql(DEFAULT_CONFIG, "spark"),
+        mapping._upsert_sql(DEFAULT_CONFIG, "spark"),
+        mapping._tcs_sql(DEFAULT_CONFIG, "spark"),
+    ]
+    for text in texts:
+        assert text.count(f"{KERNEL}(") == 1, text
+
+
 def test_scan_udf_matches_duckdb_off_ascii():
     """The Spark scan (``real_matches``) and DuckDB's ``_ms_sql`` agree
     where Unicode ``re`` would not: non-ASCII letters and digits next to
